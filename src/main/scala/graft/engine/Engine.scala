@@ -47,7 +47,8 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
   //  - doctosql's lenient coercions (invalid date/number → null,
   //    sqlDML.ts:257-296) are expressed with explicit `try_cast` in the
   //    flatten/merge paths, identical under ANSI and legacy sessions;
-  //  - FileOutputCommitter v2 rides per-write DataFrameWriter options
+  //  - FileOutputCommitter v2 and the fork-free local FileSystem ride
+  //    per-write DataFrameWriter options
   //    ([[graft.lake.LakeTable.WriteOptions]]), scoped to lake writes only.
 
   // ---------- schema registry (persisted widened tree per entity) ----------

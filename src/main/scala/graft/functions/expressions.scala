@@ -265,13 +265,13 @@ final case class SigMatchCount(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val res = nullSafeCodeGen(ctx, ev, (a, b) =>
+    val r = ctx.freshName("r")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
-         |Integer r = graft.ops.Dedup.sigMatchCount($a, $b);
-         |if (r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = r.intValue(); }
+         |Integer $r = graft.ops.Dedup.sigMatchCount($a, $b);
+         |if ($r == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = $r.intValue(); }
        """.stripMargin)
-    res
   }
 
   override protected def withNewChildrenInternal(
@@ -312,13 +312,15 @@ final case class CosineSim(left: Expression, right: Expression)
 
   override def nullable: Boolean = true
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
-         |Double r = graft.ops.Similarity.cosineArrayData($a, $b);
-         |if (r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = r.doubleValue(); }
+         |Double $r = graft.ops.Similarity.cosineArrayData($a, $b);
+         |if ($r == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = $r.doubleValue(); }
        """.stripMargin)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =

@@ -15,8 +15,9 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem,
   *
   * Local paths unwrap to the RAW local filesystem: the checksummed
   * [[LocalFileSystem]] wrapper doubles every control-plane write with a
-  * `.crc` sibling and rejects `append`. Two operations keep
-  * storage-specific forms behind pluggable strategies:
+  * `.crc` sibling and rejects `append`. The stock raw class is swapped for
+  * [[LocalFs]], which sets file modes without forking `chmod`. Two
+  * operations keep storage-specific forms behind pluggable strategies:
   *
   *  - [[createExclusive]] — the commit point (atomic create-if-absent).
   *    Strategy per scheme (`graft.fio.publish[.<scheme>]`), auto-resolved
@@ -49,8 +50,17 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem,
 final class Fio(conf: Configuration) extends Serializable {
 
   def fsOf(p: HPath): FileSystem = p.getFileSystem(conf) match {
+    case l: LocalFileSystem
+        if l.getRawFileSystem.getClass == classOf[RawLocalFileSystem] =>
+      localFs
     case l: LocalFileSystem => l.getRawFileSystem
     case other              => other
+  }
+
+  @transient private lazy val localFs: FileSystem = {
+    val fs = new LocalFs
+    fs.initialize(java.net.URI.create("file:///"), conf)
+    fs
   }
 
   /** Fully-qualified form of `p` (scheme + authority made explicit) —

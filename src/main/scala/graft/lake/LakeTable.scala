@@ -906,22 +906,10 @@ final class LakeTable(val spark: SparkSession, val root: String,
     // one task per bucket, exactly as before.
     val writeParts = math.max(1,
       math.min(nb, spark.sparkContext.defaultParallelism))
-    val observed = up.observe(obs, count(when(!col(DelCol), 1)).as("nup"),
+    up.observe(obs, count(when(!col(DelCol), 1)).as("nup"),
       count(when(col(DelCol), 1)).as("ndel"),
       max(col(SeqCol)).as("maxseq"))
-    // GRAFT_WRITE_COALESCE=1 (opt-in): leave the repartition UNNUMBERED so
-    // AQE sizes the write tasks by the advisory partition bytes — for
-    // object stores where file-count/size hygiene outranks latency. OFF
-    // by default: A/B-measured (alternating sessions, min-of-3) the AQE
-    // replan on every merge's exchange costs ~0.2-0.3 s per 7-table apply
-    // at local[32] (engine_replay 1.16-1.48 s capped vs 1.44-1.76 s
-    // coalesced) — the deterministic core-count cap already bounds task
-    // count, and the bucket-dir layout is identical either way.
-    val aqeOn = spark.conf
-      .get("spark.sql.adaptive.enabled", "true").toBoolean &&
-      sys.env.getOrElse("GRAFT_WRITE_COALESCE", "0") == "1"
-    (if (aqeOn) observed.repartition(col(BucketCol))
-     else observed.repartition(writeParts, col(BucketCol)))
+      .repartition(writeParts, col(BucketCol))
       .write.options(LakeTable.WriteOptions)
       .partitionBy(BucketCol).mode("overwrite")
       .parquet(new HPath(dir, rel).toString)
@@ -1240,17 +1228,27 @@ object LakeTable {
     * never sets it. */
   private[graft] var afterTableCommit: String => Unit = _ => ()
 
-  /** Per-write Hadoop options for every lake data write. FileOutputCommitter
-    * v2 (task-side renames instead of a serial driver rename pass at job
-    * commit): a micro-batch writes O(tables × buckets) files, and on a real
-    * DFS the v1 driver pass is seconds of SERIAL per-batch cost that scales
-    * with file count, not cluster size. Scoped per-write (DataFrameWriter
-    * options merge into that job's Hadoop conf) so constructing an engine
-    * never mutates the shared session's committer for non-lake writes
-    * (ADVICE r4). Crash-safety holds because the snapshot log registers
-    * files only after job success, and vacuum GCs orphans. */
-  val WriteOptions: Map[String, String] =
-    Map("mapreduce.fileoutputcommitter.algorithm.version" -> "2")
+  /** Per-write Hadoop options for every lake data write. Scoped per-write
+    * (DataFrameWriter options merge into that job's Hadoop conf, which the
+    * tasks receive) so constructing an engine never mutates the shared
+    * session's conf for non-lake writes (ADVICE r4).
+    *
+    *  - FileOutputCommitter v2 (task-side renames instead of a serial
+    *    driver rename pass at job commit): a micro-batch writes
+    *    O(tables × buckets) files, and on a real DFS the v1 driver pass is
+    *    seconds of SERIAL per-batch cost that scales with file count, not
+    *    cluster size. Crash-safety holds because the snapshot log registers
+    *    files only after job success, and vacuum GCs orphans.
+    *  - `file:` through [[ChecksummedLocalFs]]: the same checksummed local
+    *    FS, minus the `chmod` process stock Hadoop forks per created file
+    *    and `.crc` when libhadoop is absent (see [[LocalFs]]). The cache
+    *    switch is required: Hadoop's FileSystem cache key ignores the conf,
+    *    so a cached stock instance would otherwise win. Other schemes are
+    *    untouched. */
+  val WriteOptions: Map[String, String] = Map(
+    "mapreduce.fileoutputcommitter.algorithm.version" -> "2",
+    "fs.file.impl" -> classOf[ChecksummedLocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** Process-wide refcounted snapshot pins per table dir (consistent-view
     * cuts) — see [[LakeTable.pinSnapshot]]. */

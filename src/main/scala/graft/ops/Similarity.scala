@@ -161,7 +161,8 @@ object Similarity {
       .withColumn("sig",
         graft.functions.expressions.hyperplaneSig(col("v"), bits, seed))
       .repartition(col("sig"))
-      .write.partitionBy("sig").mode("overwrite").parquet(path)
+      .write.options(graft.lake.LakeTable.WriteOptions)
+      .partitionBy("sig").mode("overwrite").parquet(path)
 
   /** List only the partition dirs of `path` whose `<col>=<value>` matches
     * a probe value (r8): `spark.read.parquet(root)` builds its file index
@@ -341,7 +342,8 @@ object Similarity {
       .persist()
     try {
       fin.repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(path)
+        .write.options(graft.lake.LakeTable.WriteOptions)
+        .partitionBy("cell").mode("overwrite").parquet(path)
       // after the parquet write: overwrite mode clears the directory first
       val finCounts = fin.groupBy("cell").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap

@@ -7,17 +7,35 @@ import graft.functions.expressions
 import graft.ops.{Dedup, TextOps}
 
 /** Native Catalyst expressions: value parity with the Scala kernels,
-  * SQL registration, null propagation, codegen compatibility. */
+  * SQL registration, null propagation, codegen compatibility. Kernel cases
+  * run codegen-only, so a Janino compile failure fails the test instead of
+  * falling back to interpreted evaluation unnoticed. */
 class ExprSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  private def kernelTest(name: String)(body: => Unit): Unit =
+    test(name) {
+      val only = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false",
+        // otherwise projections over local relations are folded by the
+        // optimizer through interpreted evaluation, never reaching codegen
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      val prev = only.map { case (k, _) => k -> spark.conf.getOption(k) }
+      only.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+    }
 
   private val texts = Seq(
     "the quick brown fox jumps over the lazy dog",
     "spark merge join filter window aggregate",
     "", "a b a b a b")
 
-  test("simhash64 / fingerprint64 match their Scala kernels") {
+  kernelTest("simhash64 / fingerprint64 match their Scala kernels") {
     val df = texts.zipWithIndex.map(_.swap).toDF("id", "t")
     val rows = df.select(col("id"),
       expressions.simhash64(col("t")).as("sh"),
@@ -29,7 +47,7 @@ class ExprSpec extends AnyFunSuite {
     }
   }
 
-  test("minhash_sig / hyperplane_sig match their Scala kernels (codegen path)") {
+  kernelTest("minhash_sig / hyperplane_sig match their Scala kernels (codegen path)") {
     val df = texts.zipWithIndex.map(_.swap).toDF("id", "t")
     val rows = df.select(col("id"),
       expressions.minhashSig(col("t"), 5, 64).as("sig"))
@@ -53,14 +71,14 @@ class ExprSpec extends AnyFunSuite {
     assert(!plan.contains("ScalaUDF"), plan)
   }
 
-  test("null propagates (UnaryExpression null-intolerance)") {
+  kernelTest("null propagates (UnaryExpression null-intolerance)") {
     val df = Seq(Some("x y z"), None).toDF("t")
     val out = df.select(expressions.simhash64(col("t")).as("sh")).collect()
     assert(out.exists(_.isNullAt(0)))
     assert(out.exists(!_.isNullAt(0)))
   }
 
-  test("SQL registration + codegen execution over a real scan") {
+  kernelTest("SQL registration + codegen execution over a real scan") {
     expressions.registerAll(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.createOrReplaceTempView("g_docs")
@@ -79,7 +97,7 @@ class ExprSpec extends AnyFunSuite {
     assert(!plan.contains("ScalaUDF"), plan)
   }
 
-  test("collect_up_to registered as a SQL aggregate: bounded, grouped") {
+  kernelTest("collect_up_to registered as a SQL aggregate: bounded, grouped") {
     expressions.registerAll(spark)
     import spark.implicits._
     Seq(("a", 1), ("a", 2), ("a", 3), ("b", 9)).toDF("k", "v")
@@ -93,7 +111,7 @@ class ExprSpec extends AnyFunSuite {
     assert(rows(1).getSeq[Int](1) == Seq(9))
   }
 
-  test("parameterized SQL functions: literal args parsed, non-literals rejected") {
+  kernelTest("parameterized SQL functions: literal args parsed, non-literals rejected") {
     expressions.registerAll(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.createOrReplaceTempView("g_docs2")
@@ -115,6 +133,23 @@ class ExprSpec extends AnyFunSuite {
       spark.sql("SELECT minhash_sig(text, doc_id, 64) FROM g_docs2 LIMIT 1")
         .collect())
     assert(err.getMessage.contains("integer literal"), err.getMessage)
+  }
+
+  kernelTest("sig_match_count / cosine_sim: several in one projection compile") {
+    val df = Seq((Array(1L, 2L, 3L), Array(1L, 5L, 3L),
+      Array(1f, 0f), Array(0.5f, 0.5f))).toDF("a", "b", "u", "v")
+    // non-nullable children put each kernel's body at method scope, where
+    // a fixed temporary name would be declared twice
+    val (noLongs, noFloats) =
+      (typedLit(Array.empty[Long]), typedLit(Array.empty[Float]))
+    val (a, b) = (coalesce(col("a"), noLongs), coalesce(col("b"), noLongs))
+    val (u, v) = (coalesce(col("u"), noFloats), coalesce(col("v"), noFloats))
+    val row = df.select(expressions.sigMatchCount(a, b),
+      expressions.sigMatchCount(b, a), expressions.cosineSim(u, v),
+      expressions.cosineSim(v, u)).head()
+    assert(row.getInt(0) == 2 && row.getInt(1) == 2)
+    assert(math.abs(row.getDouble(2) - math.sqrt(0.5)) < 1e-12)
+    assert(row.getDouble(3) == row.getDouble(2))
   }
 
   test("GraftExtensions injects the full function table at session build") {
