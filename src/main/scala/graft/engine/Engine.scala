@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.catalog.{Catalog, TableSpec}
 import graft.flatten.Flattener
@@ -334,6 +335,10 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       case (None, b)          => b
     }
 
+    // the revision-marked frame (incr only), persisted so the inference
+    // fold fills it and the parse reads it: the bucket-pruned revision
+    // scan runs in ONE query per batch
+    var marked: Option[DataFrame] = None
     try {
       val prior = loadRegistry(entity)
 
@@ -343,7 +348,6 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       // Matched rows stay in the frame (marker true) so the inference job
       // can tally them as skipped in the SAME pass — no anti-join-plus-
       // count() pair of jobs per incr batch.
-      var skipMarked = false
       if (incremental) {
         prior.foreach { tree =>
           val tables = Catalog.fromTree(tree)
@@ -352,42 +356,51 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
           if (lake.exists() && lake.snapshot().segments.nonEmpty &&
             lake.snapshot().schema.fieldNames.contains("REV")) {
             // BUCKET-PRUNED revision scan: the batch can only match (ID,
-            // REV) rows in the buckets its own keys hash to — compute that
-            // set from the (persisted, deduped) batch and read only those
-            // buckets' segments. A full lake.read() here is O(table) per
-            // micro-batch — at 10^10 rows the classic incremental-ingest
-            // scale-killer (VERDICT r3); this is O(batch) + O(touched
-            // buckets). The collect is ≤ numBuckets ints.
-            val touched = deduped
-              .select(lake.bucketExpr(col("_docid")).as("_b"))
-              .distinct().collect().map(_.getInt(0)).toSet
-            val existing = lake.readBuckets(touched).select(
-              col("ID").as("_docid"), col("REV").as("_docrev"),
-              lit(true).as("_gskip"))
-            deduped = deduped
-              .join(existing, Seq("_docid", "_docrev"), "left")
-            skipMarked = true
+            // REV) rows in the buckets its own keys hash to — read only
+            // those buckets' segments. A full lake.read() here is O(table)
+            // per micro-batch — at 10^10 rows the classic incremental-
+            // ingest scale-killer (VERDICT r3); this is O(batch) + O(touched
+            // buckets). The touched set (≤ numBuckets ints) rides an
+            // Observation on the job that fills the dedup cache.
+            val obs = org.apache.spark.sql.Observation()
+            deduped.observe(obs,
+              collect_set(lake.bucketExpr(col("_docid"))).as("touched"))
+              .write.format("noop").mode("overwrite").save()
+            // AQE drops the CollectMetrics node of a provably empty batch:
+            // no metrics means no touched bucket
+            val touched: Set[Int] = obs.get.get("touched").collect {
+              case xs: scala.collection.Seq[_] => xs.map(_.asInstanceOf[Int]).toSet
+            }.getOrElse(Set.empty)
+            if (touched.nonEmpty) {
+              val existing = lake.readBuckets(touched).select(
+                col("ID").as("_docid"), col("REV").as("_docrev"),
+                lit(true).as("_gskip"))
+              marked = Some(deduped
+                .join(existing, Seq("_docid", "_docrev"), "left").persist())
+              deduped = marked.get
+            }
           }
         }
       }
 
       // 1-2: inference + registry widen (docMetadata/sqlMetadata stages).
-      // The SAME job materializes the window-dedup cache and tallies both
-      // the surviving and the revision-skipped doc counts (accumulators) —
-      // no standalone count() actions on the hot path. Metrics grade:
-      // accumulator adds happen in a transformation, so a retried /
-      // speculated task can double-count — dedupedDocs/skippedUnchanged
-      // are throughput metrics, not exactly-once ledger entries (the
-      // lake's Observation-backed lineage is); the == 0 branch below is
-      // safe because retries can only inflate a genuinely non-zero count.
+      // The SAME job materializes the dedup (or revision-marked) cache and
+      // tallies both the surviving and the revision-skipped doc counts
+      // (accumulators) — no standalone count() actions on the hot path.
+      // Metrics grade: accumulator adds happen in a transformation, so a
+      // retried / speculated task can double-count — dedupedDocs/
+      // skippedUnchanged are throughput metrics, not exactly-once ledger
+      // entries (the lake's Observation-backed lineage is); the == 0
+      // branch below is safe because retries can only inflate a genuinely
+      // non-zero count.
       val dedupAcc = spark.sparkContext.longAccumulator("graft.dedupedDocs")
       val skipAcc = spark.sparkContext.longAccumulator("graft.skippedDocs")
       val batchTree = inferBatch(entity, deduped, docCol, Some(dedupAcc),
-        skipCol = if (skipMarked) Some("_gskip") else None,
+        skipCol = marked.map(_ => "_gskip"),
         skipCounter = Some(skipAcc))
       val dedupedDocs = dedupAcc.value.longValue
       val skipped = math.max(0L, skipAcc.value.longValue)
-      if (skipMarked) deduped = deduped.filter(col("_gskip").isNull)
+      if (marked.isDefined) deduped = deduped.filter(col("_gskip").isNull)
         .drop("_gskip")
 
       if (dedupedDocs == 0 && (allDeletes.isEmpty || prior.isEmpty))
@@ -402,35 +415,19 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       if (dedupedDocs > 0) saveRegistry(entity, registry)
 
       // 3-5: DDL + flatten + per-table merges (shared with the bootstrap
-      // fast path). The parsed struct column is CACHED once — every
-      // table's explode chain reads it instead of re-running from_json
+      // fast path)
       val schema = Flattener.readSchema(registry.attributes(registry.name))
-      val parsed0 = deduped
+      val parsed = deduped
         .select(col("_docid"), col("_seq"),
           from_json(col(docCol), schema).as("_gdoc"))
-      // The parsed-struct cache exists so K tables' explode chains share
-      // ONE from_json pass — with a single-table catalog there is exactly
-      // one consumer, so the cache (and its materialization barrier) is
-      // pure overhead: let the lone merge compute the parse inline (r8).
-      val multiTable = Catalog.fromTree(registry).size > 1 &&
-        sys.env.getOrElse("GRAFT_PARSE_CACHE", "1") != "0"
-      val parsed = if (multiTable) parsed0.persist() else parsed0
-      // materialize the parse cache with ONE clean parallel job before
-      // the per-table merge fan-out (r8): the concurrent merge jobs all
-      // reference the same uncomputed cache, and Spark's per-block lock
-      // makes every late-arriving task BLOCK (holding its slot) while the
-      // first computes the partition — measured as idle-looking executor
-      // time at the 4-executor level. One noop pass fills the cache at
-      // full parallelism; the merges then read warm blocks.
-      if (multiTable &&
-        sys.env.getOrElse("GRAFT_PARSE_PREMAT", "1") != "0")
-        parsed.write.format("noop").mode("overwrite").save()
       val (nTables, nDel) =
-        try mergeParsed(registry, parsed, commitTag, allDeletes, monotoneSeq)
-        finally { if (multiTable) parsed.unpersist(); () }
+        mergeParsed(registry, parsed, commitTag, allDeletes, monotoneSeq)
 
       ApplyStats(dedupedDocs + nDel, dedupedDocs, nDel, skipped, nTables)
-    } finally latest.unpersist()
+    } finally {
+      marked.foreach(_.unpersist())
+      latest.unpersist()
+    }
   }
 
   /** Steps 3-5 of an apply, shared by [[load]] and the bootstrap fast
@@ -439,6 +436,14 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     * `_docid`, `_seq` and a `_gdoc` struct matching
     * `Flattener.readSchema(registry)` — `from_json`'d on the tail path,
     * struct-built on the bootstrap path. Returns (tables, root deletes).
+    *
+    * ONE clustering shuffle per multi-table batch: upserts and tombstones
+    * are unioned into one frame, tagged with their root-key bucket and
+    * hash-partitioned the way a delta write partitions
+    * ([[LakeTable.clusterForWrite]]). Every table's explode chain keeps
+    * rows in their task, so each table's frame arrives already clustered,
+    * its write plans no exchange, and the id-keyed array dedup window
+    * partitions inside the same clustering.
     */
   private def mergeParsed(registry: Attr, parsed: DataFrame,
       commitTag: String, allDeletes: Option[DataFrame],
@@ -452,70 +457,122 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       else lake.evolve(t.schema, t.keyColumns, rootKeyOf(t))
     }
     val rootElem = registry.attributes(registry.name)
+    val rootT = tables.find(_.isRoot).get
+    val rootLake = table(rootT)
+    val bucketCol = rootLake.BucketCol
+    // the bucket is hashed in the root-key column's type, as prepareDelta
+    // hashes it: upserts take the root key Flattener emits (the value each
+    // child carries as its outermost FK), tombstones their `_docid`
+    def rootKeyType(t: TableSpec): Option[DataType] =
+      table(t).snapshot().schema.find(_.name == rootKeyOf(t)).map(_.dataType)
+    val keyType = rootKeyType(rootT).get
+    val rootBuckets = rootLake.buckets
+    val upserts = parsed.select(col("_docid"), col("_seq"), col("_gdoc"),
+      lit(false).as("_gdel"), rootLake.bucketExpr(
+        Flattener.rootKey(rootElem, tables, col("_gdoc")).cast(keyType))
+        .as(bucketCol))
+    val tombstones = allDeletes.map(d => d.select(col("_docid"), col("_seq"),
+      lit(null).cast(parsed.schema("_gdoc").dataType).as("_gdoc"),
+      lit(true).as("_gdel"),
+      rootLake.bucketExpr(col("_docid").cast(keyType)).as(bucketCol)))
+    val batch = tombstones.fold(upserts)(upserts.unionByName(_))
+    // The clustered cache exists so K tables' explode chains share ONE
+    // from_json pass and ONE shuffle. With a single-table catalog the lone
+    // write's own shuffle already is the batch's one shuffle, so neither
+    // the cache (and its materialization barrier) nor an up-front
+    // clustering pays: the merge computes the batch inline (r8).
+    val multiTable = tables.size > 1
+    val clustered =
+      if (multiTable) rootLake.clusterForWrite(batch).persist() else batch
+    // materialize the cache with ONE clean parallel job before the
+    // per-table merge fan-out (r8): the concurrent merge jobs all
+    // reference the same uncomputed cache, and Spark's per-block lock
+    // makes every late-arriving task BLOCK (holding its slot) while the
+    // first computes the partition. One noop pass fills the cache at full
+    // parallelism; the merges then read warm blocks.
+    if (multiTable) clustered.write.format("noop").mode("overwrite").save()
 
-    def frameOf(t: TableSpec): DataFrame = {
+    // the bucket column a table's frames pass through: none for a table
+    // whose layout differs from the root's (a partial rebucket, or a
+    // root-key column of another type) — its prepareDelta recomputes the
+    // bucket and its write shuffles as before
+    def passOf(t: TableSpec): Seq[String] =
+      if (multiTable && table(t).buckets == rootBuckets &&
+        rootKeyType(t).contains(keyType)) Seq(bucketCol)
+      else Nil
+    val docs = clustered.filter(!col("_gdel"))
+    def frameOf(t: TableSpec, pass: Seq[String]): DataFrame = {
       // within-doc duplicate keys need a dedup window ONLY for ID-keyed
       // tables under an array (two elements may share an id —
       // reference's serial MERGE makes the last win, sqlDML.ts:519-545);
       // root rows are unique per batch dedup and AI keys are positions
       val needsKeyDedup = !t.isRoot && t.tablePk == "ID" &&
         t.path.exists(_.isArray)
-      val raw = Flattener.tableFrame(parsed, rootElem, tables, t,
-        col("_gdoc"), extraCols = Seq("_seq"), withOrd = needsKeyDedup)
+      val raw = Flattener.tableFrame(docs, rootElem, tables, t,
+        col("_gdoc"), extraCols = "_seq" +: pass, withOrd = needsKeyDedup)
       if (!needsKeyDedup) raw
       else raw
+        // the bucket leads the window keys, so the clustering satisfies it
         .withColumn("_krn", row_number().over(Window
-          .partitionBy(t.keyColumns.map(col): _*)
+          .partitionBy((pass ++ t.keyColumns).map(col): _*)
           .orderBy(col("_seq").desc, col("_gord").desc)))
         .filter(col("_krn") === 1)
         .drop("_krn", "_gord")
     }
+    def deletesOf(pass: Seq[String]): Option[DataFrame] =
+      allDeletes.map(_ => clustered.filter(col("_gdel"))
+        .select((Seq("_docid", "_seq") ++ pass).map(col): _*))
     val rowSeq = if (monotoneSeq) Some("_seq") else None
     // the applied-delete count comes from the ROOT table's merge lineage
     // (its Observation already counted tombstones) — not a count() job
     var nDel = 0L
-    val rootName = tables.find(_.isRoot).map(_.fullName)
+    val rootName = rootT.fullName
     def readDel(snap: graft.lake.Snapshot): Long =
       snap.lineage.lastOption.filter(_.tag == commitTag)
         .map(_.deleted).getOrElse(0L)
 
-    // Two commit strategies, A/B-measured (BENCH.md r4, steal-controlled
-    // interleaved probe): per-table CONCURRENT merge jobs (default) vs all
-    // tables' deltas in ONE union write job (LakeTable.mergeAll,
-    // `GRAFT_UNION_MERGE=1`). At this table count (7) they are parity at
-    // N and per-table is ~2-4 s/replay faster at 4N (the union's single
-    // exchange serializes behind a stage barrier the concurrent jobs
-    // pipeline through); the union path wins when table count ≫ executor
-    // slots or the driver's job-commit path is the bottleneck (many-table
-    // entities, DFS committers) — kept as a first-class option.
-    val unionMerge = sys.props.getOrElse("graft.union.merge",
-      sys.env.getOrElse("GRAFT_UNION_MERGE", "0")) != "0"
-    if (unionMerge) {
-      val merges = tables.map(t => graft.lake.LakeTable.TableMerge(
-        table(t), frameOf(t), t.keyColumns, rootKeyOf(t),
-        deleteRootKeys = allDeletes, rowSeqCol = rowSeq))
-      val snaps = graft.lake.LakeTable.mergeAll(lakeRoot, merges, commitTag)
-      nDel = rootName.flatMap(snaps.get).map(readDel).getOrElse(0L)
-    } else {
-      // per-table merges run CONCURRENTLY (independent lake tables, like
-      // the reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
-      // schedules the jobs from separate threads and fills idle cores;
-      // exactly-once holds per table via the shared commit tag
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def mergeOne(t: TableSpec): Unit = {
-        val snap = table(t).merge(frameOf(t), t.keyColumns, rootKeyOf(t),
-          commitTag, deleteRootKeys = allDeletes, rowSeqCol = rowSeq)
-        if (t.isRoot) nDel = readDel(snap)
-        ()
-      }
-      val parallelMerge = sys.env.getOrElse("GRAFT_PAR_MERGE", "1") != "0"
-      if (parallelMerge)
+    try {
+      // Two commit strategies, A/B-measured (BENCH.md r4, steal-controlled
+      // interleaved probe): per-table CONCURRENT merge jobs (default) vs
+      // all tables' deltas in ONE union write job (LakeTable.mergeAll,
+      // `GRAFT_UNION_MERGE=1`). At this table count (7) they are parity at
+      // N and per-table is ~2-4 s/replay faster at 4N (the union's single
+      // exchange serializes behind a stage barrier the concurrent jobs
+      // pipeline through); the union path wins when table count ≫
+      // executor slots or the driver's job-commit path is the bottleneck
+      // (many-table entities, DFS committers) — kept as a first-class
+      // option.
+      val unionMerge = sys.props.getOrElse("graft.union.merge",
+        sys.env.getOrElse("GRAFT_UNION_MERGE", "0")) != "0"
+      if (unionMerge) {
+        val merges = tables.map { t =>
+          val pass = passOf(t)
+          graft.lake.LakeTable.TableMerge(table(t), frameOf(t, pass),
+            t.keyColumns, rootKeyOf(t), deleteRootKeys = deletesOf(pass),
+            rowSeqCol = rowSeq)
+        }
+        val snaps = graft.lake.LakeTable.mergeAll(lakeRoot, merges, commitTag)
+        nDel = snaps.get(rootName).map(readDel).getOrElse(0L)
+      } else {
+        // per-table merges run CONCURRENTLY (independent lake tables, like
+        // the reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
+        // schedules the jobs from separate threads and fills idle cores;
+        // exactly-once holds per table via the shared commit tag
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.ExecutionContext.Implicits.global
+        def mergeOne(t: TableSpec): Unit = {
+          val pass = passOf(t)
+          val snap = table(t).merge(frameOf(t, pass), t.keyColumns,
+            rootKeyOf(t), commitTag, deleteRootKeys = deletesOf(pass),
+            rowSeqCol = rowSeq)
+          if (t.isRoot) nDel = readDel(snap)
+          ()
+        }
         Await.result(Future.sequence(tables.map(t => Future(mergeOne(t)))),
           Duration.Inf)
-      else tables.foreach(mergeOne)
-    }
+      }
+    } finally { if (multiTable) clustered.unpersist(); () }
     (tables.size, nDel)
   }
 
@@ -847,12 +904,10 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       .agg(max_by(struct(keyed.columns.map(col): _*), col("_seq")).as("_w"))
       .select(col("_w.*"))
     val parsed = latest
-      .select(col("_docid"), col("_seq"), gdoc.as("_gdoc")).persist()
-    try {
-      val (nTables, _) =
-        mergeParsed(registry, parsed, commitTag, None, monotoneSeq = true)
-      ApplyStats(total, total, 0, 0, nTables)
-    } finally parsed.unpersist()
+      .select(col("_docid"), col("_seq"), gdoc.as("_gdoc"))
+    val (nTables, _) =
+      mergeParsed(registry, parsed, commitTag, None, monotoneSeq = true)
+    ApplyStats(total, total, 0, 0, nTables)
   }
 
   /** Register every table of an entity as a session temp view (MoR-

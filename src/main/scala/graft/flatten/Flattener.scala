@@ -98,6 +98,17 @@ object Flattener {
       .otherwise(raw.cast(StringType))             // ''→null (JS falsy bind)
   }
 
+  /** The root table's primary-key value of each parsed document: the
+    * root's ID column, and the value every child table carries as its
+    * outermost FK (cast to that FK's type). Rows without a document
+    * (`docCol` null) still get a value; callers filter them. */
+  def rootKey(rootElem: Attr, tables: Seq[TableSpec], docCol: Column): Column = {
+    val root = tables.find(_.isRoot).getOrElse(
+      throw new IllegalStateException("catalog has no root table"))
+    pkExpr(root, rootElem, docCol, None)
+      .cast(if (root.tablePk == "AI") IntegerType else StringType)
+  }
+
   /** Build the DataFrame for one table from a batch that has a parsed
     * struct column `docCol` (already `from_json`'d with [[readSchema]]).
     *

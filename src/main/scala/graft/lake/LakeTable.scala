@@ -835,6 +835,28 @@ final class LakeTable(val spark: SparkSession, val root: String,
   private def bucketExpr(rootKey: Column, n: Int): Column =
     pmod(xxhash64(rootKey), lit(n)).cast(IntegerType)
 
+  /** The table's effective bucket count (the current snapshot's layout). */
+  def buckets: Int = bucketsOf(snapshot())
+
+  /** Hash-partition a frame that carries [[BucketCol]] exactly the way
+    * [[writeDelta]] does. A delta write over such a frame (its bucket
+    * column passed through, see [[prepareDelta]]) plans no exchange of its
+    * own: Spark drops a repartition whose child already has that hash
+    * partitioning. */
+  def clusterForWrite(df: DataFrame): DataFrame =
+    df.repartition(writeParts(bucketsOf(snapshot())), col(BucketCol))
+
+  // SCALE-ADAPTIVE task count (r8, guide §2.2/§6): hash-partitioning on
+  // the bucket COLUMN keeps every bucket's rows in one task whatever the
+  // partition count, and partitionBy still writes one leaf dir per bucket
+  // — so capping partitions at the session's core count changes NOTHING
+  // about the layout while cutting write-task count (32 tasks per table
+  // per micro-batch on an 8-core level = scheduling overhead that does not
+  // shrink with executors). A cluster with ≥ nb cores keeps one task per
+  // bucket.
+  private def writeParts(nb: Int): Int =
+    math.max(1, math.min(nb, spark.sparkContext.defaultParallelism))
+
   /** Idempotent merge-on-read upsert:
     *   - `updates` rows shadow older rows with the same `keyCols`
     *     (visibility via the commit sequence column)
@@ -894,22 +916,12 @@ final class LakeTable(val spark: SparkSession, val root: String,
     // deltas are NOT sorted: they live ≤ maxDeltas merges before
     // compaction rewrites them, and the merge-on-read resolution shuffles
     // on the key anyway — only base segments (long-lived, read-heavy)
-    // pay for key-clustered layout.
-    // SCALE-ADAPTIVE task count (r8, guide §2.2/§6): hash-partitioning on
-    // the bucket COLUMN keeps every bucket's rows in one task whatever
-    // the partition count, and partitionBy still writes one leaf dir per
-    // bucket — so capping partitions at the session's core count changes
-    // NOTHING about the layout while cutting write-task count (32 tasks
-    // per table per micro-batch on an 8-core level = scheduling overhead
-    // that does not shrink with executors; it was a visible slice of the
-    // 4N level's per-batch fixed cost). A cluster with ≥ nb cores keeps
-    // one task per bucket, exactly as before.
-    val writeParts = math.max(1,
-      math.min(nb, spark.sparkContext.defaultParallelism))
+    // pay for key-clustered layout. A frame the caller already clustered
+    // ([[clusterForWrite]]) keeps its partitioning and skips this shuffle.
     up.observe(obs, count(when(!col(DelCol), 1)).as("nup"),
       count(when(col(DelCol), 1)).as("ndel"),
       max(col(SeqCol)).as("maxseq"))
-      .repartition(writeParts, col(BucketCol))
+      .repartition(writeParts(nb), col(BucketCol))
       .write.options(LakeTable.WriteOptions)
       .partitionBy(BucketCol).mode("overwrite")
       .parquet(new HPath(dir, rel).toString)
@@ -959,9 +971,15 @@ final class LakeTable(val spark: SparkSession, val root: String,
         // engine never flips session-global conf (ADVICE r4)
         .map(c => coalesce(col(c).try_cast(LongType), lit(newSeq)))
         .getOrElse(lit(newSeq))
-    val upRows = align(updates
+    // an incoming bucket column is KEPT, not recomputed: Engine.load
+    // clusters the batch by bucket once (clusterForWrite) and every
+    // table's write inherits that partitioning
+    val bucketed: DataFrame => DataFrame = df =>
+      if (df.columns.contains(BucketCol)) df
+      else df.withColumn(BucketCol, bucketExpr(col(rootKeyCol), bucketsOf(s)))
+    val upRows = bucketed(align(updates
       .withColumn(SeqCol, seqOf(updates))
-      .withColumn(DelCol, lit(false)), metaTarget)
+      .withColumn(DelCol, lit(false)), metaTarget, Seq(BucketCol)))
     val tombRows = deleteRootKeys.map { dk =>
       // delete-key frame: first column = root key, optional second = seq.
       // Under the lsn domain each delete MUST carry its own lsn (a
@@ -974,12 +992,11 @@ final class LakeTable(val spark: SparkSession, val root: String,
       val seqExpr =
         if (domain == "lsn") col(named.columns(1)).try_cast(LongType)
         else lit(newSeq) // commit domain: ignore any caller seq — one domain
-      align(named
+      bucketed(align(named
         .withColumn(SeqCol, seqExpr)
-        .withColumn(DelCol, lit(true)), metaTarget)
+        .withColumn(DelCol, lit(true)), metaTarget, Seq(BucketCol)))
     }
     tombRows.fold(upRows)(upRows.unionByName(_))
-      .withColumn(BucketCol, bucketExpr(col(rootKeyCol), bucketsOf(s)))
   }
 
   /** Commit already-written delta segments: inline-compact at-cap buckets,
@@ -1087,12 +1104,15 @@ final class LakeTable(val spark: SparkSession, val root: String,
     }
   }
 
-  private def align(df: DataFrame, target: StructType): DataFrame = {
+  /** Project `df` onto `target` (casts, null-filled missing columns),
+    * then append whichever `passThrough` columns `df` has, untouched. */
+  private def align(df: DataFrame, target: StructType,
+      passThrough: Seq[String] = Nil): DataFrame = {
     val have = df.schema.fieldNames.toSet
     df.select(target.fields.toSeq.map { f =>
       if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+    } ++ passThrough.filter(have).map(col): _*)
   }
 
   /** Force-compact every bucket that currently holds deltas: resolve and

@@ -68,7 +68,13 @@ object Similarity {
     * (interpreted eval, boxed doubles), and this kernel runs once per
     * enumerated candidate pair in `Dedup.embeddingPairs` and once per
     * row in every ANN rerank — the interpreted form was the dominant
-    * cost of `dedup_embedding` (guide §4.1). */
+    * cost of `dedup_embedding` (guide §4.1).
+    *
+    * Contract: both columns must be ARRAY<FLOAT>. The kernel rejects
+    * any other element type at analysis (ARRAY<DOUBLE> included, e.g.
+    * centroids built with `avg`); cast such a column to ARRAY<FLOAT>
+    * first. The replaced lambda chain accepted any numeric element
+    * type. */
   def cosineCols(v: Column, q: Column): Column =
     graft.functions.expressions.cosineSim(v, q)
 

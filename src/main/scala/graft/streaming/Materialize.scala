@@ -32,11 +32,13 @@ import graft.lake.LakeTable
   *     by construction — with the batch's group-delta side broadcast;
   *   - nothing is collected to the driver.
   *
-  * Exactly-once: each micro-batch merges under tag `mv:<batchId>`; the
-  * lake's applied-tag dedup makes replays after a crash no-ops (the
-  * replayed batch recomputes against the already-merged target, then its
-  * merge is skipped on the tag — the recomputed values are discarded, so
-  * read-modify-write stays idempotent). Restart resumes from the stream
+  * Exactly-once: each micro-batch merges under tag
+  * `mv:<streamId>:<batchId>` (`mv:<batchId>` for the batches a checkpoint
+  * planned before stream ids existed); the lake's applied-tag dedup makes
+  * replays after a crash no-ops (the replayed batch recomputes against the
+  * already-merged target, then its merge is skipped on the tag — the
+  * recomputed values are discarded, so read-modify-write stays
+  * idempotent). Restart resumes from the stream
   * checkpoint; `maxVersionsPerTrigger` bounds catch-up batches.
   *
   * Sum expressions must be integral (folded as LongType) — exact under
@@ -106,22 +108,40 @@ object Materialize {
     // uuid persisted IN the checkpoint dir scopes the tags: the same
     // checkpoint (a normal restart) keeps its id, so replay dedup still
     // fires; a fresh checkpoint gets a fresh id and its batches apply.
+    //
+    // UPGRADE (ADVICE r8): a checkpoint that predates the namespace has
+    // planned batches but no id file, and merged each of them under the
+    // bare mv:<batchId> tag. Every batch it already planned keeps that tag,
+    // so a torn one (merged, not yet committed in the checkpoint) replays
+    // as a no-op; later batches take the namespaced tag. That horizon is
+    // persisted before the id file: a crash between the two writes
+    // re-derives the same horizon from the untouched offset log.
     val fio = new graft.lake.Fio(spark.sessionState.newHadoopConf())
-    val idFile = new org.apache.hadoop.fs.Path(checkpoint, "graft-mv-id")
+    val ckpt = new org.apache.hadoop.fs.Path(checkpoint)
+    val idFile = new org.apache.hadoop.fs.Path(ckpt, "graft-mv-id")
+    val legacyFile = new org.apache.hadoop.fs.Path(ckpt, "graft-mv-legacy")
     val streamId =
       if (fio.exists(idFile)) fio.readString(idFile).trim
       else {
+        val planned = fio.list(new org.apache.hadoop.fs.Path(ckpt, "offsets"))
+          .map(_.getPath.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
+        fio.mkdirs(ckpt)
+        if (planned.nonEmpty)
+          fio.writeAtomic(legacyFile, planned.map(_.toLong).max.toString)
         val id = java.util.UUID.randomUUID().toString.take(12)
-        fio.mkdirs(new org.apache.hadoop.fs.Path(checkpoint))
         fio.writeAtomic(idFile, id)
         id
       }
+    val legacyThrough =
+      if (fio.exists(legacyFile)) fio.readString(legacyFile).trim.toLong
+      else -1L
 
     reader.load().writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         applyDelta(batch, target, groupCol, sums, countCol,
-          s"mv:$streamId:$id", groupExpr)
+          if (id <= legacyThrough) s"mv:$id" else s"mv:$streamId:$id",
+          groupExpr)
         ()
       }.start()
   }

@@ -1,0 +1,255 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.catalog.{Catalog, TableSpec}
+import graft.engine.Engine
+import graft.flatten.Flattener
+import graft.lake.LakeTable
+
+/** Job shape of one apply: the batch is clustered by root-key bucket ONCE
+  * and every table's delta write inherits that partitioning (no exchange
+  * of its own, still one file per bucket dir, same rows and layout as
+  * tables merged one by one); a table whose layout differs from the root's
+  * falls back to its own shuffle; the incr revision scan runs once. */
+class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  private lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  // root + id-keyed array child (a within-doc duplicate id exercises the
+  // key-dedup window) + object inside the array element + object child
+  private def doc(i: Int, rev: Int): String =
+    s"""{"id":"k-$i","rev":"$rev","name":"n$i-$rev",""" +
+      s""""items":[{"id":"a$i","q":$rev,"tag":{"t":"x$i-$rev"}},""" +
+      s"""{"id":"b$i","q":${rev + 1}},{"id":"a$i","q":${rev + 2}}],""" +
+      s""""meta":{"m":"m$i-$rev"}}"""
+
+  private def events(rows: Seq[(Long, String, String)]): DataFrame =
+    rows.toDF("lsn", "op", "doc")
+
+  private val batch1 = events((0 until 40).map(i =>
+    (i.toLong, "insert", doc(i, 1))))
+  // updates, deletes and fresh inserts in one batch
+  private val batch2 = events(
+    (0 until 20).map(i => (100L + i, "update", doc(i, 2))) ++
+      (20 until 30).map(i => (200L + i, "delete", s"""{"id":"k-$i"}""")) ++
+      (40 until 50).map(i => (300L + i, "insert", doc(i, 1))))
+
+  private def tablesOf(e: Engine, entity: String): Seq[TableSpec] =
+    Catalog.fromTree(e.loadRegistry(entity).get)
+
+  private def rootKeyOf(t: TableSpec): String =
+    if (t.isRoot) t.tablePk else t.fkColumns.last.sqlName
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Shuffle exchanges in each lake data write, by output path. */
+  private def writeExchanges(body: => Unit): Seq[(String, Int)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        collect(qe.executedPlan) { case w: DataWritingCommandExec => w }
+          .foreach { w =>
+            w.cmd match {
+              case c: InsertIntoHadoopFsRelationCommand =>
+                seen.add((c.outputPath.toString,
+                  collect(w.child) { case x: ShuffleExchangeLike => x }.size))
+              case _ =>
+            }
+          }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  /** Data files of each segment a table's newest commit added. */
+  private def newSegmentFiles(root: String, t: TableSpec,
+      lake: LakeTable): Seq[(Int, Seq[String])] = {
+    val s = lake.snapshot()
+    s.segments.filter(seg => seg.kind == "delta" && seg.seq == s.version)
+      .map { seg =>
+        val d = java.nio.file.Paths.get(root, t.fullName, seg.path).normalize()
+        val ls = java.nio.file.Files.list(d)
+        try seg.bucket -> ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".parquet")).toSeq
+        finally ls.close()
+      }
+  }
+
+  /** The same two batches merged table by table: each table's frame is
+    * flattened from the unclustered batch and merged on its own (its write
+    * shuffles to its buckets itself). */
+  private def mergeTableByTable(e: Engine, entity: String, root: String,
+      batch: DataFrame, tag: String): Unit = {
+    val tree = e.loadRegistry(entity).get
+    val rootElem = tree.attributes(tree.name)
+    val tables = Catalog.fromTree(tree)
+    val docs = batch.filter(col("op") =!= "delete").select(
+      get_json_object(col("doc"), "$.id").as("_docid"), col("lsn").as("_seq"),
+      from_json(col("doc"), Flattener.readSchema(rootElem)).as("_gdoc"))
+    val dels = batch.filter(col("op") === "delete").select(
+      get_json_object(col("doc"), "$.id").as("_docid"), col("lsn"))
+    tables.foreach { t =>
+      val lake = new LakeTable(spark, root, t.fullName, 8)
+      if (!lake.exists()) lake.create(t.schema, t.keyColumns, rootKeyOf(t))
+      else lake.evolve(t.schema, t.keyColumns, rootKeyOf(t))
+      val dedup = !t.isRoot && t.tablePk == "ID" && t.path.exists(_.isArray)
+      val raw = Flattener.tableFrame(docs, rootElem, tables, t, col("_gdoc"),
+        extraCols = Seq("_seq"), withOrd = dedup)
+      val frame =
+        if (!dedup) raw
+        else raw.withColumn("_krn", row_number().over(Window
+          .partitionBy(t.keyColumns.map(col): _*)
+          .orderBy(col("_gord").desc)))
+          .filter(col("_krn") === 1).drop("_krn", "_gord")
+      lake.merge(frame, t.keyColumns, rootKeyOf(t), tag,
+        deleteRootKeys = Some(dels), rowSeqCol = Some("_seq"))
+    }
+  }
+
+  test("clustered writes: one shuffle per batch, no exchange in any table's " +
+      "write, one file per touched bucket dir, rows as merged table by table") {
+    val root = SparkTestSession.tmpDir("graft-cluster-")
+    val e = new Engine(spark, root, numBuckets = 8)
+    e.applyEvents("ent", batch1, "b:1")
+    val writes = writeExchanges(e.applyEvents("ent", batch2, "b:2"))
+    val tables = tablesOf(e, "ent")
+    assert(tables.size == 4, tables.map(_.fullName))
+    assert(tables.exists(t => !t.isRoot && t.tablePk == "ID" &&
+      t.path.exists(_.isArray)), "no id-keyed array child")
+
+    tables.foreach { t =>
+      val mine = writes.filter(_._1.contains(s"/${t.fullName}/data/"))
+      assert(mine.size == 1, s"${t.fullName}: ${mine.size} delta writes")
+      assert(mine.head._2 == 0,
+        s"${t.fullName}: write plan has ${mine.head._2} exchange(s)")
+      val segs = newSegmentFiles(root, t, e.table(t))
+      assert(segs.nonEmpty, s"${t.fullName}: batch 2 wrote no segment")
+      segs.foreach { case (b, files) =>
+        assert(files.size == 1, s"${t.fullName} bucket $b: $files")
+      }
+    }
+
+    // the same batches merged table by table give the same rows in the
+    // same bucket layout
+    val refRoot = SparkTestSession.tmpDir("graft-cluster-ref-")
+    mergeTableByTable(e, "ent", refRoot, batch1, "b:1")
+    mergeTableByTable(e, "ent", refRoot, batch2, "b:2")
+    tables.foreach { t =>
+      val got = e.table(t)
+      val want = new LakeTable(spark, refRoot, t.fullName, 8)
+      assert(sortedRows(got.read()) == sortedRows(want.read()), t.fullName)
+      assert(got.snapshot().segments.map(_.bucket).sorted ==
+        want.snapshot().segments.map(_.bucket).sorted, t.fullName)
+    }
+    val rootRows = e.table(tables.find(_.isRoot).get).read()
+    assert(rootRows.count() == 40) // 50 inserted, 10 deleted
+    assert(rootRows.filter(col("ID") === "k-3").head()
+      .getAs[String]("REV") == "2")
+  }
+
+  test("partial rebucket: a child whose bucket count differs from the " +
+      "root's keeps its own layout, and readWhere finds its rows") {
+    val root = SparkTestSession.tmpDir("graft-cluster-rb-")
+    val e = new Engine(spark, root, numBuckets = 8)
+    e.applyEvents("ent", batch1, "b:1")
+    val rootT = tablesOf(e, "ent").find(_.isRoot).get
+    e.table(rootT).rebucket(16, "rb:root")
+    e.applyEvents("ent", batch2, "b:2")
+
+    val tables = tablesOf(e, "ent")
+    tables.foreach { t =>
+      val lake = e.table(t)
+      val n = if (t.isRoot) 16 else 8
+      assert(lake.buckets == n, t.fullName)
+      // every row sits in the segment its root key hashes to, under the
+      // table's own bucket count
+      lake.snapshot().segments.foreach { seg =>
+        val d = java.nio.file.Paths.get(root, t.fullName, seg.path)
+          .normalize().toString
+        val misplaced = spark.read.parquet(d)
+          .filter(pmod(xxhash64(col(rootKeyOf(t))), lit(n)) =!= seg.bucket)
+          .count()
+        assert(misplaced == 0, s"${t.fullName} bucket ${seg.bucket}")
+      }
+      // a bucket-pruned point lookup finds what a full read finds
+      Seq("k-3", "k-45", "k-25").foreach { k =>
+        val full = lake.read().filter(col(rootKeyOf(t)) === k)
+        val pruned = lake.readWhere(col(rootKeyOf(t)) === k)
+        assert(sortedRows(pruned) == sortedRows(full), s"${t.fullName} $k")
+        if (k == "k-25") assert(full.isEmpty) // deleted in batch 2
+        else assert(!full.isEmpty, s"${t.fullName} $k")
+      }
+    }
+  }
+
+  test("incr: the bucket-pruned revision scan runs in ONE query; empty and " +
+      "delete-only batches apply") {
+    val root = "graftfs:" + SparkTestSession.tmpDir("graft-revscan-")
+    val e = new Engine(spark, root, numBuckets = 8)
+    e.applyEvents("ent", batch1, "b:1", incremental = true)
+    val rootT = tablesOf(e, "ent").find(_.isRoot).get
+    val lake = e.table(rootT)
+    // opens of each root-table data file made by Spark tasks in `body`
+    def opensPerFile(body: => Unit): Map[String, Int] = {
+      GraftTestFs.taskOpens.clear()
+      body
+      GraftTestFs.taskOpens.asScala.toSeq.map(_._2)
+        .filter(p => p.contains(s"/${rootT.fullName}/data/") &&
+          p.endsWith(".parquet"))
+        .groupBy(identity).map { case (p, xs) => p -> xs.size }
+    }
+    // 10 unchanged revisions (re-deliveries) + 10 new ones
+    val next = events(
+      (0 until 10).map(i => (500L + i, "update", doc(i, 1))) ++
+        (10 until 20).map(i => (600L + i, "update", doc(i, 3))))
+    // calibration: what ONE revision-scan query over the batch's buckets
+    // opens (a query's inference fold is an RDD action a
+    // QueryExecutionListener never sees, so the proof counts file opens)
+    val touched = (0 until 20).map(i => lake.bucketOfKey(s"k-$i")).toSet
+    val oneScan = opensPerFile(lake.readBuckets(touched)
+      .select("ID", "REV").write.format("noop").mode("overwrite").save())
+    assert(oneScan.nonEmpty)
+    val applyOpens = opensPerFile {
+      val s = e.applyEvents("ent", next, "b:2", incremental = true)
+      assert(s.skippedUnchanged == 10 && s.dedupedDocs == 10)
+    }
+    assert(applyOpens == oneScan, "opens per root file: apply " +
+      s"${applyOpens.values.toSeq.sorted}, one scan ${oneScan.values.toSeq.sorted}")
+
+    val emptyStats = e.applyEvents("ent", batch1.limit(0), "b:3",
+      incremental = true)
+    assert(emptyStats.batchEvents == 0 && emptyStats.dedupedDocs == 0 &&
+      emptyStats.deletes == 0)
+
+    val dels = events((30 until 35).map(i =>
+      (700L + i, "delete", s"""{"id":"k-$i"}""")))
+    val delStats = e.applyEvents("ent", dels, "b:4", incremental = true)
+    assert(delStats.deletes == 5 && delStats.dedupedDocs == 0)
+    val ids = lake.read().select("ID").as[String].collect().toSet
+    assert(ids.size == 35 && (30 until 35).forall(i => !ids(s"k-$i")))
+    val revs = lake.read()
+      .filter(col("ID").isin("k-5", "k-15")).orderBy("ID")
+      .select("REV").as[String].collect().toSeq
+    assert(revs == Seq("3", "1")) // k-15 (rev 3) sorts before k-5 (rev 1)
+  }
+}

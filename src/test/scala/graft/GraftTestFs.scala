@@ -24,6 +24,8 @@ class GraftTestFs extends RawLocalFileSystem {
   }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     GraftTestFs.opens.incrementAndGet()
+    val task = org.apache.spark.TaskContext.get()
+    if (task != null) GraftTestFs.taskOpens.add((task.stageId(), f.toString))
     super.open(f, bufferSize)
   }
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
@@ -54,6 +56,9 @@ object GraftTestFs {
   val lists = new AtomicLong
   val renames = new AtomicLong
   val deletes = new AtomicLong
+  /** (stage id, path) of every open made inside a Spark task. */
+  val taskOpens =
+    new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
   def total: Long = opens.get + creates.get + lists.get + renames.get +
     deletes.get
 }

@@ -97,6 +97,56 @@ class MaterializeSpec extends AnyFunSuite {
     assert(state(mv) == before) // applied tag replayed → no-op
   }
 
+  test("checkpoint upgrade: a batch torn before stream ids existed " +
+      "(merged under the bare mv:<batchId> tag, never committed) replays " +
+      "exactly once") {
+    val srcRoot = SparkTestSession.tmpDir("graft-mvu-src-")
+    val mvRoot = SparkTestSession.tmpDir("graft-mvu-dst-")
+    val ckpt = SparkTestSession.tmpDir("graft-mvu-ckpt-")
+    val src = new LakeTable(spark, srcRoot, "SRC", numBuckets = 4)
+    src.create(schema, Seq("ID"), "ID")
+    src.merge(df(("a", "en", 10L), ("b", "de", 5L)), Seq("ID"), "ID", "c1")
+    val mv = new LakeTable(spark, mvRoot, "MV", numBuckets = 4)
+    mv.create(StructType(Seq(
+      StructField("LANG", StringType, nullable = false),
+      StructField("N", LongType), StructField("BYTES", LongType))),
+      Seq("LANG"), "LANG")
+
+    // the rollup as it ran before stream ids: same feed, bare tags, no
+    // graft-mv-id file in the checkpoint
+    val legacy = spark.readStream.format("graft-changefeed")
+      .option("root", srcRoot).option("table", "SRC").option("cdf", "true")
+      .load().writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        Materialize.applyDelta(batch, mv, "LANG", Map("BYTES" -> col("SZ")),
+          "N", s"mv:$id")
+        ()
+      }.start()
+    legacy.processAllAvailable() // batch 0
+    src.merge(df(("c", "en", 7L)), Seq("ID"), "ID", "c2")
+    legacy.processAllAvailable() // batch 1
+    legacy.stop()
+    assert(state(mv) == recompute(src))
+    assert(mv.snapshot().hasCommit("mv:1"))
+    // tear batch 1: its merge landed, its checkpoint commit did not
+    Seq("1", ".1.crc").foreach(n =>
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(ckpt, "commits", n)))
+
+    val q = Materialize.rollup(spark, srcRoot, "SRC", mvRoot, "MV",
+      "LANG", Map("BYTES" -> col("SZ")), ckpt)
+    q.processAllAvailable() // replays batch 1 under mv:1 → no-op
+    assert(state(mv) == recompute(src))
+    assert(state(mv) == Map("en" -> (2L, 17L), "de" -> (1L, 5L)))
+    // batches after the upgrade take the namespaced tag and apply
+    src.merge(df(("d", "fr", 3L)), Seq("ID"), "ID", "c3")
+    q.processAllAvailable()
+    q.stop()
+    assert(state(mv) == recompute(src))
+    assert(mv.snapshot().commits.exists(t =>
+      t.startsWith("mv:") && t.count(_ == ':') == 2))
+  }
+
   test("cascade: the MV target is itself a changefeed source — a " +
       "second-level rollup (derived group expression) converges") {
     val srcRoot = SparkTestSession.tmpDir("graft-mvc-src-")
