@@ -202,11 +202,6 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       }
     }
     pruneRegistry(entity)
-    // GC shared multi-table commit dirs no table references any more
-    // (compaction rewrites buckets into per-table base segments, after
-    // which a whole batch's shared dir usually drops out of every live set)
-    LakeTable.vacuumShared(spark, lakeRoot, vacuumGraceMs)
-    ()
   }
 
   /** Grow every table of an entity to `newBuckets` hash buckets (see
@@ -526,52 +521,32 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     // the applied-delete count comes from the ROOT table's merge lineage
     // (its Observation already counted tombstones) — not a count() job
     var nDel = 0L
-    val rootName = rootT.fullName
     def readDel(snap: graft.lake.Snapshot): Long =
       snap.lineage.lastOption.filter(_.tag == commitTag)
         .map(_.deleted).getOrElse(0L)
 
+    // per-table merges run CONCURRENTLY (independent lake tables, like the
+    // reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
+    // schedules the jobs from separate threads and fills idle cores;
+    // exactly-once holds per table via the shared commit tag
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def mergeOne(t: TableSpec): Unit = {
+      val pass = passOf(t)
+      val snap = table(t).merge(frameOf(t, pass), t.keyColumns,
+        rootKeyOf(t), commitTag, deleteRootKeys = deletesOf(pass),
+        rowSeqCol = rowSeq)
+      if (t.isRoot) nDel = readDel(snap)
+    }
     try {
-      // Two commit strategies, A/B-measured (BENCH.md r4, steal-controlled
-      // interleaved probe): per-table CONCURRENT merge jobs (default) vs
-      // all tables' deltas in ONE union write job (LakeTable.mergeAll,
-      // `GRAFT_UNION_MERGE=1`). At this table count (7) they are parity at
-      // N and per-table is ~2-4 s/replay faster at 4N (the union's single
-      // exchange serializes behind a stage barrier the concurrent jobs
-      // pipeline through); the union path wins when table count ≫
-      // executor slots or the driver's job-commit path is the bottleneck
-      // (many-table entities, DFS committers) — kept as a first-class
-      // option.
-      val unionMerge = sys.props.getOrElse("graft.union.merge",
-        sys.env.getOrElse("GRAFT_UNION_MERGE", "0")) != "0"
-      if (unionMerge) {
-        val merges = tables.map { t =>
-          val pass = passOf(t)
-          graft.lake.LakeTable.TableMerge(table(t), frameOf(t, pass),
-            t.keyColumns, rootKeyOf(t), deleteRootKeys = deletesOf(pass),
-            rowSeqCol = rowSeq)
-        }
-        val snaps = graft.lake.LakeTable.mergeAll(lakeRoot, merges, commitTag)
-        nDel = snaps.get(rootName).map(readDel).getOrElse(0L)
-      } else {
-        // per-table merges run CONCURRENTLY (independent lake tables, like
-        // the reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
-        // schedules the jobs from separate threads and fills idle cores;
-        // exactly-once holds per table via the shared commit tag
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        def mergeOne(t: TableSpec): Unit = {
-          val pass = passOf(t)
-          val snap = table(t).merge(frameOf(t, pass), t.keyColumns,
-            rootKeyOf(t), commitTag, deleteRootKeys = deletesOf(pass),
-            rowSeqCol = rowSeq)
-          if (t.isRoot) nDel = readDel(snap)
-          ()
-        }
-        Await.result(Future.sequence(tables.map(t => Future(mergeOne(t)))),
-          Duration.Inf)
-      }
+      // wait for EVERY merge before surfacing a failure: a fail-fast wait
+      // would return — and unpersist `clustered` — while sibling merges
+      // still write and publish, and a retry of the same tag could
+      // overlap them
+      val merges = tables.map(t => Future(mergeOne(t)))
+      merges.foreach(Await.ready(_, Duration.Inf))
+      merges.flatMap(_.value).foreach(_.get)
     } finally { if (multiTable) clustered.unpersist(); () }
     (tables.size, nDel)
   }

@@ -333,26 +333,19 @@ final class Fio(conf: Configuration) extends Serializable {
   def delete(p: HPath, recursive: Boolean): Boolean =
     fsOf(p).delete(p, recursive)
 
-  /** Relative path from `base` to `child` (".." up-levels like
-    * java.nio's relativize — multi-table shared commit dirs live BESIDE
-    * the table dir). Resolve back with [[resolveRel]]. */
+  /** Path of `child` relative to `base`, which must contain it. Resolve
+    * back with [[resolveRel]]. */
   def relativize(base: HPath, child: HPath): String = {
-    val b = qualify(base).toUri.getPath.split("/").filter(_.nonEmpty).toList
-    val c = qualify(child).toUri.getPath.split("/").filter(_.nonEmpty).toList
-    val common = b.zip(c).takeWhile { case (x, y) => x == y }.size
-    (List.fill(b.length - common)("..") ++ c.drop(common)).mkString("/")
+    val b = qualify(base).toUri.getPath.stripSuffix("/") + "/"
+    val c = qualify(child).toUri.getPath
+    require(c.startsWith(b), s"$child is not under $base")
+    c.stripPrefix(b)
   }
 
-  /** Resolve a [[relativize]]d path against `base`, normalizing ".."
-    * OURSELVES — a DFS rejects dot-dot components in operation paths. */
+  /** Resolve a [[relativize]]d path against `base`, one component at a
+    * time. */
   def resolveRel(base: HPath, rel: String): HPath =
-    rel.split("/").foldLeft(qualify(base)) { (p, part) =>
-      part match {
-        case "" | "." => p
-        case ".."     => p.getParent
-        case x        => new HPath(p, x)
-      }
-    }
+    rel.split("/").filter(_.nonEmpty).foldLeft(qualify(base))(new HPath(_, _))
 }
 
 object Fio {

@@ -10,27 +10,22 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
 import graft.schema.{JArr, JNum, JObj, JStr, JValue, Json}
 
 /** One data segment: a parquet leaf directory holding exactly one key
-  * bucket, written under one schema version.
+  * bucket, written under one schema version, rows at the top level.
   *
   * @param kind "base" (compacted, one per bucket) or "delta" (append-only
   *             upsert batch — merge-on-read)
   * @param seq  commit sequence the segment was written at (row visibility
   *             order for merge-on-read resolution)
-  * @param sub  non-empty for segments written by a MULTI-TABLE commit
-  *             ([[LakeTable.mergeAll]]): the top-level struct field the
-  *             table's rows live under (the union write nests each table's
-  *             payload in its own struct so per-table schemas never
-  *             collide); "" = plain top-level layout
+  * @param maxSeq largest row-visibility seq in the segment (−1 = unknown,
+  *             pre-r8 segment): recorded at write time from the same
+  *             Observation that counts rows, so [[LakeTable.readChangesSince]]
+  *             can prune cold segments FROM THE MANIFEST instead of
+  *             opening every live footer per feed poll — at 10^10 rows
+  *             the difference between O(changed segments) and O(live
+  *             segments) listings (VERDICT r7 #3).
   */
-/** @param maxSeq largest row-visibility seq in the segment (−1 = unknown,
-  *                pre-r8 segment): recorded at write time from the same
-  *                Observation that counts rows, so [[LakeTable.readChangesSince]]
-  *                can prune cold segments FROM THE MANIFEST instead of
-  *                opening every live footer per feed poll — at 10^10 rows
-  *                the difference between O(changed segments) and O(live
-  *                segments) listings (VERDICT r7 #3). */
 final case class Segment(path: String, bucket: Int, schemaVer: Int,
-    kind: String, seq: Long, sub: String = "", maxSeq: Long = -1L)
+    kind: String, seq: Long, maxSeq: Long = -1L)
 
 /** Per-commit lineage record (the rebuild's answer to the reference's
   * TMPDIR db script audit files, sqlDDL.ts:107-116). */
@@ -120,8 +115,8 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * `file:` paths hit the raw local FS (tests, this sandbox), `hdfs:` /
     * `s3a:` / any `fs.<scheme>.impl` hit the real DFS on a cluster —
     * same code, no porting seam. */
-  private[lake] val fio = new Fio(spark.sessionState.newHadoopConf())
-  private[lake] val dir: HPath = fio.qualify(new HPath(new HPath(root), name))
+  private val fio = new Fio(spark.sessionState.newHadoopConf())
+  private val dir: HPath = fio.qualify(new HPath(new HPath(root), name))
   private val snapDir: HPath = new HPath(dir, "_snap")
   val BucketCol = "_gbucket"
   val SeqCol = "_gseq"
@@ -200,13 +195,21 @@ final class LakeTable(val spark: SparkSession, val root: String,
     val rootKey = o.get("rootKey").collect { case JStr(s) => s }.getOrElse("")
     val segs = arr("segments").map {
       case seg: JObj =>
+        val path = seg.get("path").collect { case JStr(s) => s }.get
+        // a non-empty "sub" marks a segment of the removed single-job
+        // multi-table commit (rows nested under a per-table struct):
+        // reading it as a plain segment would return wrong rows
+        if (seg.get("sub").exists(_ != JStr("")))
+          throw new IllegalStateException(
+            s"table $name snapshot v$v: segment $path was written by the " +
+              "removed multi-table commit path and cannot be read; run " +
+              "compactAll on this table with the previous release first")
         Segment(
-          seg.get("path").collect { case JStr(s) => s }.get,
+          path,
           seg.get("bucket").collect { case JNum(n) => n.toInt }.get,
           seg.get("schemaVer").collect { case JNum(n) => n.toInt }.get,
           seg.get("kind").collect { case JStr(s) => s }.getOrElse("base"),
           seg.get("seq").collect { case JNum(n) => n.toLong }.getOrElse(0L),
-          seg.get("sub").collect { case JStr(s) => s }.getOrElse(""),
           seg.get("maxSeq").collect { case JNum(n) => n.toLong }.getOrElse(-1L))
       case _ => throw new IllegalStateException("bad segment")
     }
@@ -246,7 +249,6 @@ final class LakeTable(val spark: SparkSession, val root: String,
         "schemaVer" -> JNum(seg.schemaVer.toString),
         "kind" -> JStr(seg.kind),
         "seq" -> JNum(seg.seq.toString),
-        "sub" -> JStr(seg.sub),
         "maxSeq" -> JNum(seg.maxSeq.toString))): JValue).toVector),
       "commits" -> JArr(s.commits.map(JStr(_): JValue).toVector),
       "lineage" -> JArr(s.lineage.map(l => JObj(Vector(
@@ -742,23 +744,14 @@ final class LakeTable(val spark: SparkSession, val root: String,
       // per-row seqs persisted from an (already-corrected) resolution.
       def segSeq(seg: Segment): Long =
         if (s.seqDomain == "commit" && seg.kind == "delta") seg.seq else -1L
-      // group by (schema version, nesting, override seq): each group reads
-      // with its written schema, then aligns to the current one (additive
-      // evolution ⇒ cast-safe). Multi-table-commit segments (sub nonEmpty)
-      // carry the table's rows under one struct field — request ONLY that
-      // struct (nested-schema pruning: other tables' null structs are never
-      // read) and unwrap it.
-      val parts = live.groupBy(seg => (seg.schemaVer, seg.sub, segSeq(seg)))
-        .toSeq.sortBy(_._1).map { case ((ver, sub, ovSeq), segs) =>
-          val written = withMeta(s.schemas(ver))
+      // group by (schema version, override seq): each group reads with its
+      // written schema, then aligns to the current one (additive
+      // evolution ⇒ cast-safe)
+      val parts = live.groupBy(seg => (seg.schemaVer, segSeq(seg)))
+        .toSeq.sortBy(_._1).map { case ((ver, ovSeq), segs) =>
           val paths = segs.map(seg => fio.resolveRel(dir, seg.path).toString)
-          val df =
-            if (sub.isEmpty) spark.read.schema(written).parquet(paths: _*)
-            else spark.read
-              .schema(StructType(Seq(
-                org.apache.spark.sql.types.StructField(sub, written))))
-              .parquet(paths: _*)
-              .select(col(s"$sub.*"))
+          val df = spark.read.schema(withMeta(s.schemas(ver)))
+            .parquet(paths: _*)
           val stamped =
             if (ovSeq < 0) df else df.withColumn(SeqCol, lit(ovSeq))
           align(stamped, target)
@@ -946,9 +939,8 @@ final class LakeTable(val spark: SparkSession, val root: String,
 
   /** Build the meta-carrying delta frame of one merge (aligned upserts ∪
     * tombstones, with visibility seq, tombstone marker and bucket column) —
-    * the write-side half of [[merge]], shared with [[LakeTable.mergeAll]]
-    * which unions several tables' frames into one write job. Validates the
-    * seq-domain contract; does NOT touch the snapshot log. */
+    * the write-side half of [[merge]]. Validates the seq-domain contract;
+    * does NOT touch the snapshot log. */
   private[lake] def prepareDelta(s: Snapshot, updates: DataFrame,
       rootKeyCol: String, deleteRootKeys: Option[DataFrame],
       rowSeqCol: Option[String]): DataFrame = {
@@ -1001,8 +993,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
 
   /** Commit already-written delta segments: inline-compact at-cap buckets,
     * then publish the next snapshot — the commit-side half of [[merge]].
-    * `deltaSegs` must be registered leaf dirs of THIS table (any layout —
-    * own-dir or a [[LakeTable.mergeAll]] shared commit via `sub`).
+    * `deltaSegs` must be leaf dirs of THIS table's data dir.
     *
     * Collision-safe under concurrent writers: the publish is
     * create-exclusive, and on losing the race the WHOLE commit derivation
@@ -1228,7 +1219,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
     removed
   }
 
-  private[lake] def listBucketDirs(commitDir: HPath): Seq[(Int, HPath)] =
+  private def listBucketDirs(commitDir: HPath): Seq[(Int, HPath)] =
     fio.list(commitDir)
       .filter(st => st.isDirectory &&
         st.getPath.getName.startsWith(s"$BucketCol="))
@@ -1239,14 +1230,6 @@ final class LakeTable(val spark: SparkSession, val root: String,
 }
 
 object LakeTable {
-
-  /** Test-only fault-injection seam: invoked after EACH table's snapshot
-    * publish inside [[mergeAll]]. A test that throws here simulates a
-    * crash BETWEEN two tables' commits — the torn multi-table state whose
-    * recovery contract is "re-apply the same commitTag: already-committed
-    * tables no-op via their tag, the rest complete". Production code
-    * never sets it. */
-  private[graft] var afterTableCommit: String => Unit = _ => ()
 
   /** Per-write Hadoop options for every lake data write. Scoped per-write
     * (DataFrameWriter options merge into that job's Hadoop conf, which the
@@ -1280,160 +1263,4 @@ object LakeTable {
   private val snapCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Snapshot]()
   private val MaxSnapCache = 512
-
-  /** One table's share of a multi-table commit (see [[mergeAll]]). */
-  final case class TableMerge(
-      table: LakeTable,
-      updates: DataFrame,
-      keyCols: Seq[String],
-      rootKey: String,
-      deleteRootKeys: Option[DataFrame] = None,
-      rowSeqCol: Option[String] = None)
-
-  /** The multi-table partition column of a shared commit dir. */
-  private val TableCol = "_gtable"
-
-  /** Dir (under the lake root) holding multi-table commit data; cleaned by
-    * the engine-level shared vacuum (per-table vacuum never touches it). */
-  val SharedCommitsDir = "_commits"
-
-  private def sanitizeTag(tag: String): String =
-    tag.map(c => if (c.isLetterOrDigit || c == '-' || c == '_') c else '_')
-      .take(48)
-
-  /** MERGE several tables of one document family in ONE Spark job.
-    *
-    * A micro-batch that upserts k tables as k independent merge jobs pays
-    * k× the fixed per-job cost (planning, scheduling rounds, Observation
-    * listener latency, write-committer round) — measured ~4-6 s/batch for
-    * 7 tables on a 2-core executor, the dominant fixed cost of small-N
-    * replay (BENCH.md r3). This path unions every table's prepared delta
-    * frame — each table's payload nested under its own struct column, so
-    * per-table schemas can never collide — and writes once, partitioned by
-    * `(_gtable, _gbucket)`, with ONE Observation carrying all tables'
-    * upsert/delete counts. Segments are then registered per table (each
-    * with `sub` = its struct field; reads prune to exactly that struct),
-    * and each table's snapshot commits with identical semantics to
-    * [[LakeTable.merge]] — same lineage, same exactly-once tags, same
-    * inline compaction of at-cap buckets.
-    *
-    * Recovery: tables that already carry `commitTag` are skipped entirely
-    * (a crashed multi-commit re-runs only the unfinished tables); orphaned
-    * shared-commit leaf dirs are GC'd by the engine's shared vacuum once
-    * no table references into them. */
-  def mergeAll(lakeRoot: String, merges: Seq[TableMerge],
-      commitTag: String): Map[String, Snapshot] = {
-    require(merges.nonEmpty, "mergeAll needs at least one table")
-    require(merges.map(_.table.name).distinct.size == merges.size,
-      "mergeAll: duplicate table in one commit")
-    val t0 = System.nanoTime()
-    val snaps = merges.map(m => (m, m.table.snapshot()))
-    val (done, todo) = snaps.partition(_._2.hasCommit(commitTag))
-    val doneMap = done.map { case (m, s) => m.table.name -> s }.toMap
-    if (todo.isEmpty) return doneMap
-
-    val pending = todo.map { case (m, s) =>
-      (m, s, m.table.prepareDelta(s, m.updates, m.rootKey,
-        m.deleteRootKeys, m.rowSeqCol))
-    }
-    val bucketColName = merges.head.table.BucketCol
-    val delColName = merges.head.table.DelCol
-    def subOf(t: LakeTable) = s"_p_${t.name}"
-
-    // nest each table's (meta-carrying) payload under its own struct and
-    // tag the rows; unionByName fills the other tables' structs with null
-    // (parquet stores those as definition levels only)
-    val wrapped = pending.map { case (m, _, f) =>
-      val payloadCols = f.columns.filterNot(_ == bucketColName)
-      f.select(lit(m.table.name).as(TableCol), col(bucketColName),
-        struct(payloadCols.map(col).toSeq: _*).as(subOf(m.table)))
-    }
-    val union = wrapped.reduce(_.unionByName(_, allowMissingColumns = true))
-
-    // ONE Observation for the whole commit: per-table upsert/delete counts
-    // as conditional aggregates (each table's DelCol is non-null exactly
-    // on its own rows)
-    val seqColName = merges.head.table.SeqCol
-    val obs = org.apache.spark.sql.Observation()
-    val aggs: Seq[Column] = pending.flatMap { case (m, _, _) =>
-      val del = col(subOf(m.table))(delColName)
-      // other tables' rows carry a null struct → null seq: max is
-      // per-table by construction (manifest changefeed pruning)
-      Seq(count(when(del === false, 1)).as(s"nup_${m.table.name}"),
-        count(when(del === true, 1)).as(s"ndel_${m.table.name}"),
-        max(col(subOf(m.table))(seqColName)).as(s"maxseq_${m.table.name}"))
-    }
-    val outDir = new HPath(
-      new HPath(new HPath(lakeRoot), SharedCommitsDir),
-      sanitizeTag(commitTag) + "-" +
-        java.util.UUID.randomUUID().toString.take(8))
-    // same scale-adaptive cap as writeDelta: partitioning is on the
-    // (table, bucket) columns, so the leaf-dir layout is independent of
-    // the partition count
-    val parts = math.max(1, math.min(
-      pending.map { case (m, s, _) => m.table.bucketsOf(s) }.max,
-      merges.head.table.spark.sparkContext.defaultParallelism))
-    union.observe(obs, aggs.head, aggs.tail: _*)
-      .repartition(parts, col(TableCol), col(bucketColName))
-      .write.options(WriteOptions)
-      .partitionBy(TableCol, bucketColName).mode("overwrite")
-      .parquet(outDir.toString)
-    val metrics = obs.get
-
-    // register segments + commit snapshots per table (cheap: JSON writes;
-    // a second Spark job runs only for a table with at-cap buckets)
-    val committed = pending.map { case (m, s, _) =>
-      val t = m.table
-      val tDir = new HPath(outDir, s"$TableCol=${t.name}")
-      val tMaxSeq = metrics.get(s"maxseq_${t.name}")
-        .collect { case l: java.lang.Long => l.longValue() }.getOrElse(-1L)
-      val deltaSegs = t.listBucketDirs(tDir).map { case (b, p) =>
-        Segment(t.fio.relativize(t.dir, p), b, s.schemaVer,
-          "delta", s.version + 1L, subOf(t), maxSeq = tMaxSeq)
-      }
-      val up = metrics.get(s"nup_${t.name}")
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      val del = metrics.get(s"ndel_${t.name}")
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      val committedSnap = t.commitDelta(s, commitTag, m.keyCols, m.rootKey,
-        deltaSegs, up, del, t0,
-        if (m.rowSeqCol.isDefined) "lsn" else "commit")
-      afterTableCommit(t.name) // fault seam: crash between publishes
-      t.name -> committedSnap
-    }.toMap
-    doneMap ++ committed
-  }
-
-  /** GC shared multi-table commit dirs (see [[mergeAll]]): delete
-    * `<lakeRoot>/_commits/<id>` dirs referenced by NO table's current
-    * snapshot and older than `graceMs` (same in-flight-writer guard as
-    * per-table vacuum). Live references are collected from every lake
-    * table under the root. Returns dirs removed. */
-  def vacuumShared(spark: SparkSession, lakeRoot: String,
-      graceMs: Long = 600000L): Int = {
-    val fio = new Fio(spark.sessionState.newHadoopConf())
-    val root = fio.qualify(new HPath(lakeRoot))
-    val commits = new HPath(root, SharedCommitsDir)
-    if (!fio.isDir(commits)) return 0
-    val tables = fio.list(root)
-      .filter(st => st.isDirectory &&
-        !st.getPath.getName.startsWith("_") &&
-        fio.isDir(new HPath(st.getPath, "_snap")))
-    val live: Set[String] = tables.flatMap { st =>
-      val t = new LakeTable(spark, lakeRoot, st.getPath.getName)
-      (t.snapshotOpt().toSeq ++ t.pinnedSnapshots()).flatMap(_.segments)
-        .map(seg => fio.resolveRel(t.dir, seg.path).toString)
-    }.toSet
-    val cutoff = System.currentTimeMillis() - graceMs
-    var removed = 0
-    fio.list(commits).foreach { st =>
-      val cn = fio.qualify(st.getPath).toString
-      if (st.isDirectory && !live.exists(_.startsWith(cn)) &&
-        st.getModificationTime < cutoff) {
-        fio.delete(st.getPath, recursive = true)
-        removed += 1
-      }
-    }
-    removed
-  }
 }

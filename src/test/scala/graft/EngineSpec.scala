@@ -763,4 +763,98 @@ class EngineSpec extends AnyFunSuite {
     assert(Catalog.fromTree(e2.loadRegistry("regrow").get)
       .find(_.isRoot).get.columns.exists(_.sqlName == "EXTRA"))
   }
+
+  test("a failing table merge fails the apply only after every sibling merge has finished") {
+    val (e, _) = newEngine()
+    val batch = Seq((1L, "insert", Fixtures.doc1)).toDF("lsn", "op", "doc")
+    // learn the array child's spec from a throwaway lake, then create that
+    // table here pinned to the COMMIT seq domain: in the apply below its
+    // merge throws at once while the root and five other tables write
+    val (probe, _) = newEngine()
+    probe.applyEvents("testd2s", batch, "probe")
+    val itemSpec = tablesOf(probe, "testd2s").find(_.attrName == "anArrayWithIds").get
+    val rows = probe.table(itemSpec).read()
+    val pinned = e.table(itemSpec)
+    pinned.create(itemSpec.schema, itemSpec.keyColumns,
+      itemSpec.fkColumns.last.sqlName)
+    pinned.merge(spark.createDataFrame(rows.collectAsList(), rows.schema),
+      itemSpec.keyColumns, itemSpec.fkColumns.last.sqlName, "pin")
+    assert(pinned.snapshot().seqDomain == "commit")
+
+    val tracker = spark.sparkContext.statusTracker
+    val activeBefore = tracker.getActiveJobIds().toSet
+    val ex = intercept[Exception] { e.applyEvents("testd2s", batch, "f:0") }
+    // no job of the failed apply outlives it …
+    val lingering = tracker.getActiveJobIds().toSet -- activeBefore
+    def rootCause(t: Throwable): Throwable =
+      if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
+    assert(rootCause(ex).getMessage.contains("seq domain"))
+    assert(lingering.isEmpty, s"jobs still running after the apply threw: $lingering")
+    // … every sibling committed before the error surfaced …
+    val lakes = tablesOf(e, "testd2s").map(t => t.attrName -> e.table(t))
+    assert(lakes.size == 7)
+    lakes.foreach { case (attr, lake) =>
+      assert(lake.snapshot().hasCommit("f:0") == (attr != "anArrayWithIds"), attr)
+    }
+    // … and nothing publishes afterwards
+    val versions = lakes.map { case (a, l) => a -> l.currentVersion() }
+    Thread.sleep(2000)
+    assert(lakes.map { case (a, l) => a -> l.currentVersion() } == versions)
+  }
+
+  test("torn apply: same-tag re-apply heals a crash between publishes") {
+    def ev(lsn: Long, doc: String) = (lsn, "insert", doc)
+    val b1 = Seq(ev(1L, Fixtures.doc1)).toDF("lsn", "op", "doc")
+    val b2 = Seq(ev(2L, Fixtures.doc1.replace("Five Point Zero", "Five Again")),
+      ev(3L, Fixtures.doc2)).toDF("lsn", "op", "doc")
+    val (e, root) = newEngine()
+    e.applyEvents("testd2s", b1, "t:1")
+    e.applyEvents("testd2s", b2, "t:2")
+
+    // the state a crash just before the child's publish leaves: the root
+    // committed t:2, the child's delta dir is written but its snapshot is
+    // not. The child's newest snapshot is never read before it is deleted,
+    // as after a real crash no process holds it.
+    val specs = tablesOf(e, "testd2s")
+    val rootLake = e.table(specs.find(_.isRoot).get)
+    val childSpec = specs.find(_.attrName == "anArrayWithIds").get
+    val child = e.table(childSpec)
+    val vTorn = child.currentVersion()
+    val childDir = java.nio.file.Paths.get(root, childSpec.fullName)
+    java.nio.file.Files.delete(childDir.resolve(f"_snap/v$vTorn%05d.json"))
+    val prior = child.snapshotAt(vTorn - 1)
+    assert(!prior.hasCommit("t:2") && rootLake.snapshot().hasCommit("t:2"))
+    def dataDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(childDir.resolve("data"))
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet
+      finally ls.close()
+    }
+    def dirsOf(s: graft.lake.Snapshot): Set[String] =
+      s.segments.map(_.path.split('/')(1)).toSet
+    val orphans = dataDirs() -- dirsOf(prior)
+    assert(orphans.nonEmpty)
+
+    val vRoot = rootLake.currentVersion()
+    e.applyEvents("testd2s", b2, "t:2")
+    assert(rootLake.currentVersion() == vRoot) // root no-ops on its tag
+    val healed = child.snapshot()
+    assert(healed.version == vTorn && healed.hasCommit("t:2"))
+    assert((dirsOf(healed) intersect orphans).isEmpty)
+
+    val (clean, _) = newEngine()
+    clean.applyEvents("testd2s", b1, "t:1")
+    clean.applyEvents("testd2s", b2, "t:2")
+    def state(eng: Engine): Map[String, Seq[String]] =
+      tablesOf(eng, "testd2s").map { t =>
+        t.attrName -> eng.table(t).read().collect().map(_.toString).toSeq.sorted
+      }.toMap
+    val want = state(clean)
+    assert(want.size == specs.size && want(childSpec.attrName).nonEmpty)
+    assert(state(e) == want)
+
+    assert(orphans.subsetOf(dataDirs()))
+    e.maintain("testd2s", vacuumGraceMs = 0L)
+    assert((dataDirs() intersect orphans).isEmpty)
+    assert(state(e) == want)
+  }
 }

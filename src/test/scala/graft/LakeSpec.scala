@@ -517,4 +517,46 @@ class LakeSpec extends AnyFunSuite {
     // before the oldest retained snapshot → error, never a misread
     intercept[IllegalArgumentException] { t.versionAsOf(0L) }
   }
+
+  test("snapshot format: an empty per-segment sub reads unchanged; a nested-commit sub is refused") {
+    import graft.schema.{JArr, JObj, JStr, JValue, Json}
+    val t = newTable()
+    t.merge(df("a" -> "1", "b" -> "2"), Seq("ID"), "ID", "c1")
+    t.merge(df("a" -> "3"), Seq("ID"), "ID", "c2")
+    def rows() = t.read().collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val want = rows()
+    assert(want == Map("a" -> "3", "b" -> "2"))
+    // republish this head as the next version with every segment carrying
+    // a "sub" field, placed after "seq" as earlier releases wrote it
+    val snapDir = java.nio.file.Paths.get(t.root, t.name, "_snap")
+    val head = Json.parse(java.nio.file.Files.readString(
+      snapDir.resolve(f"v${t.currentVersion()}%05d.json"))).asInstanceOf[JObj]
+    def republish(sub: String): Unit = {
+      val v = t.currentVersion()
+      def withSub(seg: JValue): JValue = seg match {
+        case JObj(fs) =>
+          val at = fs.indexWhere(_._1 == "seq") + 1
+          JObj(fs.take(at) ++ Vector("sub" -> JStr(sub)) ++ fs.drop(at))
+        case other => other
+      }
+      val body = JObj(head.fields.map {
+        case ("segments", JArr(ss)) => "segments" -> JArr(ss.map(withSub))
+        case f => f
+      })
+      java.nio.file.Files.writeString(
+        snapDir.resolve(f"v${v + 1}%05d.json"), Json.render(body))
+    }
+    republish("")
+    assert(java.nio.file.Files.readString(snapDir.resolve(
+      f"v${t.currentVersion()}%05d.json")).contains("\"sub\":\"\""))
+    assert(t.snapshot().segments.nonEmpty)
+    assert(rows() == want)
+    // a segment nested by the removed multi-table commit: refused, never
+    // read as if its rows were top-level
+    republish("_p_T")
+    val ex = intercept[IllegalStateException](rows())
+    assert(ex.getMessage.contains("compactAll"))
+    assert(ex.getMessage.contains(t.snapshotAt(t.currentVersion() - 1)
+      .segments.head.path))
+  }
 }
