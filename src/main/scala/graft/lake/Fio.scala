@@ -79,6 +79,11 @@ final class Fio(conf: Configuration) extends Serializable {
 
   def exists(p: HPath): Boolean = fsOf(p).exists(p)
 
+  /** The file's status, None when it is absent. */
+  def status(p: HPath): Option[FileStatus] =
+    try Some(fsOf(p).getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => None }
+
   def isDir(p: HPath): Boolean = {
     val fs = fsOf(p)
     try fs.getFileStatus(p).isDirectory

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -129,36 +129,54 @@ final class LakeTable(val spark: SparkSession, val root: String,
       n.stripPrefix("v").stripSuffix(".json").toInt
     else -1
 
-  def currentVersion(): Int =
-    fio.list(snapDir).map(st => versionOf(st.getPath.getName))
-      .foldLeft(0)(math.max)
+  private def snapPath(v: Int): HPath = new HPath(snapDir, f"v$v%05d.json")
+
+  /** Published snapshot files as (version, status), one listing. */
+  private def snapshotFiles(): Seq[(Int, FileStatus)] =
+    fio.list(snapDir).map(st => versionOf(st.getPath.getName) -> st)
+      .filter(_._1 > 0)
+
+  private def headFile(): Option[(Int, FileStatus)] =
+    snapshotFiles().maxByOption(_._1)
+
+  def currentVersion(): Int = headFile().fold(0)(_._1)
 
   def exists(): Boolean = currentVersion() > 0
 
   def snapshot(): Snapshot = {
-    val v = currentVersion()
-    require(v > 0, s"lake table $name does not exist at $dir")
-    cachedSnapshot(v)
+    val head = headFile()
+    require(head.isDefined, s"lake table $name does not exist at $dir")
+    val (v, st) = head.get
+    cachedSnapshot(v, st)
   }
 
-  /** Version-keyed parsed-snapshot cache: a published vNNNNN.json is
-    * IMMUTABLE (create-exclusive publish — a version is never rewritten),
-    * so caching its parse can never go stale; freshness comes from
-    * re-reading `currentVersion()` (one dir listing) per call. A
-    * micro-batch reads each table's snapshot several times (merge entry,
-    * bucket layout, commit) across 7+ tables — re-parsing the JSON each
-    * time was measurable driver-serial cost per batch. */
-  private def cachedSnapshot(v: Int): Snapshot = {
+  /** Process-wide parsed-snapshot cache: a micro-batch reads each table's
+    * snapshot several times (merge entry, bucket layout, commit) across
+    * 7+ tables — re-parsing the JSON each time was measurable
+    * driver-serial cost per batch. A published vNNNNN.json is never
+    * rewritten in place, but a table dropped and re-created at the same
+    * path (or a torn publish republished) puts a different file under
+    * the same version, so a hit must match the file's modification time
+    * and length. The callers already hold that status from the listing
+    * that found the version, or pay one stat for it. */
+  private def cachedSnapshot(v: Int, st: FileStatus): Snapshot = {
     val key = (pinKey, v)
     val hit = LakeTable.snapCache.get(key)
-    if (hit != null) hit
+    if (hit != null && hit._1 == st.getModificationTime &&
+      hit._2 == st.getLen) hit._3
     else {
-      val s = readSnapshot(new HPath(snapDir, f"v$v%05d.json"), v)
+      val s = readSnapshot(st.getPath, v)
       if (LakeTable.snapCache.size() >= LakeTable.MaxSnapCache)
         LakeTable.snapCache.clear() // crude, bounded; rebuilt on demand
-      LakeTable.snapCache.put(key, s)
+      LakeTable.snapCache.put(key, (st.getModificationTime, st.getLen, s))
       s
     }
+  }
+
+  private def cachedSnapshot(v: Int): Snapshot = {
+    val p = snapPath(v)
+    cachedSnapshot(v, fio.status(p).getOrElse(
+      throw new java.io.FileNotFoundException(s"snapshot $p does not exist")))
   }
 
   def snapshotOpt(): Option[Snapshot] =
@@ -166,9 +184,13 @@ final class LakeTable(val spark: SparkSession, val root: String,
 
   /** All retained snapshot versions, oldest first (vacuum keeps the
     * newest `keepSnapshots`). */
-  def snapshotVersions(): Seq[Int] =
-    fio.list(snapDir).map(st => versionOf(st.getPath.getName))
-      .filter(_ > 0).sorted
+  def snapshotVersions(): Seq[Int] = snapshotFiles().map(_._1).sorted
+
+  /** All retained snapshots, oldest first, parsed lazily through the
+    * cache (one listing). */
+  def retainedSnapshots(): Iterator[Snapshot] =
+    snapshotFiles().sortBy(_._1).iterator
+      .map { case (v, st) => cachedSnapshot(v, st) }
 
   /** Time-travel: the snapshot at `version` (must still be retained). */
   def snapshotAt(version: Int): Snapshot = cachedSnapshot(version)
@@ -179,7 +201,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * (changefeeds, consistent cuts) check this instead of eating a raw
     * FileNotFoundException from the log read. One `exists` call. */
   def retained(version: Int): Boolean =
-    version >= 1 && fio.exists(new HPath(snapDir, f"v$version%05d.json"))
+    version >= 1 && fio.exists(snapPath(version))
 
   private def readSnapshot(p: HPath, v: Int): Snapshot = {
     val o = Json.parse(fio.readString(p)).asInstanceOf[JObj]
@@ -270,8 +292,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * create-if-absent: local hard-link, DFS tmp-then-rename. */
   private def publishSnapshot(s: Snapshot): Boolean = {
     fio.mkdirs(snapDir)
-    fio.createExclusive(new HPath(snapDir, f"v${s.version}%05d.json"),
-      renderSnapshot(s))
+    fio.createExclusive(snapPath(s.version), renderSnapshot(s))
   }
 
   /** Publish-time commit clock: wall clock monotonized over the PREVIOUS
@@ -337,17 +358,17 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * snapshot — vacuum bounds the time-travel horizon, the same contract
     * as [[readChangesBetween]] (an error, never a silent misread). */
   def versionAsOf(tsMs: Long): Int = {
-    val vs = snapshotVersions()
+    val snaps = retainedSnapshots().toSeq
     var mono = 0L
     var hit = -1
-    vs.foreach { v =>
-      mono = math.max(mono, snapshotAt(v).timeMs)
-      if (mono <= tsMs) hit = v
+    snaps.foreach { s =>
+      mono = math.max(mono, s.timeMs)
+      if (mono <= tsMs) hit = s.version
     }
     require(hit > 0,
       s"$name: no retained snapshot at or before timeMs=$tsMs (oldest " +
-        s"retained: v${vs.headOption.getOrElse(0)} at timeMs=" +
-        s"${vs.headOption.map(snapshotAt(_).timeMs).getOrElse(0L)}; " +
+        s"retained: v${snaps.headOption.fold(0)(_.version)} at timeMs=" +
+        s"${snaps.headOption.fold(0L)(_.timeMs)}; " +
         "vacuum bounds the time-travel horizon)")
     hit
   }
@@ -368,7 +389,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * versions), vacuum-bounded) — no data files are opened. */
   def history(): DataFrame = {
     import org.apache.spark.sql.Row
-    val snaps = snapshotVersions().map(cachedSnapshot)
+    val snaps = retainedSnapshots().toSeq
     val prevs: Seq[Option[Snapshot]] =
       None +: snaps.init.map(Some(_): Option[Snapshot])
     val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
@@ -438,8 +459,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
   /** The still-readable snapshots of every pinned version. */
   def pinnedSnapshots(): Seq[Snapshot] =
     pinnedVersions().toSeq.sorted.flatMap { v =>
-      val p = new HPath(snapDir, f"v$v%05d.json")
-      if (fio.exists(p)) Some(readSnapshot(p, v)) else None
+      fio.status(snapPath(v)).map(cachedSnapshot(v, _))
     }
 
   /** Whether every segment of `s` is still on disk — the verify half of
@@ -1210,12 +1230,9 @@ final class LakeTable(val spark: SparkSession, val root: String,
       }
     }
     // expire old snapshot files (keep the newest K, plus pinned versions)
-    val snaps = fio.list(snapDir).map(_.getPath)
-      .filter(p => versionOf(p.getName) > 0)
-      .sortBy(p => versionOf(p.getName))
-    snaps.dropRight(keepSnapshots)
-      .filterNot(p => pins.contains(versionOf(p.getName)))
-      .foreach(p => fio.delete(p, recursive = false))
+    snapshotFiles().sortBy(_._1).dropRight(keepSnapshots)
+      .filterNot(f => pins.contains(f._1))
+      .foreach(f => fio.delete(f._2.getPath, recursive = false))
     removed
   }
 
@@ -1258,9 +1275,11 @@ object LakeTable {
   private val pinnedVs =
     new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Int]]()
 
-  /** Process-wide parsed-snapshot cache keyed by (table dir, version) —
-    * safe because published snapshot files are immutable. */
+  /** Process-wide parsed-snapshot cache keyed by (table dir, version),
+    * holding the file's (modification time, length) it was parsed from —
+    * see [[LakeTable.cachedSnapshot]]. */
   private val snapCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Snapshot]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Int),
+      (Long, Long, Snapshot)]()
   private val MaxSnapCache = 512
 }

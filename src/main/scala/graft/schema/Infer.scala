@@ -227,43 +227,30 @@ object Infer {
 
   private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
 
-  /** Streaming equivalent of `analyzeDocuments`: drives the attribute tree
-    * straight from Jackson tokens — no JValue AST is ever built. The AST
-    * path allocates ~50 objects per document (builders, vectors, field
-    * tuples, value wrappers); at 10^6-doc micro-batches that allocation
-    * traffic is the dominant GC/bandwidth load of the inference job and
-    * hits the many-core level hardest. Each document observes into a
-    * scratch tree that merges in only on success, so a malformed document
-    * is skipped whole (exactly like the parse-then-analyze path). */
-  def analyzeDocumentsStream(entity: String,
-      docs: Iterator[String],
-      counter: Long => Unit = _ => ()): Attr =
-    analyzeWith[String](entity, docs, jsonFactory.createParser, counter)
-
-  /** [[analyzeDocumentsStream]] over raw UTF-8 BYTES (r8): Jackson parses
-    * UTF-8 natively, so handing it the bytes skips the UTF8String →
-    * java.lang.String decode (a UTF-16 expansion + copy of every
-    * document) the String form pays per doc — pure bandwidth on the
-    * inference job's hot path, which matters most on the many-core level
-    * where the pipeline is memory-bandwidth-bound. Identical semantics:
-    * same tokens, same tree. */
+  /** Streaming equivalent of `analyzeDocuments` over raw UTF-8 BYTES:
+    * drives the attribute tree straight from Jackson tokens — no JValue
+    * AST is ever built. The AST path allocates ~50 objects per document
+    * (builders, vectors, field tuples, value wrappers); at 10^6-doc
+    * micro-batches that allocation traffic is the dominant GC/bandwidth
+    * load of the inference job and hits the many-core level hardest.
+    * Jackson parses UTF-8 natively, so handing it the bytes also skips
+    * the UTF8String → java.lang.String decode (a UTF-16 expansion + copy
+    * of every document). String lengths still count UTF-16 units, as the
+    * AST path does (JS `length`). Each document observes into a scratch
+    * tree that merges in only on success, so a malformed document is
+    * skipped whole (exactly like the parse-then-analyze path). */
   def analyzeDocumentsBytes(entity: String,
       docs: Iterator[Array[Byte]],
-      counter: Long => Unit = _ => ()): Attr =
-    analyzeWith[Array[Byte]](entity, docs, jsonFactory.createParser, counter)
-
-  private def analyzeWith[T](entity: String, docs: Iterator[T],
-      mkParser: T => com.fasterxml.jackson.core.JsonParser,
-      counter: Long => Unit): Attr = {
+      counter: Long => Unit = _ => ()): Attr = {
     val root = new Attr(entity, DType.Arr)
     val elem = root.child(entity)
     var n = 0L
     while (docs.hasNext) {
-      val text = docs.next()
+      val bytes = docs.next()
       val scratch = new Attr(entity)
       val ok =
         try {
-          val p = mkParser(text)
+          val p = jsonFactory.createParser(bytes)
           try { p.nextToken(); observeParsed(scratch, p); true }
           finally p.close()
         } catch { case _: Exception => false }

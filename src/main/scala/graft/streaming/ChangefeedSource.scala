@@ -67,7 +67,10 @@ final class ChangefeedSource(
       }
       require(v >= 1 && v <= table.currentVersion(),
         s"startingVersion $v outside 1..${table.currentVersion()}")
-      fio.writeString(f, v.toString)
+      // atomic: a crash after a plain create would leave an empty file
+      // that fails to parse on every restart
+      fio.mkdirs(f.getParent)
+      fio.writeAtomic(f, v.toString)
       v
     }
   }
@@ -96,12 +99,12 @@ final class ChangefeedSource(
   // offset log can never get ahead of it; a crash between the two writes
   // at worst widens one batch past the rate limit, never replays or
   // skips data.
-  // −1 = unknown (torn hw write: the file exists but does not parse —
-  // fio.writeString is create-then-write, so a crash mid-write can leave
-  // it empty). Unknown disables the rate-limit clamp for the next
-  // getOffset (it reports cur, which is never below the committed
-  // offset), trading one unbounded batch for neither a wedge nor a
-  // replay; the file is rewritten on the next advance.
+  // −1 = unknown: the file exists but does not parse (a checkpoint from
+  // a release that wrote it non-atomically). Unknown disables the
+  // rate-limit clamp for the next getOffset (it reports cur, which is
+  // never below the committed offset), trading one unbounded batch for
+  // neither a wedge nor a replay; the file is rewritten on the next
+  // advance.
   private val hwFile = new HPath(metadataPath, "graft-changefeed-hw")
   @volatile private var lastReported: Long =
     if (!fio.exists(hwFile)) baseVersion

@@ -394,6 +394,30 @@ class ChangefeedSpec extends AnyFunSuite {
       Set("c" -> "insert"), Set("a" -> "update", "b" -> "delete")))
   }
 
+  test("streaming source: the base-version file is published atomically (no create at its final path)") {
+    // a plain create-then-write torn by a crash leaves an empty file that
+    // fails to parse on every restart
+    import scala.jdk.CollectionConverters._
+    val t = newTable()
+    t.merge(df("a" -> "1"), Seq("ID"), "ID", "c1")
+    val dir = SparkTestSession.tmpDir("graft-cfbase-")
+    GraftTestFs.createdPaths.clear()
+    def open() = new graft.streaming.ChangefeedSource(spark.sqlContext,
+      "graftfs:" + dir, t, "latest", None, cdf = false)
+    open().stop()
+    val created = GraftTestFs.createdPaths.asScala.toSeq
+    assert(created.exists(_.contains("graft-changefeed-base")))
+    assert(!created.exists(_.endsWith("/graft-changefeed-base")), created)
+    val base = java.nio.file.Paths.get(dir, "graft-changefeed-base")
+    assert(java.nio.file.Files.readString(base) == "2")
+    // a restart keeps that base after the table moved on: v3 is new
+    t.merge(df("b" -> "1"), Seq("ID"), "ID", "c2")
+    val restarted = open()
+    try assert(restarted.getOffset ==
+      Some(org.apache.spark.sql.execution.streaming.runtime.LongOffset(3L)))
+    finally restarted.stop()
+  }
+
   test("streaming source: additive lake evolution mid-stream — fixed schema until restart") {
     import org.apache.spark.sql.DataFrame
     val root = SparkTestSession.tmpDir("graft-cfevo-")

@@ -764,6 +764,21 @@ class EngineSpec extends AnyFunSuite {
       .find(_.isRoot).get.columns.exists(_.sqlName == "EXTRA"))
   }
 
+  test("a lake root dropped and re-created in one JVM gets its registry written again") {
+    val (e, root) = newEngine()
+    e.load("testd2s", Seq(Fixtures.doc1).toDF("doc"), "doc", "t:1")
+    val v1 = java.nio.file.Paths.get(root, "_registry_testd2s", "v00001.json")
+    assert(java.nio.file.Files.exists(v1))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    // same tree, same process: the cached registry must not stand in for
+    // the file that is gone
+    val e2 = new Engine(spark, root, numBuckets = 8)
+    e2.load("testd2s", Seq(Fixtures.doc1).toDF("doc"), "doc", "t:1")
+    assert(java.nio.file.Files.exists(v1))
+    assert(readTable(e2, "testd2s", "testd2s").collect()
+      .map(_.getAs[String]("ID")).toSeq == Seq("doc-0001"))
+  }
+
   test("a failing table merge fails the apply only after every sibling merge has finished") {
     val (e, _) = newEngine()
     val batch = Seq((1L, "insert", Fixtures.doc1)).toDF("lsn", "op", "doc")
@@ -813,13 +828,15 @@ class EngineSpec extends AnyFunSuite {
 
     // the state a crash just before the child's publish leaves: the root
     // committed t:2, the child's delta dir is written but its snapshot is
-    // not. The child's newest snapshot is never read before it is deleted,
-    // as after a real crash no process holds it.
+    // not. The child's newest snapshot is read (and cached in this
+    // process) before it is deleted: the heal republishes the same
+    // version, and no later read may be served the deleted file's parse.
     val specs = tablesOf(e, "testd2s")
     val rootLake = e.table(specs.find(_.isRoot).get)
     val childSpec = specs.find(_.attrName == "anArrayWithIds").get
     val child = e.table(childSpec)
     val vTorn = child.currentVersion()
+    assert(child.snapshot().hasCommit("t:2"))
     val childDir = java.nio.file.Paths.get(root, childSpec.fullName)
     java.nio.file.Files.delete(childDir.resolve(f"_snap/v$vTorn%05d.json"))
     val prior = child.snapshotAt(vTorn - 1)

@@ -32,8 +32,18 @@ class GraftTestFs extends RawLocalFileSystem {
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
     GraftTestFs.creates.incrementAndGet()
+    GraftTestFs.createdPaths.add(f.toString)
     super.create(f, permission, overwrite, bufferSize, replication,
       blockSize, progress)
+  }
+  // RawLocalFileSystem's permission-less create does not route through
+  // the override above
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    GraftTestFs.creates.incrementAndGet()
+    GraftTestFs.createdPaths.add(f.toString)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
   override def listStatus(f: Path): Array[FileStatus] = {
     GraftTestFs.lists.incrementAndGet()
@@ -59,6 +69,8 @@ object GraftTestFs {
   /** (stage id, path) of every open made inside a Spark task. */
   val taskOpens =
     new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+  /** Path of every `create`, in call order. */
+  val createdPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   def total: Long = opens.get + creates.get + lists.get + renames.get +
     deletes.get
 }

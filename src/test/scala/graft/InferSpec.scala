@@ -158,27 +158,36 @@ class InferSpec extends AnyFunSuite {
   // root maxLength is the per-call doc count — not part of any table/column
   private def stripRootMax(a: Attr): Attr = { a.maxLength = 0; a }
 
+  private def utf8(texts: Seq[String]): Iterator[Array[Byte]] =
+    texts.iterator.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
   test("streaming analyzer ≡ AST analyzer (same tree, byte-identical registry JSON)") {
     forSamples(Gen.listOfN(6, genDoc)) { ds =>
       val texts = ds.map(Json.render)
       val viaAst = Infer.analyzeDocuments("e", ds)
-      val viaStream = Infer.analyzeDocumentsStream("e", texts.iterator)
+      val viaStream = Infer.analyzeDocumentsBytes("e", utf8(texts))
       assert(Json.render(Infer.toJson(stripRootMax(viaStream))) ==
         Json.render(Infer.toJson(stripRootMax(viaAst))))
     }
     // edge shapes the generator does not emit: empty array / empty object /
-    // ai field / null id / malformed doc skipped whole
+    // ai field / null id / malformed doc skipped whole / multi-byte UTF-8
+    // (2-byte accents, a 4-byte non-BMP emoji: maxLength counts UTF-16
+    // units on both paths, JS `length`)
     val edge = Seq(
       """{"id":"a","e":[],"o":{},"ai":3,"xs":[1,"2",true,null]}""",
       """{"id":null,"v":{"ai":null}}""",
       """{"id":"b","broken":""", // malformed: skipped entirely
-      """{"id":"c","n":"12.5","d":"2021-01-02"}""")
+      """{"id":"c","n":"12.5","d":"2021-01-02"}""",
+      "{\"id\":\"d\",\"s\":\"cr\u00e8me br\u00fbl\u00e9e \ud83d\ude00\"}")
     val good = edge.filterNot(_.endsWith("\"broken\":"))
     val viaAst = Infer.analyzeDocuments("e",
       good.flatMap(Json.parseOpt))
-    val viaStream = Infer.analyzeDocumentsStream("e", edge.iterator)
+    val viaStream = Infer.analyzeDocumentsBytes("e", utf8(edge))
     assert(Json.render(Infer.toJson(stripRootMax(viaStream))) ==
       Json.render(Infer.toJson(stripRootMax(viaAst))))
+    // "crème brûlée 😀": 13 BMP chars + a surrogate pair = 15 UTF-16 units
+    // (20 UTF-8 bytes, 14 code points)
+    assert(viaStream.attributes("e").attributes("s").maxLength == 15)
   }
 
   test("merge idempotence: t ⊔ t = t") {

@@ -7,11 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine has one code path per operation: no package under it reads
   * an environment variable or a JVM system property to pick a branch.
-  * Benchmark and verification mains (`Bench`, `BenchExtra`, `Verify`) and
-  * `tools/` sit outside these packages and may. */
+  * The diagnostic mains in `tools/` take their inputs as arguments, so
+  * they are scanned too and cannot grow knobs. Only the benchmark and
+  * verification mains (`Bench`, `BenchExtra`, `Verify`) sit outside these
+  * packages and may read the environment. */
 class NoEnvKnobSpec extends AnyFunSuite {
   private val packages = Seq("engine", "lake", "streaming", "flatten",
-    "schema", "catalog", "cdc", "ops", "functions")
+    "schema", "catalog", "cdc", "ops", "functions", "tools")
   private val knobRead = """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r
 
   test("engine packages read no env variable or system property") {
