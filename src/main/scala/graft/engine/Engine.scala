@@ -85,15 +85,18 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     }
 
   def loadRegistry(entity: String): Option[Attr] =
-    newestRegistry(registryDir(entity))
-      .map(r => Infer.fromJson(Json.parse(r._2)))
+    parseRegistry(newestRegistry(registryDir(entity)))
+
+  private def parseRegistry(raw: Option[(Int, String)]): Option[Attr] =
+    raw.map(r => Infer.fromJson(Json.parse(r._2)))
 
   /** Persist the widened tree as the next registry version — but ONLY when
     * it actually changed (VERDICT r5 #2: a steady-state stream must leave
-    * O(schema-changes) registry files, not O(batches)). The comparison
-    * goes through [[newestRegistry]]'s cache, so a steady-state batch
-    * costs one listing and no read. */
-  private def saveRegistry(entity: String, tree: Attr): Unit = {
+    * O(schema-changes) registry files, not O(batches)). `prior` is the
+    * newest (version, JSON) the caller loaded the registry from, so a
+    * steady-state batch compares against it without listing again. */
+  private def saveRegistry(entity: String, tree: Attr,
+      prior: Option[(Int, String)]): Unit = {
     val d = registryDir(entity)
     // Normalize the root ENVELOPE's maxLength to 0 before persisting: for
     // the root array node it records the max docs one analyzer PARTITION
@@ -105,9 +108,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     val norm = new Attr(tree.name, tree.dataType, 0L)
     tree.attributes.foreach { case (k, v) => norm.attributes.put(k, v) }
     val json = Json.render(Infer.toJson(norm))
-    val prior = newestRegistry(d)
     if (prior.exists(_._2 == json)) return // unchanged tree: no new version
-    fio.mkdirs(d)
     val next = prior.map(_._1).getOrElse(0) + 1
     fio.writeAtomic(new HPath(d, f"v$next%05d.json"), json)
   }
@@ -326,7 +327,8 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     // scan runs in ONE query per batch
     var marked: Option[DataFrame] = None
     try {
-      val prior = loadRegistry(entity)
+      val priorRaw = newestRegistry(registryDir(entity))
+      val prior = parseRegistry(priorRaw)
 
       // incr (index.ts:43-72): skip docs whose (ID, REV) is already in the
       // root table — a MARKER left-join replaces the driver-side revision
@@ -339,8 +341,10 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
           val tables = Catalog.fromTree(tree)
           val rootT = tables.find(_.isRoot).get
           val lake = table(rootT)
-          if (lake.exists() && lake.snapshot().segments.nonEmpty &&
-            lake.snapshot().schema.fieldNames.contains("REV")) {
+          // one snapshot serves the gate, the bucket expression and the
+          // scan: one listing of the root's snapshot log per batch
+          lake.snapshotOpt().filter(s => s.segments.nonEmpty &&
+            s.schema.fieldNames.contains("REV")).foreach { snap =>
             // BUCKET-PRUNED revision scan: the batch can only match (ID,
             // REV) rows in the buckets its own keys hash to — read only
             // those buckets' segments. A full lake.read() here is O(table)
@@ -350,7 +354,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
             // Observation on the job that fills the dedup cache.
             val obs = org.apache.spark.sql.Observation()
             deduped.observe(obs,
-              collect_set(lake.bucketExpr(col("_docid"))).as("touched"))
+              collect_set(lake.bucketExpr(col("_docid"), snap)).as("touched"))
               .write.format("noop").mode("overwrite").save()
             // AQE drops the CollectMetrics node of a provably empty batch:
             // no metrics means no touched bucket
@@ -358,7 +362,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
               case xs: scala.collection.Seq[_] => xs.map(_.asInstanceOf[Int]).toSet
             }.getOrElse(Set.empty)
             if (touched.nonEmpty) {
-              val existing = lake.readBuckets(touched).select(
+              val existing = lake.readBuckets(touched, snap).select(
                 col("ID").as("_docid"), col("REV").as("_docrev"),
                 lit(true).as("_gskip"))
               marked = Some(deduped
@@ -398,7 +402,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
         case (Some(t), _)  => Infer.mergeInto(t, batchTree)
         case (None, _)     => batchTree
       }
-      if (dedupedDocs > 0) saveRegistry(entity, registry)
+      if (dedupedDocs > 0) saveRegistry(entity, registry, priorRaw)
 
       // 3-5: DDL + flatten + per-table merges (shared with the bootstrap
       // fast path)
@@ -836,12 +840,12 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     val revStr = lsn.toString
     val (batchTree, total) = inferFlatRelation(entity, src, idExpr, revStr)
     if (total == 0) return ApplyStats(0, 0, 0, 0, 0)
-    val prior = loadRegistry(entity)
-    val registry = prior match {
+    val priorRaw = newestRegistry(registryDir(entity))
+    val registry = parseRegistry(priorRaw) match {
       case Some(t) => Infer.mergeInto(t, batchTree)
       case None    => batchTree
     }
-    saveRegistry(entity, registry)
+    saveRegistry(entity, registry, priorRaw)
 
     val schema = Flattener.readSchema(registry.attributes(registry.name))
     val srcCols = src.columns.toSet

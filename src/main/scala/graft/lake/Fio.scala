@@ -246,11 +246,14 @@ final class Fio(conf: Configuration) extends Serializable {
     }
   }
 
-  /** Atomic replace (single-writer versioned files — registry publish). */
+  /** Atomic replace (single-writer versioned files — registry publish).
+    * Missing parent dirs are created on every store, as `fs.create`
+    * does on the DFS branch. */
   def writeAtomic(p: HPath, content: String): Unit = {
     val fs = fsOf(p)
     localFile(fs, p) match {
       case Some(f) =>
+        java.nio.file.Files.createDirectories(f.getParentFile.toPath)
         val tmp = f.getParentFile.toPath.resolve(
           ".tmp-" + java.util.UUID.randomUUID().toString.take(8) +
             "-" + f.getName)

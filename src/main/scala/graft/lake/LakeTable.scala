@@ -85,8 +85,9 @@ final case class Snapshot(
   *  - an upsert batch APPENDS one delta segment per touched bucket — no
   *    existing data is read or rewritten on the hot path, so ingest cost
   *    is O(batch), not O(touched table data);
-  *  - reads resolve the newest row per key with one window
-  *    (`row_number over (partition by key order by _gseq desc)`);
+  *  - reads resolve the newest row per key with bucket-local windows
+  *    over a [[LakeScan]] (`row_number over (partition by _gbucket, key
+  *    order by _gseq desc)`), so they plan no exchange;
   *  - deletes and delta buildup (≥ maxDeltas) trigger per-bucket inline
   *    compaction: those buckets are resolved and rewritten as a single
   *    base segment, so read amplification stays bounded;
@@ -96,8 +97,8 @@ final case class Snapshot(
   *
   * At 100 TB: numBuckets scales to thousands; a micro-batch writes ~1 file
   * per touched bucket, compaction amortizes rewrites to 1/maxDeltas of
-  * ingested bytes, and the read window shuffles only on (already
-  * co-bucketed) key columns.
+  * ingested bytes, and a read runs one task per bucket it touches with
+  * no shuffle.
   */
 final class LakeTable(val spark: SparkSession, val root: String,
     val name: String, val numBuckets: Int = 64, val maxDeltas: Int = 8) {
@@ -118,9 +119,9 @@ final class LakeTable(val spark: SparkSession, val root: String,
   private val fio = new Fio(spark.sessionState.newHadoopConf())
   private val dir: HPath = fio.qualify(new HPath(new HPath(root), name))
   private val snapDir: HPath = new HPath(dir, "_snap")
-  val BucketCol = "_gbucket"
-  val SeqCol = "_gseq"
-  val DelCol = "_gdel" // tombstone marker (delete of a root key)
+  val BucketCol = LakeTable.BucketCol
+  val SeqCol = LakeTable.SeqCol
+  val DelCol = LakeTable.DelCol
 
   // ---------- snapshot log ----------
 
@@ -179,8 +180,9 @@ final class LakeTable(val spark: SparkSession, val root: String,
       throw new java.io.FileNotFoundException(s"snapshot $p does not exist")))
   }
 
+  /** The current snapshot, None before [[create]]: one listing. */
   def snapshotOpt(): Option[Snapshot] =
-    if (exists()) Some(snapshot()) else None
+    headFile().map { case (v, st) => cachedSnapshot(v, st) }
 
   /** All retained snapshot versions, oldest first (vacuum keeps the
     * newest `keepSnapshots`). */
@@ -468,15 +470,19 @@ final class LakeTable(val spark: SparkSession, val root: String,
   def materialized(s: Snapshot): Boolean =
     s.segments.forall(seg => fio.exists(fio.resolveRel(dir, seg.path)))
 
-  /** Read only the given buckets (partition pruning for key-local scans). */
-  def readBuckets(buckets: Set[Int]): DataFrame =
-    resolve(snapshot(), seg => buckets.contains(seg.bucket))
+  /** Read only the given buckets of `s` (partition pruning for key-local
+    * scans). */
+  def readBuckets(buckets: Set[Int], s: Snapshot): DataFrame =
+    resolve(s, seg => buckets.contains(seg.bucket))
+
+  def readBuckets(buckets: Set[Int]): DataFrame = readBuckets(buckets, snapshot())
 
   /** The bucket the given root-key VALUE hashes to under the persisted
     * layout — driver-side replica of [[bucketExpr]] (same xxhash64 seed),
     * for predicate→bucket pruning and operational key lookups. */
-  def bucketOfKey(key: String): Int = {
-    val s = snapshot()
+  def bucketOfKey(key: String): Int = bucketOfKey(key, snapshot())
+
+  private def bucketOfKey(key: String, s: Snapshot): Int = {
     val h = org.apache.spark.sql.catalyst.expressions.XxHash64(
       Seq(org.apache.spark.sql.catalyst.expressions.Literal.create(
         org.apache.spark.unsafe.types.UTF8String.fromString(key),
@@ -516,7 +522,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
     }.flatMap(rootKeyValues(_, s.rootKey))
     val base = keys match {
       case Some(vs) =>
-        val buckets = vs.map(bucketOfKey)
+        val buckets = vs.map(bucketOfKey(_, s))
         resolve(s, seg => buckets.contains(seg.bucket))
       case None => resolve(s, _ => true)
     }
@@ -560,24 +566,28 @@ final class LakeTable(val spark: SparkSession, val root: String,
     // pre-upgrade segment) stays in the scan — conservative, never wrong.
     val raw = readRaw(s, seg => seg.maxSeq < 0L || seg.maxSeq > horizonSeq)
       .filter(col(SeqCol) > horizonSeq)
-    val live = resolveRows(raw, s.keyCols, s.rootKey)
-      .withColumn("_change_type", lit("upsert"))
-    // net deletes: newest post-horizon tombstone per root key, minus root
-    // keys that a newer live row re-created
-    val deadSeq = raw.filter(col(DelCol) === true)
-      .groupBy(col(s.rootKey)).agg(max(col(SeqCol)).as(SeqCol))
-    val liveMax = raw.filter(col(DelCol).isNull || !col(DelCol))
-      .groupBy(col(s.rootKey)).agg(max(col(SeqCol)).as("_livemax"))
-    val dead = align(
-      deadSeq.join(liveMax, Seq(s.rootKey), "left")
-        .filter(col("_livemax").isNull || col(SeqCol) > col("_livemax"))
-        .drop("_livemax"),
-      s.schema.add(SeqCol, LongType))
-      .withColumn("_change_type", lit("delete"))
-    live.unionByName(dead)
-      .withColumnRenamed(SeqCol, "_change_seq")
-      .select((s.schema.fieldNames.toSeq.map(col) ++
-        Seq(col("_change_type"), col("_change_seq"))): _*)
+    // one pass of bucket-local windows: per root key the newest
+    // post-horizon tombstone and live seq, then one row per key — a live
+    // row newer than that tombstone (the newest such wins), or the
+    // tombstone itself when no live row re-created the key after it
+    val rest = s.keyCols.filterNot(_ == s.rootKey)
+    val dead = col(DelCol) <=> true
+    val byRoot = Window.partitionBy(col(BucketCol), col(s.rootKey))
+      .orderBy((rest.map(col) :+ col(DelCol)) :+ col(SeqCol).desc: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val byKey = Window
+      .partitionBy(((BucketCol +: s.rootKey +: rest) :+ DelCol).map(col): _*)
+      .orderBy(col(SeqCol).desc)
+    raw.withColumn("_gdelseq", max(when(dead, col(SeqCol))).over(byRoot))
+      .withColumn("_glivemax", max(when(!dead, col(SeqCol))).over(byRoot))
+      .filter(when(dead, col(SeqCol) === col("_gdelseq") &&
+          (col("_glivemax").isNull || col(SeqCol) > col("_glivemax")))
+        .otherwise(col("_gdelseq").isNull || col(SeqCol) > col("_gdelseq")))
+      .withColumn("_grn", row_number().over(byKey))
+      .filter(col("_grn") === 1)
+      .select((s.schema.fieldNames.toSeq.map(col) ++ Seq(
+        when(dead, lit("delete")).otherwise(lit("upsert")).as("_change_type"),
+        col(SeqCol).as("_change_seq"))): _*)
   }
 
   /** Classified row-level diff of two snapshot VERSIONS (Delta CDF /
@@ -590,20 +600,19 @@ final class LakeTable(val spark: SparkSession, val root: String,
     *
     * Scale shape: only buckets whose SEGMENT SET differs between the two
     * snapshots are read (any data change replaces the bucket's segment
-    * list; maintenance-only rewrites add no-op diff work), resolved at
-    * both versions and full-outer-joined on the merge key — cost tracks
-    * touched buckets, not the table. The pre-side is aligned to `toV`'s
-    * schema, so the feed crosses schema-evolution boundaries (new
-    * columns read as null pre-images).
+    * list; maintenance-only rewrites add no-op diff work), both versions
+    * in one bucket-partitioned scan — cost tracks touched buckets, not
+    * the table. The pre-side is aligned to `toV`'s schema, so the feed
+    * crosses schema-evolution boundaries (new columns read as null
+    * pre-images).
     *
     * `fromV` must still be materialized — [[pinSnapshot]] it for feeds
     * held across queries; a vacuumed horizon throws here rather than
     * misreading (Iceberg's expired-snapshot incremental-read contract). */
   def readChangesBetween(fromV: Int, toV: Int): DataFrame =
     changedPairs(fromV, toV) match {
-      case None => emptyDf(cachedSnapshot(toV).schema
-        .add("_change_type", StringType))
-      case Some((joined, cols)) =>
+      case (to, None) => emptyDf(to.schema.add("_change_type", StringType))
+      case (_, Some((joined, cols))) =>
         joined
           .withColumn("_row", coalesce(col("_post"), col("_pre")))
           .withColumn("_change_type",
@@ -624,9 +633,8 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * bucket-pruned cost shape; the pair explode is a per-row map. */
   def readChangesBetweenCdf(fromV: Int, toV: Int): DataFrame =
     changedPairs(fromV, toV) match {
-      case None => emptyDf(cachedSnapshot(toV).schema
-        .add("_change_type", StringType))
-      case Some((joined, cols)) =>
+      case (to, None) => emptyDf(to.schema.add("_change_type", StringType))
+      case (_, Some((joined, cols))) =>
         joined
           .select(explode(
             when(col("_pre").isNull, array(
@@ -642,57 +650,63 @@ final class LakeTable(val spark: SparkSession, val root: String,
             col("_e.ct").as("_change_type")): _*)
     }
 
-  /** Shared changefeed core: full-outer join of the two snapshots'
-    * resolved states over the buckets whose segment set differs, rows
-    * limited to real changes, as (`_pre`, `_post`) image structs plus
-    * the `toV`-schema column list. None = empty window. */
+  /** Shared changefeed core: `toV`'s snapshot and, unless the window is
+    * empty, the changed keys as (`_pre`, `_post`) image structs plus the
+    * `toV`-schema column list. One scan reads the touched buckets'
+    * segments of both versions, each tagged with its side; each side is
+    * resolved by the bucket-local windows, then the two sides of a key
+    * meet in one aggregate over (bucket, key) — no join, no exchange. */
   private def changedPairs(fromV: Int, toV: Int)
-      : Option[(DataFrame, Seq[String])] = {
-    val cur = currentVersion()
+      : (Snapshot, Option[(DataFrame, Seq[String])]) = {
+    // one listing gives the head, the retention check and both statuses
+    val files = snapshotFiles().toMap
+    val cur = if (files.isEmpty) 0 else files.keys.max
     require(fromV >= 1 && fromV <= toV && toV <= cur,
       s"table $name: changefeed window [$fromV, $toV] outside 1..$cur")
     // friendly vacuumed-horizon errors for BOTH failure shapes: snapshot
     // JSON gone (would be a raw FileNotFoundException from the log read)
-    // and JSON present but segments GC'd (materialized check below)
+    // and JSON present but segments GC'd (checked below)
     def gone(v: Int): Nothing = throw new IllegalArgumentException(
       s"table $name: snapshot v$v was vacuumed — pin the feed horizon " +
         "(pinSnapshot), raise keepSnapshots, or restart the feed from a " +
-        s"retained version (oldest retained: v${snapshotVersions().headOption.getOrElse(cur)})")
-    if (!retained(toV)) gone(toV)
-    val to = cachedSnapshot(toV)
-    if (fromV == toV) return None
-    if (!retained(fromV)) gone(fromV)
-    val from = cachedSnapshot(fromV)
-    if (!materialized(from)) gone(fromV)
+        s"retained version (oldest retained: v${files.keys.min})")
+    val to = cachedSnapshot(toV, files.getOrElse(toV, gone(toV)))
+    if (fromV == toV) return (to, None)
+    val from = cachedSnapshot(fromV, files.getOrElse(fromV, gone(fromV)))
     def byBucket(s: Snapshot): Map[Int, Set[String]] =
       s.segments.groupBy(_.bucket).map { case (b, xs) =>
         b -> xs.map(_.path).toSet }
     val fb = byBucket(from); val tb = byBucket(to)
     val touched = (fb.keySet ++ tb.keySet)
       .filter(b => fb.get(b) != tb.get(b))
+    val pre = from.segments.filter(seg => touched(seg.bucket))
+    val post = to.segments.filter(seg => touched(seg.bucket))
+    // the horizon is the side vacuum may have collected: one stat per
+    // segment of it the diff reads
+    if (!pre.forall(seg => fio.exists(fio.resolveRel(dir, seg.path))))
+      gone(fromV)
+    val raw = scan(withMeta(to.schema),
+      pre.map((_, 0, from)) ++ post.map((_, 1, to)))
     val cols = to.schema.fieldNames.toSeq
-    def pack(df: DataFrame, tag: String): DataFrame =
-      df.select((to.keyCols.map(col) :+
-        struct(cols.map(col): _*).as(tag)): _*)
-    val post = pack(resolve(to, seg => touched(seg.bucket)), "_post")
-    val joined =
-      if (from.segments.isEmpty)
-        // EMPTY-from fast path (r8): a feed from a pre-data snapshot (the
-        // backfill fold of every materialized view) is all inserts — the
-        // full-outer join against a provably empty side still planned as
-        // a sort-merge join, shuffling and sorting the whole to-state for
-        // nothing (full outer cannot broadcast). A typed null _pre yields
-        // the identical frame with zero exchanges (guide §2.4).
-        post.withColumn("_pre",
-          lit(null).cast(StructType(cols.map(c => to.schema(c)))))
-      else {
-        val pre = pack(align(resolve(from, seg => touched(seg.bucket)),
-          to.schema), "_pre")
-        post.join(pre, to.keyCols.toSeq, "full_outer")
+    val img = struct(cols.map(col): _*)
+    val keys = (BucketCol +: to.rootKey +: to.keyCols.filterNot(_ == to.rootKey))
+      .map(col)
+    val resolved = resolveRows(raw, to.keyCols, to.rootKey,
+      Some(LakeScan.SideCol))
+    val side = col(LakeScan.SideCol)
+    val pairs =
+      if (pre.isEmpty)
+        // a window from an empty pre-state (the backfill fold of every
+        // materialized view) is all inserts: no pairing needed
+        resolved.select(img.as("_post"),
+          lit(null).cast(StructType(cols.map(c => to.schema(c)))).as("_pre"))
+      else
+        resolved.groupBy(keys: _*).agg(
+          first(when(side === 0, img), ignoreNulls = true).as("_pre"),
+          first(when(side === 1, img), ignoreNulls = true).as("_post"))
           .filter(col("_post").isNull || col("_pre").isNull ||
             !(col("_post") <=> col("_pre")))
-      }
-    Some((joined, cols))
+    (to, Some((pairs.select("_pre", "_post"), cols)))
   }
 
   /** Root-key values `e` constrains the scan to, or None ("all keys").
@@ -741,94 +755,115 @@ final class LakeTable(val spark: SparkSession, val root: String,
   }
 
   private def emptyDf(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   private def withMeta(t: StructType): StructType =
     t.add(SeqCol, LongType).add(DelCol,
       org.apache.spark.sql.types.BooleanType)
 
-  /** Raw segment union (with visibility-seq + tombstone meta), aligned. */
+  /** Raw scan (with visibility-seq, tombstone and bucket columns). */
   private def readRaw(s: Snapshot, keep: Segment => Boolean): DataFrame =
     readSegments(s, s.segments.filter(keep))
 
-  private def readSegments(s: Snapshot, live: Seq[Segment]): DataFrame = {
-    val target = withMeta(s.schema)
-    if (live.isEmpty) emptyDf(target)
-    else {
-      // Commit-domain DELTA rows take their visibility seq from the SEGMENT
-      // metadata, not the parquet: a collision-retried commit re-stamps only
-      // the segment seq (the files keep the losing attempt's stale value),
-      // and all rows of one commit-domain delta share one seq by
-      // construction — so the committed seq is authoritative (ADVICE r5).
-      // Lsn-domain rows keep their per-row event seq; base segments carry
-      // per-row seqs persisted from an (already-corrected) resolution.
-      def segSeq(seg: Segment): Long =
-        if (s.seqDomain == "commit" && seg.kind == "delta") seg.seq else -1L
-      // group by (schema version, override seq): each group reads with its
-      // written schema, then aligns to the current one (additive
-      // evolution ⇒ cast-safe)
-      val parts = live.groupBy(seg => (seg.schemaVer, segSeq(seg)))
-        .toSeq.sortBy(_._1).map { case ((ver, ovSeq), segs) =>
-          val paths = segs.map(seg => fio.resolveRel(dir, seg.path).toString)
-          val df = spark.read.schema(withMeta(s.schemas(ver)))
-            .parquet(paths: _*)
-          val stamped =
-            if (ovSeq < 0) df else df.withColumn(SeqCol, lit(ovSeq))
-          align(stamped, target)
-        }
-      parts.reduce(_ unionByName _)
-    }
-  }
+  private def readSegments(s: Snapshot, segs: Seq[Segment]): DataFrame =
+    scan(withMeta(s.schema), segs.map((_, 0, s)))
 
-  /** Merge-on-read resolution over a raw (meta-carrying) frame: newest row
-    * per key, then drop rows shadowed by a newer root-key tombstone.
-    * Returns winners WITH SeqCol (caller drops or persists it). */
+  /** The [[LakeScan]] over `inputs` — each a segment, its side, and the
+    * snapshot whose schema that side resolves at — aligned to `target`.
+    *
+    * Commit-domain DELTA rows take their visibility seq from the SEGMENT
+    * metadata, not the parquet: a collision-retried commit re-stamps only
+    * the segment seq (the files keep the losing attempt's stale value),
+    * and all rows of one commit-domain delta share one seq by
+    * construction — so the committed seq is authoritative (ADVICE r5).
+    * Lsn-domain rows keep their per-row event seq; base segments carry
+    * per-row seqs persisted from an (already-corrected) resolution. */
+  private def scan(target: StructType,
+      inputs: Seq[(Segment, Int, Snapshot)]): DataFrame =
+    LakeScan.frame(spark, target, inputs.map { case (seg, side, snap) =>
+      val d = fio.resolveRel(dir, seg.path)
+      // each side's rows pass through that side's schema on the way to
+      // the target, as a read of that snapshot would cast them
+      val at = withMeta(snap.schema)
+      ScanSource(seg.bucket, d, dataFiles(d, seg),
+        withMeta(snap.schemas(seg.schemaVer)),
+        if (at == target) Seq(target) else Seq(at, target),
+        if (snap.seqDomain == "commit" && seg.kind == "delta") seg.seq else -1L,
+        side)
+    })
+
+  /** The data files of segment dir `d`, listed here in place of Spark's
+    * file index. A segment dir is written once under a unique name and
+    * never changes until vacuum deletes it, so its listing is cached
+    * process-wide: a dir is listed once, not once per read. A dir that
+    * lists empty has been vacuumed. */
+  private def dataFiles(d: HPath, seg: Segment): Seq[FileStatus] =
+    Option(LakeTable.listings.get(d.toString)).getOrElse {
+      val ls = fio.list(d).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.getName)
+      if (ls.isEmpty) throw new java.io.FileNotFoundException(
+        s"table $name: segment ${seg.path} has no data files (vacuumed?)")
+      if (LakeTable.listings.size() >= LakeTable.MaxListings)
+        LakeTable.listings.clear() // crude, bounded; rebuilt on demand
+      LakeTable.listings.put(d.toString, ls)
+      ls
+    }
+
+  /** Merge-on-read resolution over a raw scan: the newest row per key
+    * wins unless its root key's newest tombstone is at or above it. Both
+    * are windows over the bucket — a key's rows all sit in its root key's
+    * bucket, so neither plans an exchange — sharing one sort: (bucket,
+    * root key, other key columns, side, seq desc). For a root table (key
+    * = root key) the two windows have one spec and run as one operator;
+    * a tombstone there shares its key's row numbering, which is why a
+    * winner must also be live. With `side`, each side resolves on its
+    * own. Returns the winners with the helper columns; callers select
+    * what they keep. */
   private def resolveRows(raw: DataFrame, keyCols: Seq[String],
-      rootKey: String): DataFrame = {
-    val toms = raw.filter(col(DelCol) === true)
-      .groupBy(col(rootKey)).agg(max(col(SeqCol)).as("_gdelseq"))
-    val w = Window.partitionBy(keyCols.map(col): _*)
+      rootKey: String, side: Option[String] = None): DataFrame = {
+    val rest = keyCols.filterNot(_ == rootKey)
+    val byRoot = Window.partitionBy(col(BucketCol), col(rootKey))
+      .orderBy((rest ++ side).map(col) :+ col(SeqCol).desc: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    def tombSeq(on: Column): Column =
+      max(when(col(DelCol) <=> true && on, col(SeqCol))).over(byRoot)
+    val delSeq = side match {
+      case None     => tombSeq(lit(true))
+      case Some(sd) =>
+        when(col(sd) === 0, tombSeq(col(sd) === 0))
+          .otherwise(tombSeq(col(sd) =!= 0))
+    }
+    val byKey = Window
+      .partitionBy((BucketCol +: rootKey +: rest ++: side.toSeq).map(col): _*)
       .orderBy(col(SeqCol).desc)
-    raw.filter(col(DelCol).isNull || !col(DelCol))
-      .withColumn("_grn", row_number().over(w))
-      .filter(col("_grn") === 1).drop("_grn")
-      .join(toms, Seq(rootKey), "left")
-      .filter(col("_gdelseq").isNull || col(SeqCol) > col("_gdelseq"))
-      .drop("_gdelseq", DelCol)
+    raw.select(col("*"), delSeq.as("_gdelseq"),
+        row_number().over(byKey).as("_grn"))
+      .filter(col("_grn") === 1 && !(col(DelCol) <=> true) &&
+        (col("_gdelseq").isNull || col(SeqCol) > col("_gdelseq")))
   }
 
-  /** Merge-on-read resolution: one window on the (co-bucketed) key +
-    * tombstone anti-filter. Buckets holding a single base segment are
-    * already resolved and skip both entirely — steady-state reads after
-    * compaction pay no shuffle for those buckets. */
+  /** Merge-on-read resolution of the segments `keep` selects. Buckets
+    * holding a single base segment are already resolved and skip the
+    * windows (a codegen'd tombstone filter only); the rest resolve in the
+    * scan's own stage. */
   private def resolve(s: Snapshot, keep: Segment => Boolean): DataFrame = {
-    val perBucket = s.segments.filter(keep).groupBy(_.bucket)
-    val (clean, dirty) = perBucket.partition { case (_, segs) =>
-      segs.size == 1 && segs.head.kind == "base"
-    }
-    val cleanSegs = clean.values.flatten.toSet
-    val dirtySegs = dirty.values.flatten.toSet
-    val cleanDf =
-      if (cleanSegs.isEmpty) None
-      // compacted bases carry retained tombstone rows (out-of-order guard
-      // across compaction) — a codegen'd filter, still no shuffle
-      else Some(readRaw(s, cleanSegs.contains)
-        .filter(col(DelCol).isNull || !col(DelCol)).drop(SeqCol, DelCol))
-    val dirtyDf =
-      if (dirtySegs.isEmpty) None
-      else Some(resolveRows(readRaw(s, dirtySegs.contains), s.keyCols,
-        s.rootKey).drop(SeqCol))
-    val combined = (cleanDf, dirtyDf) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case (None, None)       => emptyDf(s.schema)
-    }
-    // normalize column ORDER to the schema: the dirty path's tombstone
-    // join (USING rootKey) moves the root-key column to the front, so a
-    // child table (rootKey = FK, not first) would read FK-first —
-    // positional consumers and the clean/dirty union need schema order
-    combined.select(s.schema.fieldNames.toSeq.map(col): _*)
+    val segs = s.segments.filter(keep)
+    val clean = segs.groupBy(_.bucket).collect {
+      case (b, Seq(seg)) if seg.kind == "base" => b }.toSet
+    val (cleanSegs, dirtySegs) = segs.partition(seg => clean(seg.bucket))
+    // compacted bases carry retained tombstone rows (out-of-order guard
+    // across compaction)
+    val parts = Seq(
+      Option.when(cleanSegs.nonEmpty)(readSegments(s, cleanSegs)
+        .filter(!(col(DelCol) <=> true))),
+      Option.when(dirtySegs.nonEmpty)(resolveRows(readSegments(s, dirtySegs),
+        s.keyCols, s.rootKey))).flatten
+    val cols = s.schema.fieldNames.toSeq.map(col)
+    parts.map(_.select(cols: _*)).reduceOption(_ unionByName _)
+      .getOrElse(emptyDf(s.schema))
   }
 
   // ---------- merge (the reference's MERGE INTO, set-oriented MoR) ----------
@@ -842,8 +877,11 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * all tables of one document family into the same bucket. Uses the
     * CURRENT snapshot's persisted count (an opener constructed with a
     * different default must keep hashing the way the data is laid out). */
-  def bucketExpr(rootKey: Column): Column =
-    bucketExpr(rootKey, bucketsOf(snapshot()))
+  def bucketExpr(rootKey: Column): Column = bucketExpr(rootKey, snapshot())
+
+  /** [[bucketExpr]] under the layout of `s`. */
+  def bucketExpr(rootKey: Column, s: Snapshot): Column =
+    bucketExpr(rootKey, bucketsOf(s))
 
   private def bucketExpr(rootKey: Column, n: Int): Column =
     pmod(xxhash64(rootKey), lit(n)).cast(IntegerType)
@@ -1086,12 +1124,12 @@ final class LakeTable(val spark: SparkSession, val root: String,
       keyCols: Seq[String], rootKeyCol: String, nBuckets: Int,
       expireTombstonesBelow: Option[Long]): Seq[Segment] = {
     val metaTarget = withMeta(s.schema)
-    val winners = resolveRows(raw, keyCols, rootKeyCol)
-      .withColumn(DelCol, lit(false))
+    val winners = align(resolveRows(raw, keyCols, rootKeyCol)
+      .withColumn(DelCol, lit(false)), metaTarget)
     val horizon = expireTombstonesBelow.getOrElse(Long.MinValue)
     val toms = align(
       raw.filter(col(DelCol) === true)
-        .groupBy(col(rootKeyCol))
+        .groupBy(col(BucketCol), col(rootKeyCol))
         .agg(max(col(SeqCol)).as(SeqCol))
         .filter(col(SeqCol) >= horizon)
         .withColumn(DelCol, lit(true)), metaTarget)
@@ -1225,6 +1263,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
         if (nowPins != pins) { pins = nowPins; live = liveSet() }
         if (!live.contains(c)) {
           fio.delete(c, recursive = true)
+          LakeTable.listings.keySet.removeIf(_.startsWith(s"$c/"))
           removed += 1
         }
       }
@@ -1247,6 +1286,9 @@ final class LakeTable(val spark: SparkSession, val root: String,
 }
 
 object LakeTable {
+  val BucketCol = LakeScan.BucketCol
+  val SeqCol = "_gseq"
+  val DelCol = "_gdel" // tombstone marker (delete of a root key)
 
   /** Per-write Hadoop options for every lake data write. Scoped per-write
     * (DataFrameWriter options merge into that job's Hadoop conf, which the
@@ -1282,4 +1324,10 @@ object LakeTable {
     new java.util.concurrent.ConcurrentHashMap[(String, Int),
       (Long, Long, Snapshot)]()
   private val MaxSnapCache = 512
+
+  /** Process-wide data-file listings of segment dirs, keyed by the
+    * qualified dir — see [[LakeTable.dataFiles]]. */
+  private val listings =
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[FileStatus]]()
+  private val MaxListings = 8192
 }

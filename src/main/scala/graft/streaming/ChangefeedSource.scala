@@ -69,7 +69,6 @@ final class ChangefeedSource(
         s"startingVersion $v outside 1..${table.currentVersion()}")
       // atomic: a crash after a plain create would leave an empty file
       // that fails to parse on every restart
-      fio.mkdirs(f.getParent)
       fio.writeAtomic(f, v.toString)
       v
     }

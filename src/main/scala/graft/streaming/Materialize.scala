@@ -125,7 +125,6 @@ object Materialize {
       else {
         val planned = fio.list(new org.apache.hadoop.fs.Path(ckpt, "offsets"))
           .map(_.getPath.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
-        fio.mkdirs(ckpt)
         if (planned.nonEmpty)
           fio.writeAtomic(legacyFile, planned.map(_.toLong).max.toString)
         val id = java.util.UUID.randomUUID().toString.take(12)

@@ -1,0 +1,153 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.catalog.Catalog
+import graft.engine.Engine
+import graft.lake.LakeTable
+
+/** Read plan shape: merge-on-read resolution and changefeed diffs run as
+  * windows and aggregates over the bucket-partitioned lake scan, so a
+  * lookup, the seq-space feed, the version diffs, time travel and the
+  * incremental revision scan plan no shuffle exchange; no lake read goes
+  * through Spark's own file index; the revision join still broadcasts. */
+class ReadShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  private lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  /** Executed plans of the queries `body` runs. */
+  private def plans(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = { seen.add(qe.executedPlan); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  private def shuffles(p: SparkPlan): Int =
+    collect(p) { case x: ShuffleExchangeLike => x }.size
+
+  private def lakeScans(p: SparkPlan): Seq[BatchScanExec] =
+    collect(p) { case b: BatchScanExec => b }
+      .filter(_.scan.getClass.getName.startsWith("graft.lake.LakeScan"))
+
+  private def fileIndexScans(p: SparkPlan): Seq[FileSourceScanExec] =
+    collect(p) { case f: FileSourceScanExec => f }
+      .filter(_.relation.location.isInstanceOf[InMemoryFileIndex])
+
+  /** A table with a compacted base, deltas on top, and deletes. */
+  private def lake(): (LakeTable, Int, Int) = {
+    val t = new LakeTable(spark, SparkTestSession.tmpDir("graft-readshape-"),
+      "T", numBuckets = 4)
+    t.create(new org.apache.spark.sql.types.StructType()
+      .add("ID", "string", nullable = false).add("V", "string"),
+      Seq("ID"), "ID")
+    t.merge((0 until 40).map(i => (s"k$i", "a", i.toLong)).toDF("ID", "V", "lsn"),
+      Seq("ID"), "ID", "c1", rowSeqCol = Some("lsn"))
+    t.compactAll("compact")
+    val v1 = t.currentVersion()
+    t.merge((0 until 10).map(i => (s"k$i", "b", 100L + i)).toDF("ID", "V", "lsn"),
+      Seq("ID"), "ID", "c2", rowSeqCol = Some("lsn"),
+      deleteRootKeys = Some(Seq(("k20", 200L)).toDF("ID", "lsn")))
+    t.merge(Seq(("k1", "c", 300L)).toDF("ID", "V", "lsn"), Seq("ID"), "ID",
+      "c3", rowSeqCol = Some("lsn"))
+    (t, v1, t.currentVersion())
+  }
+
+  private def assertNoResolutionShuffle(what: String, df: => DataFrame): Unit = {
+    val ps = plans(df.collect())
+    assert(ps.nonEmpty, what)
+    ps.foreach { p =>
+      assert(shuffles(p) == 0, s"$what planned a shuffle:\n$p")
+      assert(lakeScans(p).nonEmpty, s"$what read no lake scan:\n$p")
+      assert(fileIndexScans(p).isEmpty, s"$what listed through Spark:\n$p")
+    }
+  }
+
+  test("lookup, feeds, diffs and time travel plan no shuffle exchange " +
+      "and no InMemoryFileIndex") {
+    val (t, v1, v2) = lake()
+    assertNoResolutionShuffle("lookup", t.readWhere(col("ID") === "k1"))
+    assertNoResolutionShuffle("full read", t.read())
+    assertNoResolutionShuffle("readChangesSince", t.readChangesSince(50L))
+    assertNoResolutionShuffle("readChangesBetween",
+      t.readChangesBetween(v1, v2))
+    assertNoResolutionShuffle("readChangesBetweenCdf",
+      t.readChangesBetweenCdf(v1, v2))
+    assertNoResolutionShuffle("readChangesBetween from empty",
+      t.readChangesBetween(1, v2))
+    assertNoResolutionShuffle("readAsOf", t.readAsOf(t.snapshot().timeMs))
+    // the answers are the resolved ones
+    assert(t.readWhere(col("ID") === "k1").collect().map(_.getString(1))
+      .toSeq == Seq("c"))
+    assert(t.readWhere(col("ID") === "k20").isEmpty)
+  }
+
+  test("a point lookup runs as one job of one stage") {
+    val (t, _, _) = lake()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
+      }
+    }
+    val lookup = t.readWhere(col("ID") === "k3").select("V")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(lookup.collect().map(_.getString(0)).toSeq == Seq("b"))
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stages.get == 1, s"lookup ran ${stages.get} stages")
+  }
+
+  test("incr: the revision scan's lake side plans no exchange and the " +
+      "revision join broadcasts") {
+    val root = SparkTestSession.tmpDir("graft-readshape-incr-")
+    val e = new Engine(spark, root, numBuckets = 8)
+    def doc(i: Int, rev: Int) =
+      s"""{"id":"k-$i","rev":"$rev","items":[{"id":"a$i","q":$rev}]}"""
+    e.applyEvents("ent", (0 until 30).map(i => (i.toLong, "insert", doc(i, 1)))
+      .toDF("lsn", "op", "doc"), "b:1", incremental = true)
+    e.applyEvents("ent", (0 until 10).map(i => (100L + i, "update", doc(i, 2)))
+      .toDF("lsn", "op", "doc"), "b:2", incremental = true)
+    // the apply's table writes read the revision-marked cache: its
+    // cached plan holds the revision join
+    val ps = plans(e.applyEvents("ent", (5 until 15)
+      .map(i => (200L + i, "update", doc(i, 2))).toDF("lsn", "op", "doc"),
+      "b:3", incremental = true))
+    val joins = ps.flatMap(p => collect(p) { case m: InMemoryTableScanExec =>
+      m.relation.cachedPlan }).flatMap(cp =>
+      collect(cp) { case j: BroadcastHashJoinExec => j })
+    assert(joins.nonEmpty, "revision join did not broadcast")
+    joins.foreach { j =>
+      val lakeSide = Seq(j.left, j.right).filter(s => lakeScans(s).nonEmpty)
+      assert(lakeSide.size == 1, j)
+      assert(shuffles(lakeSide.head) == 0,
+        s"revision scan planned a shuffle:\n${lakeSide.head}")
+    }
+    ps.foreach(p => assert(fileIndexScans(p).isEmpty, p))
+    val rootT = Catalog.fromTree(e.loadRegistry("ent").get).find(_.isRoot).get
+    assert(e.table(rootT).read().count() == 30)
+  }
+}

@@ -169,4 +169,18 @@ class FioSpec extends AnyFunSuite {
     assert(fio.exists(log2))
     assert(fio.readLog(log2) == "n1\nn2\nn3\n")
   }
+
+  test("writeAtomic creates missing parent dirs on the local and the DFS branch") {
+    val f = fio
+    Seq("file", "graftfs").foreach { scheme =>
+      val p = new HPath(new HPath(tmp(scheme), "missing/parents"), "v00001.json")
+      assert(!f.exists(p.getParent), scheme)
+      f.writeAtomic(p, "one")
+      assert(f.readString(p) == "one", scheme)
+      f.writeAtomic(p, "two") // replace in place
+      assert(f.readString(p) == "two", scheme)
+      assert(f.list(p.getParent).map(_.getPath.getName).filterNot(_.endsWith(".crc"))
+        == Seq("v00001.json"), scheme)
+    }
+  }
 }
