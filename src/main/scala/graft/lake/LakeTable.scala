@@ -1,5 +1,7 @@
 package graft.lake
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -566,27 +568,13 @@ final class LakeTable(val spark: SparkSession, val root: String,
     // pre-upgrade segment) stays in the scan — conservative, never wrong.
     val raw = readRaw(s, seg => seg.maxSeq < 0L || seg.maxSeq > horizonSeq)
       .filter(col(SeqCol) > horizonSeq)
-    // one pass of bucket-local windows: per root key the newest
-    // post-horizon tombstone and live seq, then one row per key — a live
-    // row newer than that tombstone (the newest such wins), or the
-    // tombstone itself when no live row re-created the key after it
-    val rest = s.keyCols.filterNot(_ == s.rootKey)
-    val dead = col(DelCol) <=> true
-    val byRoot = Window.partitionBy(col(BucketCol), col(s.rootKey))
-      .orderBy((rest.map(col) :+ col(DelCol)) :+ col(SeqCol).desc: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val byKey = Window
-      .partitionBy(((BucketCol +: s.rootKey +: rest) :+ DelCol).map(col): _*)
-      .orderBy(col(SeqCol).desc)
-    raw.withColumn("_gdelseq", max(when(dead, col(SeqCol))).over(byRoot))
-      .withColumn("_glivemax", max(when(!dead, col(SeqCol))).over(byRoot))
-      .filter(when(dead, col(SeqCol) === col("_gdelseq") &&
-          (col("_glivemax").isNull || col(SeqCol) > col("_glivemax")))
-        .otherwise(col("_gdelseq").isNull || col(SeqCol) > col("_gdelseq")))
-      .withColumn("_grn", row_number().over(byKey))
-      .filter(col("_grn") === 1)
+    // the post-horizon rows resolved as a read resolves them, plus each
+    // root key's net delete: its newest tombstone when no live row
+    // re-created the key after it
+    resolveRows(raw, s.keyCols, s.rootKey, netDeletes = true)
       .select((s.schema.fieldNames.toSeq.map(col) ++ Seq(
-        when(dead, lit("delete")).otherwise(lit("upsert")).as("_change_type"),
+        when(col(DelCol) <=> true, lit("delete")).otherwise(lit("upsert"))
+          .as("_change_type"),
         col(SeqCol).as("_change_seq"))): _*)
   }
 
@@ -612,8 +600,8 @@ final class LakeTable(val spark: SparkSession, val root: String,
   def readChangesBetween(fromV: Int, toV: Int): DataFrame =
     changedPairs(fromV, toV) match {
       case (to, None) => emptyDf(to.schema.add("_change_type", StringType))
-      case (_, Some((joined, cols))) =>
-        joined
+      case (_, Some((pairs, cols))) =>
+        pairs
           .withColumn("_row", coalesce(col("_post"), col("_pre")))
           .withColumn("_change_type",
             when(col("_pre").isNull, lit("insert"))
@@ -634,8 +622,8 @@ final class LakeTable(val spark: SparkSession, val root: String,
   def readChangesBetweenCdf(fromV: Int, toV: Int): DataFrame =
     changedPairs(fromV, toV) match {
       case (to, None) => emptyDf(to.schema.add("_change_type", StringType))
-      case (_, Some((joined, cols))) =>
-        joined
+      case (_, Some((pairs, cols))) =>
+        pairs
           .select(explode(
             when(col("_pre").isNull, array(
               struct(col("_post").as("img"), lit("insert").as("ct"))))
@@ -655,7 +643,9 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * `toV`-schema column list. One scan reads the touched buckets'
     * segments of both versions, each tagged with its side; each side is
     * resolved by the bucket-local windows, then the two sides of a key
-    * meet in one aggregate over (bucket, key) — no join, no exchange. */
+    * meet in one aggregate over (bucket, key) — no join, no exchange.
+    * Across a [[rebucket]] a key sits in different buckets on the two
+    * sides, so there the aggregate groups by the key alone (one exchange). */
   private def changedPairs(fromV: Int, toV: Int)
       : (Snapshot, Option[(DataFrame, Seq[String])]) = {
     // one listing gives the head, the retention check and both statuses
@@ -681,15 +671,13 @@ final class LakeTable(val spark: SparkSession, val root: String,
       .filter(b => fb.get(b) != tb.get(b))
     val pre = from.segments.filter(seg => touched(seg.bucket))
     val post = to.segments.filter(seg => touched(seg.bucket))
-    // the horizon is the side vacuum may have collected: one stat per
-    // segment of it the diff reads
-    if (!pre.forall(seg => fio.exists(fio.resolveRel(dir, seg.path))))
-      gone(fromV)
+    // a segment dir that lists empty was vacuumed: its snapshot is gone
     val raw = scan(withMeta(to.schema),
-      pre.map((_, 0, from)) ++ post.map((_, 1, to)))
+      pre.map((_, 0, from)) ++ post.map((_, 1, to)), snap => gone(snap.version))
     val cols = to.schema.fieldNames.toSeq
     val img = struct(cols.map(col): _*)
-    val keys = (BucketCol +: to.rootKey +: to.keyCols.filterNot(_ == to.rootKey))
+    val layout = if (bucketsOf(from) == bucketsOf(to)) Seq(BucketCol) else Nil
+    val keys = (layout ++ (to.rootKey +: to.keyCols.filterNot(_ == to.rootKey)))
       .map(col)
     val resolved = resolveRows(raw, to.keyCols, to.rootKey,
       Some(LakeScan.SideCol))
@@ -771,6 +759,8 @@ final class LakeTable(val spark: SparkSession, val root: String,
 
   /** The [[LakeScan]] over `inputs` — each a segment, its side, and the
     * snapshot whose schema that side resolves at — aligned to `target`.
+    * `vacuumed` is called with the snapshot of a segment whose dir lists
+    * no data files.
     *
     * Commit-domain DELTA rows take their visibility seq from the SEGMENT
     * metadata, not the parquet: a collision-retried commit re-stamps only
@@ -780,13 +770,18 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * Lsn-domain rows keep their per-row event seq; base segments carry
     * per-row seqs persisted from an (already-corrected) resolution. */
   private def scan(target: StructType,
-      inputs: Seq[(Segment, Int, Snapshot)]): DataFrame =
+      inputs: Seq[(Segment, Int, Snapshot)],
+      vacuumed: Snapshot => Nothing = snap => throw new FileNotFoundException(
+        s"table $name: a segment of snapshot v${snap.version} has no data " +
+          "files (vacuumed?)")): DataFrame =
     LakeScan.frame(spark, target, inputs.map { case (seg, side, snap) =>
       val d = fio.resolveRel(dir, seg.path)
+      val files = dataFiles(d)
+      if (files.isEmpty) vacuumed(snap)
       // each side's rows pass through that side's schema on the way to
       // the target, as a read of that snapshot would cast them
       val at = withMeta(snap.schema)
-      ScanSource(seg.bucket, d, dataFiles(d, seg),
+      ScanSource(seg.bucket, d, files,
         withMeta(snap.schemas(seg.schemaVer)),
         if (at == target) Seq(target) else Seq(at, target),
         if (snap.seqDomain == "commit" && seg.kind == "delta") seg.seq else -1L,
@@ -794,23 +789,13 @@ final class LakeTable(val spark: SparkSession, val root: String,
     })
 
   /** The data files of segment dir `d`, listed here in place of Spark's
-    * file index. A segment dir is written once under a unique name and
-    * never changes until vacuum deletes it, so its listing is cached
-    * process-wide: a dir is listed once, not once per read. A dir that
-    * lists empty has been vacuumed. */
-  private def dataFiles(d: HPath, seg: Segment): Seq[FileStatus] =
-    Option(LakeTable.listings.get(d.toString)).getOrElse {
-      val ls = fio.list(d).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.sortBy(_.getPath.getName)
-      if (ls.isEmpty) throw new java.io.FileNotFoundException(
-        s"table $name: segment ${seg.path} has no data files (vacuumed?)")
-      if (LakeTable.listings.size() >= LakeTable.MaxListings)
-        LakeTable.listings.clear() // crude, bounded; rebuilt on demand
-      LakeTable.listings.put(d.toString, ls)
-      ls
-    }
+    * file index: one listing per segment per read. Empty once vacuum has
+    * deleted the dir. */
+  private def dataFiles(d: HPath): Seq[FileStatus] =
+    fio.list(d).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
 
   /** Merge-on-read resolution over a raw scan: the newest row per key
     * wins unless its root key's newest tombstone is at or above it. Both
@@ -820,29 +805,41 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * = root key) the two windows have one spec and run as one operator;
     * a tombstone there shares its key's row numbering, which is why a
     * winner must also be live. With `side`, each side resolves on its
-    * own. Returns the winners with the helper columns; callers select
-    * what they keep. */
+    * own. With `netDeletes` (the seq-space feed), tombstones number apart
+    * from live rows (the sort gains the tombstone marker before seq) and a
+    * root key's newest tombstone is kept too when no live row of that
+    * root key is newer. Returns the winners with the
+    * helper columns; callers select what they keep. */
   private def resolveRows(raw: DataFrame, keyCols: Seq[String],
-      rootKey: String, side: Option[String] = None): DataFrame = {
+      rootKey: String, side: Option[String] = None,
+      netDeletes: Boolean = false): DataFrame = {
     val rest = keyCols.filterNot(_ == rootKey)
+    val dead = col(DelCol) <=> true
+    val apart = if (netDeletes) Seq(DelCol) else Nil
     val byRoot = Window.partitionBy(col(BucketCol), col(rootKey))
-      .orderBy((rest ++ side).map(col) :+ col(SeqCol).desc: _*)
+      .orderBy((rest ++ side ++ apart).map(col) :+ col(SeqCol).desc: _*)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    def tombSeq(on: Column): Column =
-      max(when(col(DelCol) <=> true && on, col(SeqCol))).over(byRoot)
-    val delSeq = side match {
-      case None     => tombSeq(lit(true))
+    // the newest seq of a root key's rows that `of` selects, per side
+    def rootMax(of: Column): Column = side match {
+      case None     => max(when(of, col(SeqCol))).over(byRoot)
       case Some(sd) =>
-        when(col(sd) === 0, tombSeq(col(sd) === 0))
-          .otherwise(tombSeq(col(sd) =!= 0))
+        when(col(sd) === 0, max(when(of && col(sd) === 0, col(SeqCol))).over(byRoot))
+          .otherwise(max(when(of && col(sd) =!= 0, col(SeqCol))).over(byRoot))
     }
     val byKey = Window
-      .partitionBy((BucketCol +: rootKey +: rest ++: side.toSeq).map(col): _*)
+      .partitionBy((BucketCol +: rootKey +: rest ++: side.toSeq ++: apart)
+        .map(col): _*)
       .orderBy(col(SeqCol).desc)
-    raw.select(col("*"), delSeq.as("_gdelseq"),
-        row_number().over(byKey).as("_grn"))
-      .filter(col("_grn") === 1 && !(col(DelCol) <=> true) &&
-        (col("_gdelseq").isNull || col(SeqCol) > col("_gdelseq")))
+    val newer = (c: String) => col(c).isNull || col(SeqCol) > col(c)
+    val live = !dead && newer("_gdelseq")
+    val kept =
+      if (netDeletes) live || (dead && col(SeqCol) === col("_gdelseq") &&
+        newer("_glivemax"))
+      else live
+    raw.select(Seq(col("*"), rootMax(dead).as("_gdelseq")) ++
+        Option.when(netDeletes)(rootMax(!dead).as("_glivemax")) :+
+        row_number().over(byKey).as("_grn"): _*)
+      .filter(col("_grn") === 1 && kept)
   }
 
   /** Merge-on-read resolution of the segments `keep` selects. Buckets
@@ -1263,7 +1260,6 @@ final class LakeTable(val spark: SparkSession, val root: String,
         if (nowPins != pins) { pins = nowPins; live = liveSet() }
         if (!live.contains(c)) {
           fio.delete(c, recursive = true)
-          LakeTable.listings.keySet.removeIf(_.startsWith(s"$c/"))
           removed += 1
         }
       }
@@ -1324,10 +1320,4 @@ object LakeTable {
     new java.util.concurrent.ConcurrentHashMap[(String, Int),
       (Long, Long, Snapshot)]()
   private val MaxSnapCache = 512
-
-  /** Process-wide data-file listings of segment dirs, keyed by the
-    * qualified dir — see [[LakeTable.dataFiles]]. */
-  private val listings =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[FileStatus]]()
-  private val MaxListings = 8192
 }

@@ -256,6 +256,33 @@ class LakeScanSpec extends AnyFunSuite {
     assert(rows(t.readWhere(col("ID") === "b")).isEmpty)
   }
 
+  test("diffs across a rebucket: unchanged rows are absent, a changed row " +
+      "is one update") {
+    val t = table(kv, Seq("ID"), "ID", buckets = 4)
+    val keys = (0 until 16).map(i => s"k$i")
+    t.merge(keys.map(k => k -> "1").toDF("ID", "V"), Seq("ID"), "ID", "c1")
+    val v1 = t.currentVersion()
+    val before = keys.map(k => k -> t.bucketOfKey(k)).toMap
+    t.rebucket(8, "relayout")
+    val relaid = t.currentVersion()
+    assert(t.buckets == 8)
+    // the case the pairing must survive: keys whose bucket id changed
+    assert(keys.exists(k => t.bucketOfKey(k) != before(k)))
+    // a pure relayout changes no row
+    assert(t.readChangesBetween(v1, relaid).isEmpty)
+    assert(t.readChangesBetweenCdf(v1, relaid).isEmpty)
+    t.merge(Seq("k1" -> "2", "k2" -> "1", "k99" -> "1").toDF("ID", "V"),
+      Seq("ID"), "ID", "c2", deleteRootKeys = Some(Seq("k3").toDF("ID")))
+    val v2 = t.currentVersion()
+    val want = Seq(Seq("k1", "2", "update"), Seq("k3", "1", "delete"),
+      Seq("k99", "1", "insert"))
+    assert(rows(t.readChangesBetween(v1, v2)) == want)
+    assert(rows(t.readChangesBetween(relaid, v2)) == want)
+    assert(rows(t.readChangesBetweenCdf(v1, v2)) == Seq(
+      Seq("k1", "1", "update_preimage"), Seq("k1", "2", "update_postimage"),
+      Seq("k3", "1", "delete"), Seq("k99", "1", "insert")))
+  }
+
   test("inputFiles lists exactly the scanned segments' data files") {
     val t = table(kv, Seq("ID"), "ID")
     t.merge((0 until 16).map(i => s"k$i" -> "1").toDF("ID", "V"), Seq("ID"),
