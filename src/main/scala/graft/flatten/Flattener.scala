@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.catalog.{Catalog, ColumnSpec, TableSpec}
+import graft.catalog.{ColumnSpec, TableSpec}
 import graft.schema.{Attr, DType}
 
 /** Turns a batch of JSON documents into one relational DataFrame per
@@ -50,13 +50,6 @@ object Flattener {
     case DType.Bool => BooleanType
     case _          => StringType // number/date/string: lexical text
   }
-
-  /** Node lookup: the attr-tree node a table's path points at. */
-  private def nodeAt(rootElem: Attr, path: Seq[graft.catalog.PathStep]): Attr =
-    path.foldLeft(rootElem) { (n, step) =>
-      val c = n.attributes(step.attrName)
-      if (step.isArray) c.attributes(c.name) else c
-    }
 
   private def hasField(node: Attr, name: String): Boolean = {
     val a = node.attributes.get(name)
@@ -214,22 +207,5 @@ object Flattener {
     val outCols = (fkPairs :+ pkCol) ++ dataCols ++ extraCols.map(col) ++ ordCols
     // a row exists only where the object instance exists (sqlDML.ts:528-531)
     df.filter(nodeCol.isNotNull).select(outCols: _*)
-  }
-
-  /** Parse + flatten an entire batch: returns (table → DataFrame) in
-    * catalog order (root first, like mergeDoc at sqlDML.ts:548-578). */
-  def flattenAll(
-      batch: DataFrame,
-      docColumn: String,
-      rootArray: Attr,
-      extraCols: Seq[String] = Nil,
-  ): Seq[(TableSpec, DataFrame)] = {
-    val rootElem = rootArray.attributes(rootArray.name)
-    val tables = Catalog.fromTree(rootArray)
-    val schema = readSchema(rootElem)
-    val parsed = batch.withColumn("_doc", from_json(col(docColumn), schema))
-    tables.map { t =>
-      t -> tableFrame(parsed, rootElem, tables, t, col("_doc"), extraCols)
-    }
   }
 }

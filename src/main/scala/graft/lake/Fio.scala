@@ -84,12 +84,6 @@ final class Fio(conf: Configuration) extends Serializable {
     try Some(fsOf(p).getFileStatus(p))
     catch { case _: java.io.FileNotFoundException => None }
 
-  def isDir(p: HPath): Boolean = {
-    val fs = fsOf(p)
-    try fs.getFileStatus(p).isDirectory
-    catch { case _: java.io.FileNotFoundException => false }
-  }
-
   def mkdirs(p: HPath): Unit = { fsOf(p).mkdirs(p); () }
 
   /** Children of `dir` (empty when the directory is absent). */

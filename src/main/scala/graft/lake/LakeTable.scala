@@ -201,9 +201,9 @@ final class LakeTable(val spark: SparkSession, val root: String,
 
   /** Is `version`'s snapshot JSON still on disk? Vacuum keeps the newest
     * `keepSnapshots` plus pinned versions, so retention is NOT a
-    * contiguous range once pins exist — callers holding old horizons
-    * (changefeeds, consistent cuts) check this instead of eating a raw
-    * FileNotFoundException from the log read. One `exists` call. */
+    * contiguous range once pins exist. A retained version may still be
+    * unreadable: [[materialized]] checks its segments. One `exists`
+    * call. */
   def retained(version: Int): Boolean =
     version >= 1 && fio.exists(snapPath(version))
 
@@ -468,9 +468,15 @@ final class LakeTable(val spark: SparkSession, val root: String,
 
   /** Whether every segment of `s` is still on disk — the verify half of
     * the pin-then-verify protocol: choose a cut, pin it, then check it
-    * was not vacuumed in between (retry the choice if it was). */
+    * was not vacuumed in between (retry the choice if it was). One
+    * listing per commit dir `s` references answers for all of that
+    * commit's segments; a missing commit dir lists empty. */
   def materialized(s: Snapshot): Boolean =
-    s.segments.forall(seg => fio.exists(fio.resolveRel(dir, seg.path)))
+    s.segments.map(seg => fio.resolveRel(dir, seg.path)).groupBy(_.getParent)
+      .forall { case (commitDir, segDirs) =>
+        val listed = fio.list(commitDir).map(st => fio.qualify(st.getPath)).toSet
+        segDirs.forall(listed)
+      }
 
   /** Read only the given buckets of `s` (partition pruning for key-local
     * scans). */

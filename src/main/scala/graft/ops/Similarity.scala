@@ -153,9 +153,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF-ish cell of a signature: `nCells` coarse buckets. */
-  def cellOf(sig: Long, nCells: Int): Int = math.floorMod(mix(sig), nCells.toLong).toInt
-
   /** Write-side ANN layout: materialize each vector's hyperplane signature
     * and store the table PARTITIONED BY signature cell. One-time build;
     * queries then touch only the probe cells' files — partition pruning at
@@ -379,14 +376,6 @@ object Similarity {
         val p = l.split(",")
         IvfCell(p(0).toInt, p(1).toInt, p(2).toLong)
       }
-  }
-
-  /** Largest final-cell fraction of the layout (balance report; 0 when
-    * the manifest has no counts). */
-  def ivfMaxCellFraction(path: String): Double = {
-    val cells = readIvfCells(path).filter(_.count >= 0)
-    val n = cells.map(_.count).sum
-    if (n <= 0) 0.0 else cells.map(_.count).max.toDouble / n
   }
 
   /** IVF probe: score the query against the k centroids DRIVER-side (k is

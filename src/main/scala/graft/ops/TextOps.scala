@@ -4,24 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines:
-  * token counting, quality scoring, language-ID, fingerprinting.
+  * token statistics, quality scoring, language-ID, fingerprinting.
   * Everything is a pure column expression where possible (codegen'd);
   * the two genuinely-custom pieces (lang-id, rolling-hash fingerprint)
   * are deterministic Scala UDFs over a single string column.
   */
 object TextOps {
-
-  /** Whitespace token count — the oracle-friendly space-count form
-    * (identical semantics in Spark and ANSI SQL). */
-  def tokenCount(text: Column): Column =
-    (length(text) - length(regexp_replace(text, " ", "")) + 1)
-      .cast("int").as("token_count")
-
-  /** BPE-ish subword count: splits on whitespace AND letter/digit/punct
-    * boundaries — a cheap deterministic proxy for tokenizer load. */
-  def subwordCount(text: Column): Column =
-    size(split(text, "\\s+|(?<=[a-z])(?=[A-Z])|(?<=\\p{L})(?=\\d)|(?<=\\d)(?=\\p{L})|(?=[^\\p{L}\\d\\s])"))
-      .cast("int").as("subword_count")
 
   /** Quality features per document: length, token stats, punctuation and
     * uppercase ratios, and a composite [0,1] score. Deterministic. */

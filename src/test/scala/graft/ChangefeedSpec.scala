@@ -413,9 +413,124 @@ class ChangefeedSpec extends AnyFunSuite {
     // a restart keeps that base after the table moved on: v3 is new
     t.merge(df("b" -> "1"), Seq("ID"), "ID", "c2")
     val restarted = open()
-    try assert(restarted.getOffset ==
-      Some(org.apache.spark.sql.execution.streaming.runtime.LongOffset(3L)))
+    try assert(restarted.latestOffset(null, restarted.getDefaultReadLimit) ==
+      org.apache.spark.sql.execution.streaming.runtime.LongOffset(3L))
     finally restarted.stop()
+  }
+
+  /** A `foreachBatch` changefeed query on `ckpt` over lake table SRC,
+    * run until idle and stopped; appends each non-empty batch's
+    * (ID, change type) set to `seen`. */
+  private def drainFeed(root: String, ckpt: String,
+      seen: scala.collection.mutable.Buffer[Set[(String, String)]],
+      opts: (String, String)*): Unit = {
+    val q = spark.readStream.format("graft-changefeed")
+      .option("root", root).option("table", "SRC").options(opts.toMap).load()
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val rows = b.collect().map(r => r.getString(0) ->
+          r.getString(r.fieldIndex("_change_type"))).toSet
+        if (rows.nonEmpty) seen += rows; ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  test("streaming source: a restart needs only its committed offset, not " +
+      "a starting version vacuumed since") {
+    val root = SparkTestSession.tmpDir("graft-cfold-")
+    val ckpt = SparkTestSession.tmpDir("graft-cfold-ckpt-")
+    val src = new LakeTable(spark, root, "SRC", numBuckets = 4)
+    src.create(schema, Seq("ID"), "ID")
+    (2 to 14).foreach(i =>
+      src.merge(df("a" -> i.toString), Seq("ID"), "ID", s"c$i"))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[(String, String)]]
+    drainFeed(root, ckpt, seen) // batch 0: v1 → v14, committed
+    assert(src.currentVersion() == 14)
+    assert(seen.toSeq == Seq(Set("a" -> "insert")))
+
+    // while the stream is down (its pins released), the table moves on
+    // and maintenance expires the starting version's snapshot
+    src.merge(df("z" -> "1"), Seq("ID"), "ID", "cz")
+    src.vacuum(keepSnapshots = 2)
+    assert(!src.retained(1) && src.retained(14))
+    seen.clear()
+    drainFeed(root, ckpt, seen) // needs only v14 → v15
+    assert(seen.toSeq == Seq(Set("z" -> "insert")))
+  }
+
+  test("streaming source: a rate-limited stream falls forward past " +
+      "retained versions whose segments were vacuumed") {
+    val root = SparkTestSession.tmpDir("graft-cfwedge-")
+    val ckpt = SparkTestSession.tmpDir("graft-cfwedge-ckpt-")
+    val src = new LakeTable(spark, root, "SRC", numBuckets = 4, maxDeltas = 2)
+    src.create(schema, Seq("ID"), "ID")
+    (1 to 6).foreach(i =>
+      src.merge(df(s"k$i" -> "1", "a" -> i.toString), Seq("ID"), "ID", s"c$i"))
+    src.compactAll("compact")
+    src.vacuum(graceMs = 0)
+    val head = src.currentVersion()
+    // the defect's shape: v2 is retained but not readable
+    assert(src.retained(2) && !src.materialized(src.snapshotAt(2)))
+    assert((2 until head).forall(v => !src.materialized(src.snapshotAt(v))))
+
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[(String, String)]]
+    drainFeed(root, ckpt, seen, "maxVersionsPerTrigger" -> "1")
+    // one batch, v1 → head: the first readable version past the limit
+    assert(seen.toSeq ==
+      Seq(((1 to 6).map(i => s"k$i" -> "insert") :+ ("a" -> "insert")).toSet))
+    // a restart neither throws nor replays
+    drainFeed(root, ckpt, seen, "maxVersionsPerTrigger" -> "1")
+    assert(seen.size == 1)
+    src.merge(df("z" -> "1"), Seq("ID"), "ID", "cz")
+    drainFeed(root, ckpt, seen, "maxVersionsPerTrigger" -> "1")
+    assert(seen.toSeq.drop(1) == Seq(Set("z" -> "insert")))
+  }
+
+  test("streaming source: a checkpoint carrying the retired high-water and " +
+      "floor files resumes with exactly the gap") {
+    val root = SparkTestSession.tmpDir("graft-cfupg-")
+    val ckpt = SparkTestSession.tmpDir("graft-cfupg-ckpt-")
+    val src = new LakeTable(spark, root, "SRC", numBuckets = 4)
+    src.create(schema, Seq("ID"), "ID")
+    src.merge(df("a" -> "1"), Seq("ID"), "ID", "c1")
+    src.merge(df("b" -> "1"), Seq("ID"), "ID", "c2")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[(String, String)]]
+    drainFeed(root, ckpt, seen, "maxVersionsPerTrigger" -> "1")
+    assert(seen.toSeq == Seq(Set("a" -> "insert"), Set("b" -> "insert")))
+    // the side files an earlier release kept next to the base file, at
+    // values that disagree with the offset log (committed through v3)
+    val meta = java.nio.file.Paths.get(ckpt, "sources", "0")
+    java.nio.file.Files.writeString(meta.resolve("graft-changefeed-hw"), "1")
+    java.nio.file.Files.writeString(meta.resolve("graft-changefeed-floor"), "2")
+
+    src.merge(df("c" -> "1"), Seq("ID"), "ID", "c3")
+    src.merge(df("a" -> "2"), Seq("ID"), "ID", "c4",
+      deleteRootKeys = Some(Seq("b").toDF("ID")))
+    drainFeed(root, ckpt, seen, "maxVersionsPerTrigger" -> "1")
+    assert(seen.toSeq.drop(2) ==
+      Seq(Set("c" -> "insert"), Set("a" -> "update", "b" -> "delete")))
+  }
+
+  test("streaming source: a rate-limited stream and its restart write no " +
+      "source file but the base version") {
+    import scala.jdk.CollectionConverters._
+    val root = SparkTestSession.tmpDir("graft-cfstate-")
+    val ckpt = "graftfs:" + SparkTestSession.tmpDir("graft-cfstate-ckpt-")
+    val src = new LakeTable(spark, root, "SRC", numBuckets = 4)
+    src.create(schema, Seq("ID"), "ID")
+    src.merge(df("a" -> "1"), Seq("ID"), "ID", "c1")
+    src.merge(df("b" -> "1"), Seq("ID"), "ID", "c2")
+    GraftTestFs.createdPaths.clear()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[(String, String)]]
+    drainFeed(root, ckpt, seen, "maxVersionsPerTrigger" -> "1")
+    src.merge(df("c" -> "1"), Seq("ID"), "ID", "c3")
+    drainFeed(root, ckpt, seen, "maxVersionsPerTrigger" -> "1")
+    assert(seen.toSeq ==
+      Seq(Set("a" -> "insert"), Set("b" -> "insert"), Set("c" -> "insert")))
+    val sourceFiles = GraftTestFs.createdPaths.asScala.toSeq
+      .filter(_.contains("/sources/0/"))
+    assert(sourceFiles.nonEmpty)
+    assert(sourceFiles.forall(_.contains("graft-changefeed-base")), sourceFiles)
   }
 
   test("streaming source: additive lake evolution mid-stream — fixed schema until restart") {
