@@ -2,22 +2,22 @@ package graft.engine
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
 import graft.catalog.{Catalog, TableSpec}
 import graft.flatten.Flattener
-import graft.lake.LakeTable
-import graft.schema.{Attr, Infer, Json}
+import graft.lake.{LakeTable, Snapshot}
+import graft.schema.{Attr, Infer, Json, TreeAccumulator}
 
-/** Per-apply metrics (the rebuild's applied-event accounting; per-bucket
-  * lineage lives in each LakeTable snapshot). `dedupedDocs` and
-  * `skippedUnchanged` ride accumulators inside the inference job's tasks,
-  * so a retried or speculated task can inflate them slightly — they are
-  * throughput metrics; the exactly-once ledger is the lake lineage
-  * (Observation on the write itself). */
+/** Per-apply counts. `dedupedDocs` and `deletes` are the root table's
+  * merge lineage for this batch's commit tag (an Observation on the write
+  * itself), so a retried task cannot inflate them; `batchEvents` is their
+  * sum. `skippedUnchanged` rides an accumulator in the pass that infers
+  * the batch's schema, so a retried or speculated task can inflate it —
+  * a throughput metric, not a ledger entry. */
 final case class ApplyStats(
     batchEvents: Long,
     dedupedDocs: Long,
@@ -128,50 +128,37 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     stale.size
   }
 
-  /** Distributed schema inference: per-partition fold into an attribute
-    * tree, then a lattice-merge treeReduce. One pass over the batch; no
-    * documents are collected to the driver. `counter`, when given, tallies
-    * the parsed docs inside the same job — the batch-size metric comes for
-    * free instead of costing a separate count() action.
-    *
-    * `skipCol` (incr): rows whose boolean marker is true are NOT analyzed;
-    * they are tallied into `skipCounter` instead — the revision-skip count
-    * rides the inference job too (no separate count() action, verdict:
-    * metrics-grade counters; see the drift note on [[ApplyStats]]). */
-  def inferBatch(entity: String, docs: DataFrame, docCol: String,
-      counter: Option[org.apache.spark.util.LongAccumulator] = None,
-      skipCol: Option[String] = None,
-      skipCounter: Option[org.apache.spark.util.LongAccumulator] = None): Attr = {
-    import spark.implicits._
-    // doc as BINARY (r8): a UTF8String's bytes ARE UTF-8, so the cast is
-    // a copy without decode, and Jackson parses UTF-8 natively — the
-    // String form decoded every doc to UTF-16 first (2× the bytes, pure
-    // bandwidth on the inference job's hot path)
-    val rows = skipCol match {
-      case Some(sc) => docs.select(col(docCol).cast("binary"),
-        coalesce(col(sc), lit(false))).as[(Array[Byte], Boolean)]
-      case None => docs.select(col(docCol).cast("binary"), lit(false))
-        .as[(Array[Byte], Boolean)]
-    }
-    val partials = rows.rdd
-      .mapPartitions { it =>
-        // STREAMING analyzer: Jackson tokens drive the tree directly —
-        // no per-doc AST (the AST's ~50 allocations/doc were the
-        // inference job's dominant GC/bandwidth load at 10^6-doc batches)
-        val live = it.flatMap { case (doc, skip) =>
-          if (skip) { skipCounter.foreach(_.add(1L)); None } else Some(doc)
-        }
-        val t = Infer.analyzeDocumentsBytes(entity, live,
-          n => counter.foreach(_.add(n)))
-        // skip doc-less partitions so the fold never widens on Unknown
-        if (t.attributes(entity).dataType == graft.schema.DType.Unknown)
-          Iterator.empty
-        else Iterator.single(t)
-      }
-    // fold (not isEmpty-then-reduce): empty partials still runs exactly one
-    // job; the identity tree is the lattice bottom so fold ≡ reduce
-    partials.fold(Infer.analyzeDocuments(entity, Nil))(Infer.mergeInto)
+  /** Schema inference over the rows of one batch, riding whichever job
+    * reads them. `inferring` folds each partition's documents into `tree`
+    * (an accumulator joined through the widening lattice) as they stream
+    * by, counting them into `docs`; rows the incr revision check marked
+    * unchanged (`_gskip`) are dropped and counted into `skipped`. The
+    * counts are metrics-grade (see [[ApplyStats]]); the tree is exact,
+    * since the lattice join is idempotent. `plain` is the same rows
+    * without the inference. Both read `src` through one RDD, so the
+    * revision scan and any exchange under it run once however many jobs
+    * read the two frames. */
+  private final class InferPass(entity: String, src: DataFrame,
+      docCol: String) {
+    private val sc = spark.sparkContext
+    val tree = new TreeAccumulator(entity)
+    sc.register(tree)
+    val docs = sc.longAccumulator("graft.dedupedDocs")
+    val skipped = sc.longAccumulator("graft.skippedDocs")
+    private val skipOrd =
+      if (src.columns.contains("_gskip")) src.schema.fieldIndex("_gskip")
+      else -1
+    val inferring: DataFrame = GraftSqlShims.mapPartitionsInternal(src,
+      Engine.inferStep(entity, src.schema.fieldIndex(docCol), skipOrd, tree,
+        docs, skipped))
+    lazy val plain: DataFrame =
+      GraftSqlShims.mapPartitionsInternal(src, Engine.skipStep(skipOrd))
   }
+
+  /** Inference as a job of its own, for a batch whose parse cannot ride
+    * it (see [[load]]). */
+  private def inferBatch(pass: InferPass): Unit =
+    pass.inferring.write.format("noop").mode("overwrite").save()
 
   def table(t: TableSpec): LakeTable =
     new LakeTable(spark, lakeRoot, t.fullName, numBuckets)
@@ -252,41 +239,43 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
           .withColumn("_docid", coalesce(col("_jid0"), col("_jid1")))
           .drop("_jid0", "_jid1")
 
-    // Last-write-wins per key (BASELINE.json north-star): max_by(row, seq)
-    // hash-aggregation dedups WITHIN the batch (real CDC batches carry
-    // many versions per hot key — dedup here shrinks all downstream
-    // flatten/write work by that factor). A hash agg beats the
-    // row_number window two ways at scale: PARTIAL (map-side) combine
+    // Last-write-wins per key (BASELINE.json north-star): the max of
+    // (seq, row) hash-aggregation dedups WITHIN the batch (real CDC
+    // batches carry many versions per hot key — dedup here shrinks all
+    // downstream flatten/write work by that factor). An aggregate beats
+    // the row_number window two ways at scale: PARTIAL (map-side) combine
     // drops duplicate versions before the shuffle — a hot key reduces to
     // one row per map partition, so no salting is ever needed — and no
-    // per-partition sort. With a monotone seqCol (the WAL lsn) the
-    // winner's lsn also becomes the row's lake visibility seq, so LWW
+    // window over the whole batch. With a monotone seqCol (the WAL lsn)
+    // the winner's lsn also becomes the row's lake visibility seq, so LWW
     // holds ACROSS batches even for late/out-of-order deliveries, and
     // re-applying events is idempotent by content. The shuffle key is the
     // fine-grained document key (repo|path|commit), so a hot REPO cannot
     // skew a partition.
     val monotoneSeq = seqCol.isDefined
-    // ONE persisted dedup result: upserts and deletes are both cheap
-    // filters over this cache (persisting each separately would run the
-    // dedup shuffle twice per batch). Events without id/_id violate the
-    // reference's contract (README.md:48) — dropped HERE, explicitly:
-    // letting them through would collapse every keyless event into one
-    // null-key group (silent data loss into a null-ID row).
+    // ONE dedup shuffle, read by every later query of the batch (upserts
+    // and deletes are filters over it) through the RDD that computes it:
+    // nothing is cached. Equal seqs break on the kept values, so each read
+    // picks the same winner whatever order the shuffle delivers a key's
+    // rows in. Events without id/_id violate the reference's contract
+    // (README.md:48) — dropped HERE, explicitly: letting them through
+    // would collapse every keyless event into one null-key group (silent
+    // data loss into a null-ID row).
     // PROJECT BEFORE THE EXCHANGE (r8, guide §2.3): everything downstream
     // of the dedup reads only the doc, the visibility seq, the key (and
     // op / rev where present) — passthrough columns like the event
-    // timestamp would ride the winner struct through the shuffle, the
-    // agg buffers and the cache for nothing. On the memory-bandwidth-
-    // bound many-core level every shuffled/cached byte costs twice.
+    // timestamp would ride the winner struct through the shuffle and the
+    // agg buffers for nothing. On the memory-bandwidth-bound many-core
+    // level every shuffled byte costs twice.
     val keepCols: Seq[String] =
-      (Seq(docCol, "_seq", "_docid") ++
+      (Seq("_seq", docCol, "_docid") ++
         (if (incremental) Seq("_docrev") else Nil) ++ opCol.toSeq).distinct
-    val latest = keyed
+    val latest = GraftSqlShims.fromRdd(keyed
       .filter(col("_docid").isNotNull)
       .groupBy(col("_docid"))
-      .agg(max_by(struct(keepCols.map(col): _*), col("_seq")).as("_w"))
-      .select(col("_w.*"))
-      .persist()
+      .agg(max(when(col("_seq").isNotNull, struct(keepCols.map(col): _*)))
+        .as("_w"))
+      .select(col("_w.*")))
 
     // op split: upserts vs delete tombstones (each keeps its event seq).
     // Explicit deleteIds under the lsn domain MUST carry a per-key delete
@@ -296,7 +285,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     // newest lsn and kill same-batch upserts. The lake's merge enforces
     // the same contract (LakeTable.merge rejects lsn-domain deletes
     // without a seq column).
-    var deduped = opCol match {
+    val deduped = opCol match {
       case Some(c) => latest.filter(col(c) =!= "delete")
       case None    => latest
     }
@@ -322,36 +311,37 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       case (None, b)          => b
     }
 
-    // the revision-marked frame (incr only), persisted so the inference
-    // fold fills it and the parse reads it: the bucket-pruned revision
-    // scan runs in ONE query per batch
-    var marked: Option[DataFrame] = None
+    // the speculatively parsed batch, persisted until the merges finish
+    var speculative: Option[Clustered] = None
     try {
       val priorRaw = newestRegistry(registryDir(entity))
       val prior = parseRegistry(priorRaw)
+      // ONE LakeTable handle and ONE snapshot read per prior table: they
+      // serve the revision scan, the clustering layout and the DDL
+      val priorTables = prior.toSeq.flatMap(Catalog.fromTree)
+      val known: Map[String, (LakeTable, Option[Snapshot])] =
+        priorTables.map { t =>
+          val l = table(t)
+          t.fullName -> (l, l.snapshotOpt())
+        }.toMap
+      val priorRoot = priorTables.find(_.isRoot).map(t => known(t.fullName))
 
       // incr (index.ts:43-72): skip docs whose (ID, REV) is already in the
       // root table — a MARKER left-join replaces the driver-side revision
       // Map (sqlDML.ts:27-93); the join broadcasts under AQE when small.
-      // Matched rows stay in the frame (marker true) so the inference job
-      // can tally them as skipped in the SAME pass — no anti-join-plus-
-      // count() pair of jobs per incr batch.
-      if (incremental) {
-        prior.foreach { tree =>
-          val tables = Catalog.fromTree(tree)
-          val rootT = tables.find(_.isRoot).get
-          val lake = table(rootT)
-          // one snapshot serves the gate, the bucket expression and the
-          // scan: one listing of the root's snapshot log per batch
-          lake.snapshotOpt().filter(s => s.segments.nonEmpty &&
-            s.schema.fieldNames.contains("REV")).foreach { snap =>
+      // Matched rows stay in the frame (marker true) so the inference pass
+      // drops and tallies them — no anti-join-plus-count() pair of jobs.
+      val marked: Option[DataFrame] = priorRoot.filter(_ => incremental)
+        .flatMap { case (lake, snap) =>
+          snap.filter(s => s.segments.nonEmpty &&
+            s.schema.fieldNames.contains("REV")).flatMap { snap =>
             // BUCKET-PRUNED revision scan: the batch can only match (ID,
             // REV) rows in the buckets its own keys hash to — read only
             // those buckets' segments. A full lake.read() here is O(table)
             // per micro-batch — at 10^10 rows the classic incremental-
             // ingest scale-killer (VERDICT r3); this is O(batch) + O(touched
             // buckets). The touched set (≤ numBuckets ints) rides an
-            // Observation on the job that fills the dedup cache.
+            // Observation on one noop job over the deduped rows.
             val obs = org.apache.spark.sql.Observation()
             deduped.observe(obs,
               collect_set(lake.bucketExpr(col("_docid"), snap)).as("touched"))
@@ -361,63 +351,113 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
             val touched: Set[Int] = obs.get.get("touched").collect {
               case xs: scala.collection.Seq[_] => xs.map(_.asInstanceOf[Int]).toSet
             }.getOrElse(Set.empty)
-            if (touched.nonEmpty) {
-              val existing = lake.readBuckets(touched, snap).select(
-                col("ID").as("_docid"), col("REV").as("_docrev"),
-                lit(true).as("_gskip"))
-              marked = Some(deduped
-                .join(existing, Seq("_docid", "_docrev"), "left").persist())
-              deduped = marked.get
-            }
+            if (touched.isEmpty) None
+            else Some(deduped.join(lake.readBuckets(touched, snap).select(
+              col("ID").as("_docid"), col("REV").as("_docrev"),
+              lit(true).as("_gskip")), Seq("_docid", "_docrev"), "left"))
           }
         }
-      }
+      val pass = new InferPass(entity, marked.getOrElse(deduped), docCol)
+      def parse(tree: Attr, rows: DataFrame): DataFrame = rows.select(
+        col("_docid"), col("_seq"),
+        from_json(col(docCol), readSchemaOf(tree)).as("_gdoc"))
 
       // 1-2: inference + registry widen (docMetadata/sqlMetadata stages).
-      // The SAME job materializes the dedup (or revision-marked) cache and
-      // tallies both the surviving and the revision-skipped doc counts
-      // (accumulators) — no standalone count() actions on the hot path.
-      // Metrics grade: accumulator adds happen in a transformation, so a
-      // retried / speculated task can double-count — dedupedDocs/
-      // skippedUnchanged are throughput metrics, not exactly-once ledger
-      // entries (the lake's Observation-backed lineage is); the == 0
-      // branch below is safe because retries can only inflate a genuinely
-      // non-zero count.
-      val dedupAcc = spark.sparkContext.longAccumulator("graft.dedupedDocs")
-      val skipAcc = spark.sparkContext.longAccumulator("graft.skippedDocs")
-      val batchTree = inferBatch(entity, deduped, docCol, Some(dedupAcc),
-        skipCol = marked.map(_ => "_gskip"),
-        skipCounter = Some(skipAcc))
-      val dedupedDocs = dedupAcc.value.longValue
-      val skipped = math.max(0L, skipAcc.value.longValue)
-      if (marked.isDefined) deduped = deduped.filter(col("_gskip").isNull)
-        .drop("_gskip")
+      // SPECULATIVE PARSE: when the prior catalog is multi-table and all
+      // its tables exist, the batch is parsed under the PRIOR registry's
+      // read schema and clustered in the same pass that infers its schema
+      // — one job chain reads the docs once. A steady-state batch does not
+      // widen the read schema, so the speculation holds; one that does is
+      // parsed again below under the widened one. Otherwise (no prior, a
+      // single-table prior) inference runs first as its own job.
+      val priorSchema = prior.map(readSchemaOf)
+      if (known.size > 1 && known.values.forall(_._2.isDefined)) {
+        val (rootLake, rootSnap) = priorRoot.get
+        speculative = Some(clusterBatch(prior.get, rootLake, rootSnap.get,
+          parse(prior.get, pass.inferring), allDeletes, persist = true))
+      } else inferBatch(pass)
+      val batchTree = pass.tree.value
+      val docCount = pass.docs.value.longValue
+      val skipped = math.max(0L, pass.skipped.value.longValue)
 
-      if (dedupedDocs == 0 && (allDeletes.isEmpty || prior.isEmpty))
+      // == 0 is safe on an accumulator: a retried task can only inflate a
+      // genuinely non-zero count
+      if (docCount == 0 && (allDeletes.isEmpty || prior.isEmpty))
         // nothing to upsert; deletes can only touch existing tables
         return ApplyStats(0, 0, 0, skipped, 0)
 
-      val registry = (prior, dedupedDocs) match {
+      val registry = (prior, docCount) match {
         case (Some(t), 0L) => t // delete-only batch: schema unchanged
         case (Some(t), _)  => Infer.mergeInto(t, batchTree)
         case (None, _)     => batchTree
       }
-      if (dedupedDocs > 0) saveRegistry(entity, registry, priorRaw)
+      if (docCount > 0) saveRegistry(entity, registry, priorRaw)
+      // keep the speculation iff the widened registry reads the docs the
+      // same way; the catalog may still change (a number widened to text
+      // reads as text either way) — the table frames follow `registry`
+      val kept = speculative.filter(_ => priorSchema.contains(
+        readSchemaOf(registry)))
+      if (kept.isEmpty) speculative.foreach(_.frame.unpersist())
 
       // 3-5: DDL + flatten + per-table merges (shared with the bootstrap
       // fast path)
-      val schema = Flattener.readSchema(registry.attributes(registry.name))
-      val parsed = deduped
-        .select(col("_docid"), col("_seq"),
-          from_json(col(docCol), schema).as("_gdoc"))
-      val (nTables, nDel) =
-        mergeParsed(registry, parsed, commitTag, allDeletes, monotoneSeq)
+      val (nTables, upserted, nDel) = mergeParsed(registry, known, kept,
+        parse(registry, pass.plain), commitTag, allDeletes, monotoneSeq)
+      ApplyStats(upserted + nDel, upserted, nDel, skipped, nTables)
+    } finally speculative.foreach(_.frame.unpersist())
+  }
 
-      ApplyStats(dedupedDocs + nDel, dedupedDocs, nDel, skipped, nTables)
-    } finally {
-      marked.foreach(_.unpersist())
-      latest.unpersist()
-    }
+  private def readSchemaOf(tree: Attr) =
+    Flattener.readSchema(tree.attributes(tree.name))
+
+  /** A batch's upserts and tombstones as one frame, each row tagged with
+    * its root key's bucket (`buckets` of them), and the root-key type the
+    * bucket was hashed in. `persisted`: clustered by bucket, cached and
+    * filled. */
+  private final class Clustered(val frame: DataFrame, val buckets: Int,
+      val keyType: DataType, val persisted: Boolean)
+
+  /** Build the [[Clustered]] batch from `parsed` (`_docid`, `_seq` and a
+    * `_gdoc` struct matching `Flattener.readSchema(tree)`) under the root
+    * table's layout in `rootSnap`. The bucket is hashed in the root-key
+    * column's type, as prepareDelta hashes it: upserts take the root key
+    * Flattener emits (the value each child carries as its outermost FK),
+    * tombstones their `_docid`.
+    *
+    * `persist` (a multi-table catalog): the frame is hash-partitioned the
+    * way a delta write partitions ([[LakeTable.clusterForWrite]]), cached,
+    * and the cache is filled with ONE clean parallel job before the
+    * per-table merge fan-out (r8): the concurrent merge jobs all reference
+    * the same cache, and Spark's per-block lock makes every late-arriving
+    * task BLOCK (holding its slot) while the first computes the
+    * partition. K tables' explode chains then share ONE parse and ONE
+    * shuffle. With a single-table catalog the lone write's own shuffle
+    * already is the batch's one shuffle, so neither the cache nor an
+    * up-front clustering pays: the merge computes the batch inline (r8). */
+  private def clusterBatch(tree: Attr, rootLake: LakeTable,
+      rootSnap: Snapshot, parsed: DataFrame,
+      allDeletes: Option[DataFrame], persist: Boolean): Clustered = {
+    val bucketCol = LakeTable.BucketCol
+    val tables = Catalog.fromTree(tree)
+    val keyType =
+      rootSnap.schema(rootKeyOf(tables.find(_.isRoot).get)).dataType
+    val upserts = parsed.select(col("_docid"), col("_seq"), col("_gdoc"),
+      lit(false).as("_gdel"), rootLake.bucketExpr(Flattener.rootKey(
+        tree.attributes(tree.name), tables, col("_gdoc")).cast(keyType),
+        rootSnap).as(bucketCol))
+    val tombstones = allDeletes.map(d => d.select(col("_docid"), col("_seq"),
+      lit(null).cast(parsed.schema("_gdoc").dataType).as("_gdoc"),
+      lit(true).as("_gdel"),
+      rootLake.bucketExpr(col("_docid").cast(keyType), rootSnap).as(bucketCol)))
+    val batch = tombstones.fold(upserts)(upserts.unionByName(_))
+    val frame =
+      if (!persist) batch
+      else {
+        val c = rootLake.clusterForWrite(batch, rootSnap).persist()
+        c.write.format("noop").mode("overwrite").save()
+        c
+      }
+    new Clustered(frame, rootLake.bucketsOf(rootSnap), keyType, persist)
   }
 
   /** Steps 3-5 of an apply, shared by [[load]] and the bootstrap fast
@@ -425,71 +465,56 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     * chains, then set-oriented bucket-pruned merges. `parsed` must carry
     * `_docid`, `_seq` and a `_gdoc` struct matching
     * `Flattener.readSchema(registry)` — `from_json`'d on the tail path,
-    * struct-built on the bootstrap path. Returns (tables, root deletes).
+    * struct-built on the bootstrap path; it is built into the batch
+    * ([[clusterBatch]]) unless `prebuilt` already holds it. `known`: the
+    * handles and snapshots the caller already read. Returns (tables,
+    * root upserts, root deletes), the counts from the root table's merge
+    * lineage.
     *
-    * ONE clustering shuffle per multi-table batch: upserts and tombstones
-    * are unioned into one frame, tagged with their root-key bucket and
-    * hash-partitioned the way a delta write partitions
-    * ([[LakeTable.clusterForWrite]]). Every table's explode chain keeps
-    * rows in their task, so each table's frame arrives already clustered,
-    * its write plans no exchange, and the id-keyed array dedup window
-    * partitions inside the same clustering.
+    * ONE clustering shuffle per multi-table batch: every table's explode
+    * chain keeps rows in their task, so each table's frame arrives already
+    * clustered, its write plans no exchange, and the id-keyed array dedup
+    * window partitions inside the same clustering. Each table is planned
+    * once: one handle, one snapshot (the DDL's), one projection per frame.
     */
-  private def mergeParsed(registry: Attr, parsed: DataFrame,
-      commitTag: String, allDeletes: Option[DataFrame],
-      monotoneSeq: Boolean): (Int, Long) = {
+  private def mergeParsed(registry: Attr,
+      known: Map[String, (LakeTable, Option[Snapshot])],
+      prebuilt: Option[Clustered], parsed: => DataFrame, commitTag: String,
+      allDeletes: Option[DataFrame],
+      monotoneSeq: Boolean): (Int, Long, Long) = {
     val tables = Catalog.fromTree(registry)
     // 3-4: DDL — create or evolve each lake table (sqlDDL createTables /
     // alterTables; additive + widening only)
-    tables.foreach { t =>
-      val lake = table(t)
-      if (!lake.exists()) lake.create(t.schema, t.keyColumns, rootKeyOf(t))
-      else lake.evolve(t.schema, t.keyColumns, rootKeyOf(t))
-    }
+    val lakes: Map[String, (LakeTable, Snapshot)] = tables.map { t =>
+      val (lake, snap) = known.getOrElse(t.fullName, {
+        val l = table(t); (l, l.snapshotOpt())
+      })
+      t.fullName -> (lake, snap match {
+        case None    => lake.create(t.schema, t.keyColumns, rootKeyOf(t))
+        case Some(s) => lake.evolve(t.schema, t.keyColumns, rootKeyOf(t), Some(s))
+      })
+    }.toMap
     val rootElem = registry.attributes(registry.name)
     val rootT = tables.find(_.isRoot).get
-    val rootLake = table(rootT)
-    val bucketCol = rootLake.BucketCol
-    // the bucket is hashed in the root-key column's type, as prepareDelta
-    // hashes it: upserts take the root key Flattener emits (the value each
-    // child carries as its outermost FK), tombstones their `_docid`
-    def rootKeyType(t: TableSpec): Option[DataType] =
-      table(t).snapshot().schema.find(_.name == rootKeyOf(t)).map(_.dataType)
-    val keyType = rootKeyType(rootT).get
-    val rootBuckets = rootLake.buckets
-    val upserts = parsed.select(col("_docid"), col("_seq"), col("_gdoc"),
-      lit(false).as("_gdel"), rootLake.bucketExpr(
-        Flattener.rootKey(rootElem, tables, col("_gdoc")).cast(keyType))
-        .as(bucketCol))
-    val tombstones = allDeletes.map(d => d.select(col("_docid"), col("_seq"),
-      lit(null).cast(parsed.schema("_gdoc").dataType).as("_gdoc"),
-      lit(true).as("_gdel"),
-      rootLake.bucketExpr(col("_docid").cast(keyType)).as(bucketCol)))
-    val batch = tombstones.fold(upserts)(upserts.unionByName(_))
-    // The clustered cache exists so K tables' explode chains share ONE
-    // from_json pass and ONE shuffle. With a single-table catalog the lone
-    // write's own shuffle already is the batch's one shuffle, so neither
-    // the cache (and its materialization barrier) nor an up-front
-    // clustering pays: the merge computes the batch inline (r8).
     val multiTable = tables.size > 1
-    val clustered =
-      if (multiTable) rootLake.clusterForWrite(batch).persist() else batch
-    // materialize the cache with ONE clean parallel job before the
-    // per-table merge fan-out (r8): the concurrent merge jobs all
-    // reference the same uncomputed cache, and Spark's per-block lock
-    // makes every late-arriving task BLOCK (holding its slot) while the
-    // first computes the partition. One noop pass fills the cache at full
-    // parallelism; the merges then read warm blocks.
-    if (multiTable) clustered.write.format("noop").mode("overwrite").save()
+    val batch = prebuilt.getOrElse {
+      val (rootLake, rootSnap) = lakes(rootT.fullName)
+      clusterBatch(registry, rootLake, rootSnap, parsed, allDeletes,
+        persist = multiTable)
+    }
+    val clustered = batch.frame
 
     // the bucket column a table's frames pass through: none for a table
-    // whose layout differs from the root's (a partial rebucket, or a
+    // whose layout differs from the batch's (a partial rebucket, or a
     // root-key column of another type) — its prepareDelta recomputes the
     // bucket and its write shuffles as before
-    def passOf(t: TableSpec): Seq[String] =
-      if (multiTable && table(t).buckets == rootBuckets &&
-        rootKeyType(t).contains(keyType)) Seq(bucketCol)
+    def passOf(t: TableSpec): Seq[String] = {
+      val snap = lakes(t.fullName)._2
+      if (batch.persisted && lakes(t.fullName)._1.bucketsOf(snap) ==
+        batch.buckets && snap.schema.find(_.name == rootKeyOf(t))
+          .exists(_.dataType == batch.keyType)) Seq(LakeTable.BucketCol)
       else Nil
+    }
     val docs = clustered.filter(!col("_gdel"))
     def frameOf(t: TableSpec, pass: Seq[String]): DataFrame = {
       // within-doc duplicate keys need a dedup window ONLY for ID-keyed
@@ -502,23 +527,24 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
         col("_gdoc"), extraCols = "_seq" +: pass, withOrd = needsKeyDedup)
       if (!needsKeyDedup) raw
       else raw
-        // the bucket leads the window keys, so the clustering satisfies it
-        .withColumn("_krn", row_number().over(Window
+        // the bucket leads the window keys, so the clustering satisfies
+        // it; the merge's projection drops `_krn` and `_gord`
+        .select(col("*"), row_number().over(Window
           .partitionBy((pass ++ t.keyColumns).map(col): _*)
-          .orderBy(col("_seq").desc, col("_gord").desc)))
+          .orderBy(col("_seq").desc, col("_gord").desc)).as("_krn"))
         .filter(col("_krn") === 1)
-        .drop("_krn", "_gord")
     }
-    def deletesOf(pass: Seq[String]): Option[DataFrame] =
-      allDeletes.map(_ => clustered.filter(col("_gdel"))
-        .select((Seq("_docid", "_seq") ++ pass).map(col): _*))
+    // the tombstones, with or without the bucket column
+    val deletes: Map[Seq[String], DataFrame] = allDeletes.toSeq.flatMap { _ =>
+      val dels = clustered.filter(col("_gdel"))
+      tables.map(passOf).distinct.map(pass =>
+        pass -> dels.select((Seq("_docid", "_seq") ++ pass).map(col): _*))
+    }.toMap
     val rowSeq = if (monotoneSeq) Some("_seq") else None
-    // the applied-delete count comes from the ROOT table's merge lineage
-    // (its Observation already counted tombstones) — not a count() job
-    var nDel = 0L
-    def readDel(snap: graft.lake.Snapshot): Long =
-      snap.lineage.lastOption.filter(_.tag == commitTag)
-        .map(_.deleted).getOrElse(0L)
+    // the applied upsert and delete counts come from the ROOT table's
+    // merge lineage (its Observation on the write counted them) — not a
+    // count() job, and exact under task retries
+    var counts = (0L, 0L)
 
     // per-table merges run CONCURRENTLY (independent lake tables, like the
     // reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
@@ -529,10 +555,13 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     import scala.concurrent.ExecutionContext.Implicits.global
     def mergeOne(t: TableSpec): Unit = {
       val pass = passOf(t)
-      val snap = table(t).merge(frameOf(t, pass), t.keyColumns,
-        rootKeyOf(t), commitTag, deleteRootKeys = deletesOf(pass),
-        rowSeqCol = rowSeq)
-      if (t.isRoot) nDel = readDel(snap)
+      val (lake, snap) = lakes(t.fullName)
+      val done = lake.merge(frameOf(t, pass), t.keyColumns, rootKeyOf(t),
+        commitTag, deleteRootKeys = deletes.get(pass), rowSeqCol = rowSeq,
+        at = Some(snap))
+      if (t.isRoot) counts = done.lineage.lastOption
+        .filter(_.tag == commitTag).map(l => (l.upserted, l.deleted))
+        .getOrElse((0L, 0L))
     }
     try {
       // wait for EVERY merge before surfacing a failure: a fail-fast wait
@@ -542,8 +571,8 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       val merges = tables.map(t => Future(mergeOne(t)))
       merges.foreach(Await.ready(_, Duration.Inf))
       merges.flatMap(_.value).foreach(_.get)
-    } finally { if (multiTable) clustered.unpersist(); () }
-    (tables.size, nDel)
+    } finally { if (batch.persisted) clustered.unpersist(); () }
+    (tables.size, counts._1, counts._2)
   }
 
   /** incr (index.ts:43-72): like load, but unchanged (ID, REV) docs are
@@ -875,8 +904,8 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       .select(col("_w.*"))
     val parsed = latest
       .select(col("_docid"), col("_seq"), gdoc.as("_gdoc"))
-    val (nTables, _) =
-      mergeParsed(registry, parsed, commitTag, None, monotoneSeq = true)
+    val (nTables, _, _) = mergeParsed(registry, Map.empty, None, parsed,
+      commitTag, None, monotoneSeq = true)
     ApplyStats(total, total, 0, 0, nTables)
   }
 
@@ -1100,4 +1129,36 @@ object Engine {
 
   /** Test hook: simulate a process restart (cold registry cache). */
   private[graft] def clearRegistryCache(): Unit = registryCache.clear()
+
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.util.LongAccumulator
+
+  private def skipped(r: InternalRow, skipOrd: Int): Boolean =
+    skipOrd >= 0 && !r.isNullAt(skipOrd) && r.getBoolean(skipOrd)
+
+  /** The per-partition step of [[Engine.InferPass]]: drops (and counts)
+    * the revision-skipped rows and folds every other row's document into
+    * a partition tree, added to the accumulators when the task ends. */
+  private def inferStep(entity: String, docOrd: Int, skipOrd: Int,
+      tree: TreeAccumulator, docs: LongAccumulator, skips: LongAccumulator)
+      : Iterator[InternalRow] => Iterator[InternalRow] = it => {
+    val a = new Infer.DocAnalyzer(entity)
+    var nSkip = 0L
+    org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+      if (a.docs > 0) tree.add(a.tree)
+      docs.add(a.docs)
+      skips.add(nSkip)
+    }
+    it.filter { r =>
+      val skip = skipped(r, skipOrd)
+      if (skip) nSkip += 1
+      else if (!r.isNullAt(docOrd)) a.add(r.getUTF8String(docOrd).getBytes)
+      !skip
+    }
+  }
+
+  /** [[inferStep]] without the inference: drops the skipped rows. */
+  private def skipStep(skipOrd: Int)
+      : Iterator[InternalRow] => Iterator[InternalRow] =
+    it => if (skipOrd < 0) it else it.filter(r => !skipped(r, skipOrd))
 }

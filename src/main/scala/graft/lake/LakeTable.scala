@@ -309,24 +309,28 @@ final class LakeTable(val spark: SparkSession, val root: String,
   // ---------- DDL ----------
 
   /** Create the table (v1 snapshot, no data; the constructor's bucket
-    * count becomes the PERSISTED layout). No-op if it exists. */
+    * count becomes the PERSISTED layout) and return its current snapshot.
+    * No-op if it exists. */
   def create(schema: StructType, keyCols: Seq[String],
-      rootKey: String): Unit = if (!exists()) {
+      rootKey: String): Snapshot = snapshotOpt().getOrElse {
     fio.mkdirs(new HPath(dir, "data"))
-    // publish may lose to a concurrent creator — that's the no-op case
-    publishSnapshot(Snapshot(1, 1, Map(1 -> schema), keyCols, rootKey, Nil,
+    val v1 = Snapshot(1, 1, Map(1 -> schema), keyCols, rootKey, Nil,
       Nil, Nil, numBuckets = numBuckets,
-      timeMs = System.currentTimeMillis()))
-    ()
+      timeMs = System.currentTimeMillis())
+    // publish may lose to a concurrent creator — that's the no-op case
+    if (publishSnapshot(v1)) v1 else snapshot()
   }
 
   /** Additive schema evolution (alterTables, sqlDDL.ts:27-65): commit a
     * new schema version (and refreshed key columns). Existing files keep
-    * their old schema version and are cast on read. No-op when unchanged. */
+    * their old schema version and are cast on read. No-op when unchanged.
+    * `at`: the current snapshot when the caller already holds it. */
   def evolve(newSchema: StructType, keyCols: Seq[String],
-      rootKey: String): Snapshot = {
+      rootKey: String, at: Option[Snapshot] = None): Snapshot = {
+    var cur = at
     while (true) {
-      val s = snapshot()
+      val s = cur.getOrElse(snapshot())
+      cur = None
       if (s.schema == newSchema && s.keyCols == keyCols &&
         s.rootKey == rootKey) return s
       val ver = if (s.schema == newSchema) s.schemaVer else s.schemaVer + 1
@@ -873,7 +877,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
 
   /** The table's EFFECTIVE bucket count: the snapshot's persisted layout;
     * constructor fallback only for pre-persistence snapshots. */
-  private def bucketsOf(s: Snapshot): Int =
+  def bucketsOf(s: Snapshot): Int =
     if (s.numBuckets > 0) s.numBuckets else numBuckets
 
   /** Bucket expression over the table's root-key column — co-partitions
@@ -893,12 +897,12 @@ final class LakeTable(val spark: SparkSession, val root: String,
   def buckets: Int = bucketsOf(snapshot())
 
   /** Hash-partition a frame that carries [[BucketCol]] exactly the way
-    * [[writeDelta]] does. A delta write over such a frame (its bucket
-    * column passed through, see [[prepareDelta]]) plans no exchange of its
-    * own: Spark drops a repartition whose child already has that hash
-    * partitioning. */
-  def clusterForWrite(df: DataFrame): DataFrame =
-    df.repartition(writeParts(bucketsOf(snapshot())), col(BucketCol))
+    * [[writeDelta]] does under the layout of `s`. A delta write over such
+    * a frame (its bucket column passed through, see [[prepareDelta]])
+    * plans no exchange of its own: Spark drops a repartition whose child
+    * already has that hash partitioning. */
+  def clusterForWrite(df: DataFrame, s: Snapshot): DataFrame =
+    df.repartition(writeParts(bucketsOf(s)), col(BucketCol))
 
   // SCALE-ADAPTIVE task count (r8, guide §2.2/§6): hash-partitioning on
   // the bucket COLUMN keeps every bucket's rows in one task whatever the
@@ -928,6 +932,10 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * on the same write, not a separate scan, and nothing is persisted.
     * A second job runs only when some bucket hit the delta cap.
     *
+    * `at`: the table's current snapshot when the caller already holds it
+    * (the engine reads each table's snapshot once per batch); read from
+    * the log otherwise.
+    *
     * Seq domains: `rowSeqCol` present ⇒ the caller's monotone event
     * sequence (CDC lsn — exact global LWW, late events can't clobber newer
     * rows); absent ⇒ the table's commit seq (batch-granular). The first
@@ -942,9 +950,10 @@ final class LakeTable(val spark: SparkSession, val root: String,
       commitTag: String,
       deleteRootKeys: Option[DataFrame] = None,
       rowSeqCol: Option[String] = None,
+      at: Option[Snapshot] = None,
   ): Snapshot = {
     val t0 = System.nanoTime()
-    val s = snapshot()
+    val s = at.getOrElse(snapshot())
     if (s.hasCommit(commitTag)) return s // idempotent re-commit
     val up = prepareDelta(s, updates, rootKeyCol, deleteRootKeys, rowSeqCol)
     val (deltaSegs, upserted, deleted) = writeDelta(s, up)
@@ -1018,36 +1027,40 @@ final class LakeTable(val spark: SparkSession, val root: String,
         s"updates frame ${updates.columns.mkString("(", ",", ")")}")
     val metaTarget = withMeta(s.schema)
     val newSeq = s.version + 1L
-    val seqOf: DataFrame => org.apache.spark.sql.Column = df =>
-      rowSeqCol.filter(df.columns.contains)
-        // try_cast: lenient regardless of the session's ANSI mode — the
-        // engine never flips session-global conf (ADVICE r4)
+    val keyType = metaTarget(rootKeyCol).dataType
+    // ONE projection per side: every target column cast (null where the
+    // frame lacks it), the visibility seq, the tombstone marker, and the
+    // bucket. An incoming bucket column is KEPT, not recomputed:
+    // Engine.load clusters the batch by bucket once (clusterForWrite) and
+    // every table's write inherits that partitioning.
+    def project(df: DataFrame, given: Map[String, Column]): DataFrame = {
+      val have = df.columns.toSet
+      def value(n: String): Column = given.getOrElse(n,
+        if (have(n)) col(n) else lit(null))
+      val bucket =
+        if (have(BucketCol)) col(BucketCol)
+        else bucketExpr(value(rootKeyCol).cast(keyType), bucketsOf(s))
+      df.select(metaTarget.fields.toSeq.map(f =>
+        value(f.name).cast(f.dataType).as(f.name)) :+ bucket.as(BucketCol): _*)
+    }
+    val upRows = project(updates, Map(
+      // try_cast: lenient regardless of the session's ANSI mode — the
+      // engine never flips session-global conf (ADVICE r4)
+      SeqCol -> rowSeqCol
         .map(c => coalesce(col(c).try_cast(LongType), lit(newSeq)))
-        .getOrElse(lit(newSeq))
-    // an incoming bucket column is KEPT, not recomputed: Engine.load
-    // clusters the batch by bucket once (clusterForWrite) and every
-    // table's write inherits that partitioning
-    val bucketed: DataFrame => DataFrame = df =>
-      if (df.columns.contains(BucketCol)) df
-      else df.withColumn(BucketCol, bucketExpr(col(rootKeyCol), bucketsOf(s)))
-    val upRows = bucketed(align(updates
-      .withColumn(SeqCol, seqOf(updates))
-      .withColumn(DelCol, lit(false)), metaTarget, Seq(BucketCol)))
+        .getOrElse(lit(newSeq)),
+      DelCol -> lit(false)))
     val tombRows = deleteRootKeys.map { dk =>
       // delete-key frame: first column = root key, optional second = seq.
       // Under the lsn domain each delete MUST carry its own lsn (a
       // commit-seq default would never shadow lsn-domain rows).
-      val named =
-        if (dk.columns.length >= 2) dk.toDF(rootKeyCol +: dk.columns.tail.toSeq: _*)
-        else dk.toDF(rootKeyCol)
-      require(domain == "commit" || named.columns.length >= 2,
+      require(domain == "commit" || dk.columns.length >= 2,
         s"table $name: lsn-domain deletes need an explicit delete lsn")
-      val seqExpr =
-        if (domain == "lsn") col(named.columns(1)).try_cast(LongType)
-        else lit(newSeq) // commit domain: ignore any caller seq — one domain
-      bucketed(align(named
-        .withColumn(SeqCol, seqExpr)
-        .withColumn(DelCol, lit(true)), metaTarget, Seq(BucketCol)))
+      project(dk, Map(
+        rootKeyCol -> col(dk.columns(0)),
+        SeqCol -> (if (domain == "lsn") col(dk.columns(1)).try_cast(LongType)
+          else lit(newSeq)), // commit domain: ignore any caller seq
+        DelCol -> lit(true)))
     }
     tombRows.fold(upRows)(upRows.unionByName(_))
   }

@@ -227,41 +227,45 @@ object Infer {
 
   private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
 
-  /** Streaming equivalent of `analyzeDocuments` over raw UTF-8 BYTES:
-    * drives the attribute tree straight from Jackson tokens — no JValue
+  /** Streaming equivalent of `analyzeDocuments` over raw UTF-8 BYTES,
+    * one document at a time, so a pass that does other work per row (the
+    * engine's parse-and-cluster pass) analyzes the rows as they stream
+    * through. Jackson tokens drive the attribute tree directly — no JValue
     * AST is ever built. The AST path allocates ~50 objects per document
     * (builders, vectors, field tuples, value wrappers); at 10^6-doc
     * micro-batches that allocation traffic is the dominant GC/bandwidth
-    * load of the inference job and hits the many-core level hardest.
-    * Jackson parses UTF-8 natively, so handing it the bytes also skips
-    * the UTF8String → java.lang.String decode (a UTF-16 expansion + copy
-    * of every document). String lengths still count UTF-16 units, as the
-    * AST path does (JS `length`). Each document observes into a scratch
-    * tree that merges in only on success, so a malformed document is
-    * skipped whole (exactly like the parse-then-analyze path). */
-  def analyzeDocumentsBytes(entity: String,
-      docs: Iterator[Array[Byte]],
-      counter: Long => Unit = _ => ()): Attr = {
-    val root = new Attr(entity, DType.Arr)
-    val elem = root.child(entity)
-    var n = 0L
-    while (docs.hasNext) {
-      val bytes = docs.next()
+    * load of the inference and hits the many-core level hardest. Jackson
+    * parses UTF-8 natively, so handing it the bytes also skips the
+    * UTF8String → java.lang.String decode (a UTF-16 expansion + copy of
+    * every document). String lengths still count UTF-16 units, as the AST
+    * path does (JS `length`). Each document observes into a scratch tree
+    * that merges in only on success, so a malformed document is skipped
+    * whole (exactly like the parse-then-analyze path). */
+  final class DocAnalyzer(entity: String) {
+    private val root = new Attr(entity, DType.Arr)
+    private val elem = root.child(entity)
+    private var n = 0L
+
+    /** Documents folded in so far (malformed ones are not counted). */
+    def docs: Long = n
+
+    /** Fold in one document; a malformed one leaves the tree untouched. */
+    def add(doc: Array[Byte]): Unit = {
       val scratch = new Attr(entity)
       val ok =
         try {
-          val p = jsonFactory.createParser(bytes)
+          val p = jsonFactory.createParser(doc)
           try { p.nextToken(); observeParsed(scratch, p); true }
           finally p.close()
         } catch { case _: Exception => false }
-      if (ok) {
-        mergeInto(elem, scratch)
-        counter(1L)
-        n += 1
-      }
+      if (ok) { mergeInto(elem, scratch); n += 1 }
     }
-    if (n > root.maxLength) root.maxLength = n
-    root
+
+    /** The tree so far: the root's maxLength is the document count. */
+    def tree: Attr = {
+      if (n > root.maxLength) root.maxLength = n
+      root
+    }
   }
 
   /** Token-driven mirror of [[observe]] (parser positioned ON the value).
@@ -415,4 +419,32 @@ object Infer {
       a
     case _ => throw new IllegalArgumentException("bad registry json")
   }
+}
+
+/** Lattice-merged attribute tree as a Spark accumulator: each task adds
+  * the tree of the documents it analyzed and the driver joins them with
+  * [[Infer.mergeInto]]. The join is idempotent, so a retried or
+  * speculated task adds nothing the first attempt did not. */
+final class TreeAccumulator(entity: String)
+    extends org.apache.spark.util.AccumulatorV2[Attr, Attr] {
+  private var acc: Attr = null
+  override def isZero: Boolean = acc == null
+  override def copy(): TreeAccumulator = {
+    val c = new TreeAccumulator(entity)
+    if (acc != null) c.acc = acc.deepCopy()
+    c
+  }
+  override def reset(): Unit = acc = null
+  override def add(t: Attr): Unit =
+    acc = if (acc == null) t.deepCopy() else Infer.mergeInto(acc, t)
+  override def merge(
+      other: org.apache.spark.util.AccumulatorV2[Attr, Attr]): Unit =
+    other match {
+      case o: TreeAccumulator => if (o.acc != null) add(o.acc)
+      case o => throw new UnsupportedOperationException(
+        s"cannot merge ${o.getClass.getName} into a TreeAccumulator")
+    }
+  /** The joined tree; the lattice bottom (no document seen) when empty. */
+  override def value: Attr =
+    if (acc == null) Infer.analyzeDocuments(entity, Nil) else acc
 }

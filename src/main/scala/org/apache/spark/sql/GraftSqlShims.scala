@@ -4,10 +4,12 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** The one `private[sql]` doorway the streaming changefeed source needs:
-  * a v1 `Source.getBatch` must return a DataFrame whose logical plan is
-  * marked `isStreaming = true` (MicroBatchExecution asserts it), and the
-  * only constructor for that is `SparkSession.internalCreateDataFrame`.
+/** The `private[sql]` doorway to `SparkSession.internalCreateDataFrame`,
+  * a DataFrame over an `RDD[InternalRow]` with no encoder round trip:
+  *  - a v1 `Source.getBatch` must return a DataFrame whose logical plan is
+  *    marked `isStreaming = true` (MicroBatchExecution asserts it);
+  *  - the engine runs each row of a batch through a per-partition step
+  *    (schema inference) on its way into the clustering pass.
   * Same-package shim, nothing else reaches in. */
 object GraftSqlShims {
   def streamingDataFrame(
@@ -15,4 +17,15 @@ object GraftSqlShims {
       rdd: RDD[InternalRow],
       schema: StructType): DataFrame =
     spark.internalCreateDataFrame(rdd, schema, isStreaming = true)
+
+  /** `df`'s rows as a DataFrame over the RDD that computes them: every
+    * query that reads the result reuses the exchanges under `df` (under
+    * adaptive execution they run here). */
+  def fromRdd(df: DataFrame): DataFrame = mapPartitionsInternal(df, identity)
+
+  /** `df`'s rows with each partition passed through `f`, same schema. */
+  def mapPartitionsInternal(df: DataFrame,
+      f: Iterator[InternalRow] => Iterator[InternalRow]): DataFrame =
+    df.sparkSession.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
+      df.queryExecution.toRdd.mapPartitions(f), df.schema)
 }

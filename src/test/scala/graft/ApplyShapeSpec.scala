@@ -22,7 +22,9 @@ import graft.lake.LakeTable
   * and every table's delta write inherits that partitioning (no exchange
   * of its own, still one file per bucket dir, same rows and layout as
   * tables merged one by one); a table whose layout differs from the root's
-  * falls back to its own shuffle; the incr revision scan runs once. */
+  * falls back to its own shuffle; the incr revision scan runs once; a
+  * steady-state batch infers its schema inside the clustering pass, and a
+  * batch that widens the schema lands as a single-batch apply would. */
 class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -251,5 +253,113 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .filter(col("ID").isin("k-5", "k-15")).orderBy("ID")
       .select("REV").as[String].collect().toSeq
     assert(revs == Seq("3", "1")) // k-15 (rev 3) sorts before k-5 (rev 1)
+  }
+
+  // root + id-keyed array child + object child: a 3-table lake
+  private def doc3(i: Int, rev: Int, extra: String = ""): String =
+    s"""{"id":"k-$i","rev":"$rev","n":$i,"name":"n$i-$rev",""" +
+      s""""items":[{"id":"a$i","q":$rev},{"id":"b$i","q":${rev + 1}}],""" +
+      s""""meta":{"m":"m$i-$rev"}$extra}"""
+
+  /** Jobs started by `body`, each with its stages' call sites. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(js.stageInfos.map(_.details).mkString("\n"))
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq
+  }
+
+  test("steady-state incr batch with re-deliveries: at most 10 jobs, and " +
+      "the schema inference rides the clustering pass") {
+    val root = SparkTestSession.tmpDir("graft-jobs-")
+    val e = new Engine(spark, root, numBuckets = 8)
+    e.applyEvents("ent", events((0 until 40).map(i =>
+      (i.toLong, "insert", doc3(i, 1)))), "b:1", incremental = true)
+    e.applyEvents("ent", events((0 until 20).map(i =>
+      (100L + i, "update", doc3(i, 2)))), "b:2", incremental = true)
+    assert(tablesOf(e, "ent").size == 3)
+    // 20 re-delivered revisions and 20 new ones, no schema change
+    val next = events((0 until 20).map(i => (100L + i, "update",
+      doc3(i, 2))) ++ (20 until 40).map(i => (200L + i, "update", doc3(i, 2))))
+    var stats: graft.engine.ApplyStats = null
+    val jobs = jobsOf { stats = e.applyEvents("ent", next, "b:3",
+      incremental = true) }
+    assert(stats.skippedUnchanged == 20 && stats.dedupedDocs == 20, stats)
+    assert(jobs.size <= 10, s"${jobs.size} jobs:\n${jobs.mkString("\n--\n")}")
+    assert(!jobs.exists(_.contains("Engine.inferBatch")),
+      jobs.filter(_.contains("Engine.inferBatch")).mkString("\n--\n"))
+  }
+
+  /** Every row of each table, and the registry tree, in a form that does
+    * not depend on column or attribute insertion order. */
+  private def lakeState(e: Engine): (Map[String, Seq[String]], String) = {
+    val tree = e.loadRegistry("ent").get
+    def canon(a: graft.schema.Attr): String =
+      s"${a.name}:${a.dataType.tag}:${a.maxLength}" + a.attributes.values
+        .map(canon).toSeq.sorted.mkString("[", ",", "]")
+    val rows = Catalog.fromTree(tree).map { t =>
+      val df = e.table(t).read()
+      t.fullName -> df.select(df.columns.sorted.map(col): _*).collect()
+        .map(_.toString).sorted.toSeq
+    }.toMap
+    (rows, canon(tree))
+  }
+
+  test("speculative parse: widening, new-table, re-delivered and " +
+      "delete-only batches land as one single-batch apply does") {
+    import graft.engine.ApplyStats
+    val base = (0 until 30).map(i => (i.toLong, "insert", doc3(i, 1)))
+    // (a) a new scalar field
+    val a = (0 until 10).map(i =>
+      (100L + i, "update", doc3(i, 2, ""","extra":"x$i"""")))
+    // (b) a number field widened to text
+    val b = (10 until 15).map(i => (200L + i, "update",
+      doc3(i, 2).replace(s""""n":$i""", s""""n":"t$i"""")))
+    // (c) a new id-keyed array: a new child table
+    val c = (15 until 20).map(i => (300L + i, "update",
+      doc3(i, 2, s""","parts":[{"id":"p$i","w":$i}]""")))
+    // (d) (c) delivered again: every doc revision-skipped
+    val d = c
+    // (e) deletes only
+    val del = (25 until 28).map(i =>
+      (400L + i, "delete", s"""{"id":"k-$i"}"""))
+
+    val root = SparkTestSession.tmpDir("graft-spec-")
+    val e = new Engine(spark, root, numBuckets = 8)
+    e.applyEvents("ent", events(base), "b:0", incremental = true)
+    assert(tablesOf(e, "ent").size == 3)
+    val got = Seq(a, b, c, d, del).zipWithIndex.map { case (evs, i) =>
+      e.applyEvents("ent", events(evs), s"b:${i + 1}", incremental = true)
+    }
+    assert(got == Seq(
+      ApplyStats(10, 10, 0, 0, 3),
+      ApplyStats(5, 5, 0, 0, 3),
+      ApplyStats(5, 5, 0, 0, 4),
+      ApplyStats(0, 0, 0, 5, 4),
+      ApplyStats(3, 0, 3, 0, 4)))
+    assert(tablesOf(e, "ent").size == 4)
+
+    val freshRoot = SparkTestSession.tmpDir("graft-spec-fresh-")
+    val fresh = new Engine(spark, freshRoot, numBuckets = 8)
+    fresh.applyEvents("ent", events(base ++ a ++ b ++ c ++ d ++ del), "f:1",
+      incremental = true)
+    val (gotRows, gotTree) = lakeState(e)
+    val (wantRows, wantTree) = lakeState(fresh)
+    assert(gotTree == wantTree)
+    assert(gotRows.keySet == wantRows.keySet)
+    wantRows.foreach { case (t, rows) =>
+      assert(gotRows(t) == rows, t)
+      assert(rows.nonEmpty, t)
+    }
   }
 }

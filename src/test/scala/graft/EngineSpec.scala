@@ -874,4 +874,43 @@ class EngineSpec extends AnyFunSuite {
     assert((dataDirs() intersect orphans).isEmpty)
     assert(state(e) == want)
   }
+
+  test("metrics log: deduped_docs is the root table's upsert count of " +
+      "each batch, as the batch's ApplyStats reports it") {
+    val lakeRoot = SparkTestSession.tmpDir("graft-mlog-lake-")
+    val ckpt = SparkTestSession.tmpDir("graft-mlog-ckpt-")
+    val srcDir = SparkTestSession.tmpDir("graft-mlog-src-")
+    val e = new Engine(spark, lakeRoot, numBuckets = 4)
+    def doc(i: Int, rev: Int) =
+      s"""{"id":"k-$i","rev":"$rev","v":"v$i-$rev","xs":[{"id":"x$i"}]}"""
+    // inserts; then updates with in-batch duplicates, re-deliveries and
+    // deletes; then a batch of re-deliveries only
+    val batches = Seq(
+      (0 until 12).map(i => (i.toLong, "insert", doc(i, 1))),
+      (0 until 6).map(i => (100L + i, "update", doc(i, 2))) ++
+        (0 until 3).map(i => (110L + i, "update", doc(i, 3))) ++
+        (6 until 9).map(i => (i.toLong, "insert", doc(i, 1))) ++
+        (9 until 11).map(i => (120L + i, "delete", s"""{"id":"k-$i"}""")),
+      (0 until 3).map(i => (110L + i, "update", doc(i, 3))))
+    batches.zipWithIndex.foreach { case (evs, i) =>
+      evs.toDF("lsn", "op", "doc").coalesce(1).write.json(s"$srcDir/f$i")
+    }
+    val seen = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val q = e.stream("ent", spark.readStream.schema("lsn LONG, op STRING, doc STRING")
+      .option("maxFilesPerTrigger", "1").json(s"$srcDir/*/"), ckpt,
+      queryName = "mlog", incremental = true,
+      onStats = (b, st) => { seen.put(b, st.dedupedDocs); () })
+    try q.processAllAvailable() finally q.stop()
+
+    val rootT = tablesOf(e, "ent").find(_.isRoot).get
+    val lineage = e.table(rootT).snapshot().lineage
+      .map(l => l.tag -> l.upserted).toMap
+    val logged = e.metricsLog("ent").select("batch", "deduped_docs")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(logged == Map(0L -> 12L, 1L -> 6L, 2L -> 0L), logged)
+    assert(logged == seen.asScala.toMap)
+    logged.foreach { case (b, n) =>
+      assert(lineage.getOrElse(s"mlog:$b", 0L) == n, s"batch $b")
+    }
+  }
 }

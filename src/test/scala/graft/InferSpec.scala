@@ -158,14 +158,18 @@ class InferSpec extends AnyFunSuite {
   // root maxLength is the per-call doc count — not part of any table/column
   private def stripRootMax(a: Attr): Attr = { a.maxLength = 0; a }
 
-  private def utf8(texts: Seq[String]): Iterator[Array[Byte]] =
-    texts.iterator.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  // the byte analyzer the engine runs, one document at a time
+  private def viaBytes(texts: Seq[String]): Attr = {
+    val a = new Infer.DocAnalyzer("e")
+    texts.foreach(t => a.add(t.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    a.tree
+  }
 
   test("streaming analyzer ≡ AST analyzer (same tree, byte-identical registry JSON)") {
     forSamples(Gen.listOfN(6, genDoc)) { ds =>
       val texts = ds.map(Json.render)
       val viaAst = Infer.analyzeDocuments("e", ds)
-      val viaStream = Infer.analyzeDocumentsBytes("e", utf8(texts))
+      val viaStream = viaBytes(texts)
       assert(Json.render(Infer.toJson(stripRootMax(viaStream))) ==
         Json.render(Infer.toJson(stripRootMax(viaAst))))
     }
@@ -182,7 +186,7 @@ class InferSpec extends AnyFunSuite {
     val good = edge.filterNot(_.endsWith("\"broken\":"))
     val viaAst = Infer.analyzeDocuments("e",
       good.flatMap(Json.parseOpt))
-    val viaStream = Infer.analyzeDocumentsBytes("e", utf8(edge))
+    val viaStream = viaBytes(edge)
     assert(Json.render(Infer.toJson(stripRootMax(viaStream))) ==
       Json.render(Infer.toJson(stripRootMax(viaAst))))
     // "crème brûlée 😀": 13 BMP chars + a surrogate pair = 15 UTF-16 units

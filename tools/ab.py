@@ -1,0 +1,127 @@
+#!/usr/bin/env python3
+"""Paired A/B of two checkouts on one perfbench workload.
+
+    python3 tools/ab.py --parent ../parent --change . \\
+        --workload read_while_write --pairs 10 --seconds 10
+
+Runs `perfbench/run.py` in the parent checkout and in the change checkout
+once per seed (seeds first-seed .. first-seed+pairs-1), alternating which
+side runs first from pair to pair so slow drift of the host falls on
+both. Each run builds its own checkout. Prints, per metric, the median
+of each side, the change's wins out of the pairs (the better side of
+each pair, per the metric's direction in BENCHMARK.json), and the
+parent's interquartile range and median. A claimed gain should win on
+most pairs and move the median by more than the parent's IQR.
+
+--out appends every run's result line (with side, seed and pair) to a
+JSON-lines file. The exit code is 1 when any run failed its checks.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+sys.dont_write_bytecode = True
+
+
+def directions(checkout):
+    """metric name -> "lower" | "higher", from BENCHMARK.json."""
+    with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    return {m["name"]: m["better"]
+            for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+
+
+def run_once(checkout, workload, seed, seconds, trace):
+    """One perfbench run; returns (result dict or None, exit code)."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", str(trace)]
+    p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    try:
+        return json.loads(lines[-1]), p.returncode
+    except (IndexError, ValueError):
+        sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
+        return None, p.returncode
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], q[2]
+
+
+def summarize(pairs, better):
+    """Rows of (metric, parent median, change median, wins, n, IQR)."""
+    names = sorted({k for p, c in pairs for k in p} &
+                   {k for p, c in pairs for k in c})
+    rows = []
+    for name in names:
+        both = [(p[name], c[name]) for p, c in pairs
+                if name in p and name in c]
+        ps = [x for x, _ in both]
+        cs = [y for _, y in both]
+        lower = better.get(name, "lower") == "lower"
+        wins = sum(1 for x, y in both if (y < x if lower else y > x))
+        q1, q3 = quartiles(ps)
+        rows.append((name, statistics.median(ps), statistics.median(cs),
+                     wins, len(both), q3 - q1))
+    return rows
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--parent", required=True, help="parent checkout dir")
+    ap.add_argument("--change", required=True, help="change checkout dir")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--first-seed", type=int, default=1)
+    ap.add_argument("--seconds", type=float, default=10.0)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--out", help="append each run's result to this JSONL")
+    a = ap.parse_args()
+
+    sides = {"parent": os.path.abspath(a.parent),
+             "change": os.path.abspath(a.change)}
+    better = directions(sides["change"])
+    pairs, failed = [], 0
+    for i in range(a.pairs):
+        seed = a.first_seed + i
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        got = {}
+        for side in order:
+            res, code = run_once(sides[side], a.workload, seed, a.seconds,
+                                 a.trace)
+            ok = (res is not None and code == 0 and res.get("correct")
+                  and not res.get("failed"))
+            failed += 0 if ok else 1
+            got[side] = {k: v["value"] for k, v in
+                         (res or {}).get("metrics", {}).items()}
+            if a.out:
+                with open(a.out, "a") as fh:
+                    fh.write(json.dumps({"side": side, "pair": i + 1,
+                                         "seed": seed, "ok": bool(ok),
+                                         "result": res}) + "\n")
+            print(f"pair {i + 1}/{a.pairs} seed {seed} {side}: "
+                  f"{'ok' if ok else 'FAILED'}", file=sys.stderr, flush=True)
+        if got["parent"] and got["change"]:
+            pairs.append((got["parent"], got["change"]))
+
+    print(f"{a.workload}: {len(pairs)} pairs, --seconds {a.seconds:g}, "
+          f"--trace {a.trace}, {failed} failed run(s)")
+    print(f"{'metric':34} {'parent':>12} {'change':>12} {'delta':>8} "
+          f"{'wins':>6} {'IQR':>10} {'IQR/med':>8}")
+    for name, pm, cm, wins, n, iqr in summarize(pairs, better):
+        delta = (cm - pm) / pm * 100 if pm else float("nan")
+        rel = iqr / pm if pm else float("nan")
+        print(f"{name:34} {pm:12.4g} {cm:12.4g} {delta:+7.1f}% "
+              f"{wins:>3}/{n:<2} {iqr:10.4g} {rel:8.3f}")
+    return 1 if failed else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
