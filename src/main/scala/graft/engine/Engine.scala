@@ -412,10 +412,13 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
 
   /** A batch's upserts and tombstones as one frame, each row tagged with
     * its root key's bucket (`buckets` of them), and the root-key type the
-    * bucket was hashed in. `persisted`: clustered by bucket, cached and
-    * filled. */
+    * bucket was hashed in. Both are the clustering's own, not the root
+    * table's after its DDL: a kept speculation was hashed under the
+    * batch-start snapshot, and the evolved root may type its key
+    * differently (a number widened to text reads as text either way) or,
+    * when evolve lost a publish race, carry a re-laid bucket count. */
   private final class Clustered(val frame: DataFrame, val buckets: Int,
-      val keyType: DataType, val persisted: Boolean)
+      val keyType: DataType)
 
   /** Build the [[Clustered]] batch from `parsed` (`_docid`, `_seq` and a
     * `_gdoc` struct matching `Flattener.readSchema(tree)`) under the root
@@ -457,7 +460,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
         c.write.format("noop").mode("overwrite").save()
         c
       }
-    new Clustered(frame, rootLake.bucketsOf(rootSnap), keyType, persist)
+    new Clustered(frame, rootLake.bucketsOf(rootSnap), keyType)
   }
 
   /** Steps 3-5 of an apply, shared by [[load]] and the bootstrap fast
@@ -497,11 +500,9 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     val rootElem = registry.attributes(registry.name)
     val rootT = tables.find(_.isRoot).get
     val multiTable = tables.size > 1
-    val batch = prebuilt.getOrElse {
-      val (rootLake, rootSnap) = lakes(rootT.fullName)
-      clusterBatch(registry, rootLake, rootSnap, parsed, allDeletes,
-        persist = multiTable)
-    }
+    val (rootLake, rootSnap) = lakes(rootT.fullName)
+    val batch = prebuilt.getOrElse(clusterBatch(registry, rootLake, rootSnap,
+      parsed, allDeletes, persist = multiTable))
     val clustered = batch.frame
 
     // the bucket column a table's frames pass through: none for a table
@@ -509,9 +510,9 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     // root-key column of another type) — its prepareDelta recomputes the
     // bucket and its write shuffles as before
     def passOf(t: TableSpec): Seq[String] = {
-      val snap = lakes(t.fullName)._2
-      if (batch.persisted && lakes(t.fullName)._1.bucketsOf(snap) ==
-        batch.buckets && snap.schema.find(_.name == rootKeyOf(t))
+      val (lake, snap) = lakes(t.fullName)
+      if (multiTable && lake.bucketsOf(snap) == batch.buckets &&
+        snap.schema.find(_.name == rootKeyOf(t))
           .exists(_.dataType == batch.keyType)) Seq(LakeTable.BucketCol)
       else Nil
     }
@@ -534,12 +535,9 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
           .orderBy(col("_seq").desc, col("_gord").desc)).as("_krn"))
         .filter(col("_krn") === 1)
     }
-    // the tombstones, with or without the bucket column
-    val deletes: Map[Seq[String], DataFrame] = allDeletes.toSeq.flatMap { _ =>
-      val dels = clustered.filter(col("_gdel"))
-      tables.map(passOf).distinct.map(pass =>
-        pass -> dels.select((Seq("_docid", "_seq") ++ pass).map(col): _*))
-    }.toMap
+    def deletesOf(pass: Seq[String]): Option[DataFrame] =
+      allDeletes.map(_ => clustered.filter(col("_gdel"))
+        .select((Seq("_docid", "_seq") ++ pass).map(col): _*))
     val rowSeq = if (monotoneSeq) Some("_seq") else None
     // the applied upsert and delete counts come from the ROOT table's
     // merge lineage (its Observation on the write counted them) — not a
@@ -557,7 +555,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       val pass = passOf(t)
       val (lake, snap) = lakes(t.fullName)
       val done = lake.merge(frameOf(t, pass), t.keyColumns, rootKeyOf(t),
-        commitTag, deleteRootKeys = deletes.get(pass), rowSeqCol = rowSeq,
+        commitTag, deleteRootKeys = deletesOf(pass), rowSeqCol = rowSeq,
         at = Some(snap))
       if (t.isRoot) counts = done.lineage.lastOption
         .filter(_.tag == commitTag).map(l => (l.upserted, l.deleted))
@@ -571,7 +569,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       val merges = tables.map(t => Future(mergeOne(t)))
       merges.foreach(Await.ready(_, Duration.Inf))
       merges.flatMap(_.value).foreach(_.get)
-    } finally { if (batch.persisted) clustered.unpersist(); () }
+    } finally { if (multiTable) clustered.unpersist(); () }
     (tables.size, counts._1, counts._2)
   }
 

@@ -1075,13 +1075,21 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * to the new visibility seq, the at-cap set is recomputed, and any
     * compaction re-runs over the merged segment view (the loser's earlier
     * compaction output is orphaned and vacuumed). The already-written
-    * delta FILES are never redone — only the metadata commit. */
+    * delta FILES are never redone — only the metadata commit. A head whose
+    * bucket count differs from `s0`'s (a [[rebucket]] published since the
+    * delta was written) fails the commit instead: the files are laid out
+    * under the old modulus, and the caller's frame may carry buckets
+    * hashed under it too. The tag stays uncommitted, so a retry of the
+    * same merge plans it again under the new layout. */
   private[lake] def commitDelta(s0: Snapshot, commitTag: String,
       keyCols: Seq[String], rootKeyCol: String, deltaSegs: Seq[Segment],
       upserted: Long, deleted: Long, t0: Long, domain: String): Snapshot = {
     var s = s0
     while (true) {
       if (s.hasCommit(commitTag)) return s // another writer applied our tag
+      if (bucketsOf(s) != bucketsOf(s0)) throw new IllegalStateException(
+        s"table $name was re-laid to ${bucketsOf(s)} buckets while commit " +
+          s"$commitTag wrote ${bucketsOf(s0)}-bucket deltas; retry the merge")
       // buckets already at the delta cap go straight to compaction (known
       // from the snapshot alone — no pre-scan of the batch needed)
       val atCap: Set[Int] = s.segments

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
 /** The `private[sql]` doorway to `SparkSession.internalCreateDataFrame`,
@@ -23,9 +24,17 @@ object GraftSqlShims {
     * adaptive execution they run here). */
   def fromRdd(df: DataFrame): DataFrame = mapPartitionsInternal(df, identity)
 
-  /** `df`'s rows with each partition passed through `f`, same schema. */
+  /** `df`'s rows with each partition passed through `f`, same schema.
+    * `df` is planned as a SQL execution of its own (named `graft.rows`):
+    * the exchanges and broadcasts that adaptive execution runs while
+    * planning it are reported to QueryExecutionListeners and the SQL UI
+    * like any action's, with their plan and metrics. The jobs that later
+    * read the returned frame belong to the queries that read it. */
   def mapPartitionsInternal(df: DataFrame,
-      f: Iterator[InternalRow] => Iterator[InternalRow]): DataFrame =
+      f: Iterator[InternalRow] => Iterator[InternalRow]): DataFrame = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("graft.rows"))(qe.toRdd)
     df.sparkSession.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
-      df.queryExecution.toRdd.mapPartitions(f), df.schema)
+      rows.mapPartitions(f), df.schema)
+  }
 }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -129,11 +130,11 @@ class ReadShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .toDF("lsn", "op", "doc"), "b:1", incremental = true)
     e.applyEvents("ent", (0 until 10).map(i => (100L + i, "update", doc(i, 2)))
       .toDF("lsn", "op", "doc"), "b:2", incremental = true)
-    // the revision join runs inside the parse-and-cluster pass, which
-    // reads the marked rows through their RDD, so no reported query holds
-    // its plan: the apply's jobs show the broadcast, and its shuffle
-    // stages are the dedup's and the clustering's alone — neither the
-    // lake side nor the join shuffles
+    // the revision join is planned as the execution that feeds the
+    // parse-and-cluster pass: it broadcasts, exactly one side is the lake
+    // scan, and that side plans no exchange. The apply's jobs show the one
+    // broadcast, and its shuffle stages are the dedup's and the
+    // clustering's alone
     val broadcasts = new java.util.concurrent.atomic.AtomicInteger()
     val shuffleWrites = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
@@ -151,6 +152,14 @@ class ReadShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .map(i => (200L + i, "update", doc(i, 2))).toDF("lsn", "op", "doc"),
       "b:3", incremental = true))
     finally spark.sparkContext.removeSparkListener(listener)
+    val joins = ps.flatMap(p => collect(p) { case j: BroadcastHashJoinExec => j })
+    assert(joins.size == 1, s"${joins.size} broadcast joins")
+    joins.foreach { j =>
+      val lakeSide = Seq(j.left, j.right).filter(s => lakeScans(s).nonEmpty)
+      assert(lakeSide.size == 1, j)
+      assert(shuffles(lakeSide.head) == 0,
+        s"revision scan planned a shuffle:\n${lakeSide.head}")
+    }
     assert(broadcasts.get == 1, "revision join did not broadcast")
     assert(shuffleWrites.get == 2, s"${shuffleWrites.get} shuffles")
     ps.foreach(p => assert(fileIndexScans(p).isEmpty, p))

@@ -80,4 +80,34 @@ class CommitRaceSpec extends AnyFunSuite {
     val got2 = t.read().collect().map(r => r.getString(0) -> r.getString(1))
     assert(got2.toSeq == Seq("k" -> "new"))
   }
+
+  test("a rebucket between write and commit fails the commit; a retry " +
+      "lands under the new layout") {
+    val t = newTable()
+    t.merge(Seq("k" -> "v0").toDF("ID", "V"), Seq("ID"), "ID", "seed")
+    val s0 = t.snapshot()
+    // a merge planned against the 4-bucket layout, re-laid before it
+    // commits: its delta is hashed mod 4
+    val up = t.prepareDelta(s0, (0 until 20).map(i => s"k$i" -> "new")
+      .toDF("ID", "V"), "ID", None, None)
+    val (segs, n, _) = t.writeDelta(s0, up)
+    t.rebucket(16, "grow")
+    val head = t.snapshot()
+    val err = intercept[IllegalStateException](t.commitDelta(s0, "late",
+      Seq("ID"), "ID", segs, n, 0, System.nanoTime(), "commit"))
+    assert(err.getMessage.contains("re-laid"))
+    assert(t.snapshot().version == head.version && !head.hasCommit("late"))
+    // the retried merge re-plans under the 16-bucket layout
+    val done = t.merge((0 until 20).map(i => s"k$i" -> "new").toDF("ID", "V"),
+      Seq("ID"), "ID", "late")
+    assert(done.hasCommit("late") && done.numBuckets == 16)
+    val want = (0 until 20).map(i => s"k$i" -> "new").toSet + ("k" -> "v0")
+    val rows = t.read().collect().map(r => r.getString(0) -> r.getString(1))
+    assert(rows.toSet == want)
+    // bucket-pruned lookups find every key where the new modulus puts it
+    val keys = want.map(_._1).toSeq
+    val hit = t.readWhere(org.apache.spark.sql.functions.col("ID")
+      .isin(keys: _*)).collect().map(r => r.getString(0) -> r.getString(1))
+    assert(hit.toSet == want)
+  }
 }
