@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.DataType
 
 import graft.catalog.{Catalog, TableSpec}
 import graft.flatten.Flattener
-import graft.lake.{LakeTable, Snapshot}
+import graft.lake.{LakeTable, Snapshot, VersionLog}
 import graft.schema.{Attr, Infer, Json, TreeAccumulator}
 
 /** Per-apply counts. `dedupedDocs` and `deletes` are the root table's
@@ -59,33 +59,16 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
   // lake root's scheme resolves to
   private val fio = new graft.lake.Fio(spark.sessionState.newHadoopConf())
 
-  private def registryDir(entity: String): HPath =
-    fio.qualify(new HPath(new HPath(lakeRoot), s"_registry_$entity"))
-
-  /** The newest registry version as (version, rendered JSON): one
-    * listing, a read only when the process-wide cache does not hold that
-    * file. A cache entry is checked against the file's identity (version,
-    * modification time, length), so a registry dir that was dropped and
-    * re-created in this process is never served from the old entry. */
-  private def newestRegistry(d: HPath): Option[(Int, String)] =
-    fio.list(d).flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("v") && n.endsWith(".json"))
-        Some(n.stripPrefix("v").stripSuffix(".json").toInt -> st)
-      else None
-    }.maxByOption(_._1).map { case (v, st) =>
-      val id = (v, st.getModificationTime, st.getLen)
-      val hit = Engine.registryCache.get(d.toString)
-      if (hit != null && hit._1 == id) (v, hit._2)
-      else {
-        val json = fio.readString(st.getPath)
-        Engine.registryCache.put(d.toString, (id, json))
-        (v, json)
-      }
-    }
+  /** An entity's schema registry: `_registry_<entity>/vNNNNN.json`, one
+    * rendered tree per version. The log caches the JSON text, not a
+    * tree: `Infer.mergeInto` widens its first argument in place, so every
+    * load parses a tree of its own. */
+  private def registryLog(entity: String): VersionLog[String] =
+    new VersionLog(fio, fio.qualify(
+      new HPath(new HPath(lakeRoot), s"_registry_$entity")), (_, json) => json)
 
   def loadRegistry(entity: String): Option[Attr] =
-    parseRegistry(newestRegistry(registryDir(entity)))
+    parseRegistry(registryLog(entity).latest())
 
   private def parseRegistry(raw: Option[(Int, String)]): Option[Attr] =
     raw.map(r => Infer.fromJson(Json.parse(r._2)))
@@ -94,10 +77,13 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     * it actually changed (VERDICT r5 #2: a steady-state stream must leave
     * O(schema-changes) registry files, not O(batches)). `prior` is the
     * newest (version, JSON) the caller loaded the registry from, so a
-    * steady-state batch compares against it without listing again. */
+    * steady-state batch compares against it without listing again. The
+    * publish is create-exclusive: when another writer published that
+    * version first, the apply fails before any table is touched, and its
+    * retry widens the newer registry — replacing the file would drop the
+    * other writer's widening. */
   private def saveRegistry(entity: String, tree: Attr,
       prior: Option[(Int, String)]): Unit = {
-    val d = registryDir(entity)
     // Normalize the root ENVELOPE's maxLength to 0 before persisting: for
     // the root array node it records the max docs one analyzer PARTITION
     // happened to see — a batch-size/partition-layout artifact, not
@@ -110,23 +96,17 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     val json = Json.render(Infer.toJson(norm))
     if (prior.exists(_._2 == json)) return // unchanged tree: no new version
     val next = prior.map(_._1).getOrElse(0) + 1
-    fio.writeAtomic(new HPath(d, f"v$next%05d.json"), json)
+    if (!registryLog(entity).publish(next, json))
+      throw new IllegalStateException(
+        s"schema registry of $entity: version $next was published by " +
+          "another writer during this apply; retry the apply")
   }
 
   /** Delete all but the newest `keep` registry versions of an entity —
     * run from [[maintain]] alongside snapshot vacuum. Old versions exist
     * only as manual-recovery history (readers always load the newest). */
-  def pruneRegistry(entity: String, keep: Int = 8): Int = {
-    val d = registryDir(entity)
-    val versions = fio.list(d).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(_.stripPrefix("v").stripSuffix(".json").toInt)
-      .sorted
-    val stale = versions.dropRight(math.max(1, keep))
-    stale.foreach(v =>
-      fio.delete(new HPath(d, f"v$v%05d.json"), recursive = false))
-    stale.size
-  }
+  def pruneRegistry(entity: String, keep: Int = 8): Int =
+    registryLog(entity).expire(math.max(1, keep), Set.empty)
 
   /** Schema inference over the rows of one batch, riding whichever job
     * reads them. `inferring` folds each partition's documents into `tree`
@@ -164,7 +144,8 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     new LakeTable(spark, lakeRoot, t.fullName, numBuckets)
 
   /** Maintenance pass over every table of an entity: force-compact all
-    * delta buckets (read-optimize) and vacuum unreferenced files.
+    * delta buckets (read-optimize) and vacuum unreferenced files; then
+    * prune the registry and fold the metrics log's rotated parts.
     * `expireTombstonesBelow` drops delete tombstones older than that seq
     * (delete-retention horizon — pass max applied lsn minus the pipeline's
     * out-of-orderness bound); `vacuumGraceMs` guards in-flight writers. */
@@ -181,6 +162,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       }
     }
     pruneRegistry(entity)
+    fio.foldLog(metricsPath(entity))
   }
 
   /** Grow every table of an entity to `newBuckets` hash buckets (see
@@ -314,7 +296,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     // the speculatively parsed batch, persisted until the merges finish
     var speculative: Option[Clustered] = None
     try {
-      val priorRaw = newestRegistry(registryDir(entity))
+      val priorRaw = registryLog(entity).latest()
       val prior = parseRegistry(priorRaw)
       // ONE LakeTable handle and ONE snapshot read per prior table: they
       // serve the revision scan, the clustering layout and the DDL
@@ -640,9 +622,11 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       "skippedUnchanged" -> JNum(s.skippedUnchanged.toString),
       "tables" -> JNum(s.tables.toString),
       "wallMs" -> JNum(wallMs.toString)))) + "\n"
-    fio.append(new HPath(new HPath(lakeRoot), s"_metrics_$entity.jsonl"),
-      line)
+    fio.append(metricsPath(entity), line)
   }
+
+  private def metricsPath(entity: String): HPath =
+    new HPath(new HPath(lakeRoot), s"_metrics_$entity.jsonl")
 
   /** The applied-event metrics log as a DataFrame — one row per applied
     * micro-batch (publish ts, query name, batch id, event/doc/delete/
@@ -657,8 +641,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     import graft.schema.{JNum, JObj, JStr}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val text = fio.readLog(
-      new HPath(new HPath(lakeRoot), s"_metrics_$entity.jsonl"))
+    val text = fio.readLog(metricsPath(entity))
     val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
     // lenient line parse: this is a metrics LOG, not a ledger — a torn
     // final line from a crash mid-append (plain O_APPEND write) must not
@@ -867,7 +850,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     val revStr = lsn.toString
     val (batchTree, total) = inferFlatRelation(entity, src, idExpr, revStr)
     if (total == 0) return ApplyStats(0, 0, 0, 0, 0)
-    val priorRaw = newestRegistry(registryDir(entity))
+    val priorRaw = registryLog(entity).latest()
     val registry = parseRegistry(priorRaw) match {
       case Some(t) => Infer.mergeInto(t, batchTree)
       case None    => batchTree
@@ -1118,16 +1101,6 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
 }
 
 object Engine {
-  /** Process-wide newest-registry cache per registry dir: ((version,
-    * modification time, length) of the file, rendered JSON). A hit needs
-    * the listed newest file to match that identity. */
-  private val registryCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      ((Int, Long, Long), String)]()
-
-  /** Test hook: simulate a process restart (cold registry cache). */
-  private[graft] def clearRegistryCache(): Unit = registryCache.clear()
-
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.util.LongAccumulator
 

@@ -307,9 +307,12 @@ final class Fio(conf: Configuration) extends Serializable {
     }
   }
 
+  private def partsOf(p: HPath): HPath =
+    new HPath(p.getParent, p.getName + ".parts")
+
   /** Rotating-segment append: one immutable part per call. */
   private def appendRotating(fs: FileSystem, p: HPath, s: String): Unit = {
-    val dir = new HPath(p.getParent, p.getName + ".parts")
+    val dir = partsOf(p)
     fs.mkdirs(dir)
     // millis + per-process monotonic seq keep same-millisecond appends
     // from one writer in order; the uuid keeps distinct writers apart
@@ -322,14 +325,37 @@ final class Fio(conf: Configuration) extends Serializable {
     finally out.close()
   }
 
-  /** Read back an [[append]]-built log: the base file (when present)
-    * followed by every rotated part in name (≈ time) order. */
-  def readLog(p: HPath): String = {
-    val base = if (exists(p)) readString(p) else ""
-    val parts = list(new HPath(p.getParent, p.getName + ".parts"))
-      .filter(_.isFile).sortBy(_.getPath.getName)
-      .map(st => readString(st.getPath))
-    (base +: parts).mkString
+  /** An [[append]]-built log as (its rotated parts, its lines): the base
+    * file's, then those of every part the base does not hold, in name
+    * (≈ time) order. Listing before reading the base leaves each listed
+    * part either held by the base read or unfolded across a [[foldLog]]. */
+  private def logState(p: HPath): (Seq[FileStatus], String) = {
+    val parts = list(partsOf(p)).filter(_.isFile).sortBy(_.getPath.getName)
+    val raw = if (exists(p)) readString(p) else ""
+    val nl = if (raw.startsWith(Fio.FoldMark)) raw.indexOf('\n') else -1
+    val held = if (nl < 0) Set.empty[String]
+      else raw.substring(Fio.FoldMark.length, nl).split(' ').toSet
+    (parts, raw.substring(nl + 1) + parts.filterNot(st =>
+      held(st.getPath.getName)).map(st => readString(st.getPath)).mkString)
+  }
+
+  /** Read back an [[append]]-built log. */
+  def readLog(p: HPath): String = logState(p)._2
+
+  /** Fold the rotated parts of an [[append]]-built log into its base, so
+    * an append-less store keeps a bounded number of files: the base is
+    * replaced by the log's lines under a first line naming every part it
+    * now holds, then those parts are deleted — a crash in between neither
+    * loses nor duplicates a line. Returns the parts deleted. Two folds of
+    * one log must not run at once. */
+  def foldLog(p: HPath): Int = {
+    val (parts, text) = logState(p)
+    if (parts.nonEmpty) {
+      writeAtomic(p, Fio.FoldMark +
+        parts.map(_.getPath.getName).mkString(" ") + "\n" + text)
+      parts.foreach(st => delete(st.getPath, recursive = false))
+    }
+    parts.size
   }
 
   def delete(p: HPath, recursive: Boolean): Boolean =
@@ -356,6 +382,9 @@ object Fio {
     * property). */
   private val appendable =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+
+  /** First-line prefix of a folded log's base file ([[Fio.foldLog]]). */
+  private val FoldMark = "#folded "
 
   /** Rotating-part sequence (same-millisecond ordering within a process). */
   private val partSeq = new java.util.concurrent.atomic.AtomicLong()

@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.{Dependency, OneToOneDependency, Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlShims, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -50,7 +50,8 @@ import graft.lake.{Fio, LakeTable}
   *    readable (snapshot JSON and segments on disk); one that is not
   *    falls forward to the next readable version — the head always is.
   *    A window whose start was vacuumed (e.g. a checkpoint older than
-  *    retention) throws rather than misreads, when the batch runs.
+  *    retention) throws rather than misreads, when the batch runs: a
+  *    window is planned only when a job runs over it.
   *
   * The batch plan is wrapped `isStreaming = true` (MicroBatchExecution's
   * v1 contract) via the one-line [[GraftSqlShims]] doorway. Schema is
@@ -144,23 +145,16 @@ final class ChangefeedSource(
     val from = start.fold(baseVersion)(ver).toInt
     val to = ver(end).toInt
     pin(from); pin(to)
-    // an inverted window (offsets a release with its own high-water could
-    // log out of order) covers versions already delivered: empty.
-    // cdf=true: Delta-CDF form — updates as update_preimage/postimage
-    // pairs (same schema; only the _change_type domain widens)
-    val rdd =
-      try {
-        val feed =
-          if (cdf) table.readChangesBetweenCdf(math.min(from, to), to)
-          else table.readChangesBetween(math.min(from, to), to)
-        feed.select(schema.fieldNames.toSeq.map(col): _*).queryExecution.toRdd
-      } catch {
-        // on restart Spark re-plans the last COMMITTED batch and never
-        // runs it; its start may have been vacuumed since, which must not
-        // fail the restart — an unreadable window fails when it runs
-        case e: IllegalArgumentException =>
-          new ChangefeedSource.Unreadable(spark.sparkContext, e)
-      }
+    // planned when a job runs: on restart Spark re-plans the last committed
+    // batch and drops it. An inverted window (offsets a release with its
+    // own high-water could log out of order) is empty. cdf=true: updates
+    // as update_preimage/postimage pairs
+    val rdd = new ChangefeedSource.Deferred(spark.sparkContext, () => {
+      val feed =
+        if (cdf) table.readChangesBetweenCdf(math.min(from, to), to)
+        else table.readChangesBetween(math.min(from, to), to)
+      feed.select(schema.fieldNames.toSeq.map(col): _*).queryExecution.toRdd
+    })
     GraftSqlShims.streamingDataFrame(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       rdd, schema)
@@ -186,13 +180,17 @@ object ChangefeedSource {
     * advance past its start. */
   final case class MaxVersions(n: Long) extends ReadLimit
 
-  /** The batch of a window that could not be planned: fails with `cause`
-    * when Spark runs it. */
-  private final class Unreadable(sc: SparkContext, cause: Exception)
+  /** The rows of the RDD `plan` builds, planned when a job runs over them,
+    * on the submitting thread (where Spark computes every RDD's partitions). */
+  private final class Deferred(sc: SparkContext,
+      @transient plan: () => RDD[InternalRow])
       extends RDD[InternalRow](sc, Nil) {
-    override protected def getPartitions: Array[Partition] = throw cause
+    @transient private lazy val planned = plan()
+    override protected def getDependencies: Seq[Dependency[_]] =
+      Seq(new OneToOneDependency(planned))
+    override protected def getPartitions: Array[Partition] = planned.partitions
     override def compute(p: Partition, ctx: TaskContext): Iterator[InternalRow] =
-      throw cause
+      firstParent[InternalRow].iterator(p, ctx)
   }
 }
 

@@ -362,4 +362,33 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(rows.nonEmpty, t)
     }
   }
+
+  test("steady-state incr apply on a 3-table lake: control-plane call budget") {
+    def doc3(i: Int, rev: Int) = s"""{"id":"k-$i","rev":"$rev",""" +
+      s""""items":[{"id":"a$i","q":$rev}],"meta":{"m":"m$i-$rev"}}"""
+    def batch(lsn0: Long, revOf: Int => Int) = events((0 until 20)
+      .map(i => (lsn0 + i, "update", doc3(i, revOf(i)))))
+    val root = "graftfs:" + SparkTestSession.tmpDir("graft-budget-")
+    val e = new Engine(spark, root, numBuckets = 8)
+    e.applyEvents("ent", batch(0L, _ => 1), "b:1", incremental = true)
+    e.applyEvents("ent", batch(100L, i => if (i < 10) 1 else 2), "b:2",
+      incremental = true)
+    assert(tablesOf(e, "ent").size == 3)
+    val kinds = Seq("lists" -> GraftTestFs.lists, "stats" -> GraftTestFs.stats,
+      "opens" -> GraftTestFs.opens, "creates" -> GraftTestFs.creates,
+      "renames" -> GraftTestFs.renames, "mkdirs" -> GraftTestFs.mkdirs)
+    val before = kinds.map(_._2.get)
+    // 10 re-deliveries and 10 new revisions
+    val st = e.applyEvents("ent", batch(200L, i => if (i < 10) 1 else 3),
+      "b:3", incremental = true)
+    assert(st.skippedUnchanged == 10 && st.dedupedDocs == 10)
+    val used = kinds.zip(before).map { case ((k, c), b) => k -> (c.get - b) }
+    // the calls this apply makes today: a new call on the steady-state
+    // path must be a decision, not a drift
+    val budget = Map("lists" -> 48L, "stats" -> 86L, "opens" -> 17L,
+      "creates" -> 21L, "renames" -> 18L, "mkdirs" -> 21L)
+    used.foreach { case (k, n) =>
+      assert(n <= budget(k), s"$k: $n calls, budget ${budget(k)} ($used)")
+    }
+  }
 }

@@ -533,6 +533,29 @@ class ChangefeedSpec extends AnyFunSuite {
     assert(sourceFiles.forall(_.contains("graft-changefeed-base")), sourceFiles)
   }
 
+  test("streaming source: a restart lists no segment dir of the window " +
+      "Spark re-plans and drops") {
+    import scala.jdk.CollectionConverters._
+    val root = "graftfs:" + SparkTestSession.tmpDir("graft-cflazy-")
+    val ckpt = SparkTestSession.tmpDir("graft-cflazy-ckpt-")
+    val src = new LakeTable(spark, root, "SRC", numBuckets = 4)
+    src.create(schema, Seq("ID"), "ID")
+    src.merge(df("a" -> "1"), Seq("ID"), "ID", "c1")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[(String, String)]]
+    drainFeed(root, ckpt, seen)
+    src.merge(df("b" -> "1"), Seq("ID"), "ID", "c2")
+    drainFeed(root, ckpt, seen)
+    assert(seen.toSeq == Seq(Set("a" -> "insert"), Set("b" -> "insert")))
+    // a restart with nothing new: Spark re-plans the last committed batch
+    // and never runs it
+    GraftTestFs.listedPaths.clear()
+    drainFeed(root, ckpt, seen)
+    assert(seen.size == 2)
+    val segmentDirs = GraftTestFs.listedPaths.asScala.toSeq
+      .filter(_.contains("/SRC/data/"))
+    assert(segmentDirs.isEmpty, segmentDirs)
+  }
+
   test("streaming source: additive lake evolution mid-stream — fixed schema until restart") {
     import org.apache.spark.sql.DataFrame
     val root = SparkTestSession.tmpDir("graft-cfevo-")

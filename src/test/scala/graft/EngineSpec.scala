@@ -751,7 +751,7 @@ class EngineSpec extends AnyFunSuite {
     assert(nVersions == 2)
     // restart (cold cache): the newest tree — with the evolved column —
     // loads from disk
-    Engine.clearRegistryCache()
+    graft.lake.VersionLog.clearCache()
     val e2 = new Engine(spark, root, numBuckets = 8)
     val spec2 = Catalog.fromTree(e2.loadRegistry("regrow").get)
       .find(_.isRoot).get
@@ -759,7 +759,7 @@ class EngineSpec extends AnyFunSuite {
     // maintain-time pruning keeps the newest K
     assert(e2.pruneRegistry("regrow", keep = 1) == 1)
     assert(nVersions == 1)
-    Engine.clearRegistryCache()
+    graft.lake.VersionLog.clearCache()
     assert(Catalog.fromTree(e2.loadRegistry("regrow").get)
       .find(_.isRoot).get.columns.exists(_.sqlName == "EXTRA"))
   }
@@ -912,5 +912,59 @@ class EngineSpec extends AnyFunSuite {
     logged.foreach { case (b, n) =>
       assert(lineage.getOrElse(s"mlog:$b", 0L) == n, s"batch $b")
     }
+  }
+
+  test("maintain folds the metrics log's rotated parts on an append-less " +
+      "store; a crash between the fold's publish and its deletes loses " +
+      "and duplicates nothing") {
+    import java.nio.file.{Files, Paths}
+    val local = SparkTestSession.tmpDir("graft-mfold-lake-")
+    val ckpt = SparkTestSession.tmpDir("graft-mfold-ckpt-")
+    val srcDir = SparkTestSession.tmpDir("graft-mfold-src-")
+    val e = new Engine(spark, "graftobj:" + local, numBuckets = 4)
+    val partsDir = Paths.get(local, "_metrics_ent.jsonl.parts")
+    def parts(): Seq[String] =
+      if (!Files.isDirectory(partsDir)) Nil
+      else {
+        val ls = Files.list(partsDir)
+        try ls.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+        finally ls.close()
+      }
+    def rows(): Seq[(Long, Long)] = e.metricsLog("ent")
+      .select("batch", "batch_events").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    // one streamed batch per file from `from` until `until`
+    def run(from: Int, until: Int): Unit = {
+      (from until until).foreach { i =>
+        (0 to i).map(j => (100L * i + j, "insert",
+            s"""{"id":"k-$j","rev":"$i","v":"v$i"}"""))
+          .toDF("lsn", "op", "doc").coalesce(1).write.json(s"$srcDir/f$i")
+      }
+      val q = e.stream("ent", spark.readStream
+        .schema("lsn LONG, op STRING, doc STRING")
+        .option("maxFilesPerTrigger", "1").json(s"$srcDir/*/"), ckpt,
+        queryName = "mfold")
+      try q.processAllAvailable() finally q.stop()
+    }
+    run(0, 3)
+    assert(parts().size == 3)
+    val three = rows()
+    assert(three == Seq(0L -> 1L, 1L -> 2L, 2L -> 3L))
+    e.maintain("ent", vacuumGraceMs = 0L)
+    assert(parts().isEmpty && rows() == three)
+
+    run(3, 5)
+    val five = rows()
+    assert(five == three ++ Seq(3L -> 4L, 4L -> 5L) && parts().size == 2)
+    val saved = parts().map(n => n -> Files.readAllBytes(partsDir.resolve(n)))
+    e.maintain("ent", vacuumGraceMs = 0L)
+    // the state a crash right after the fold's publish leaves: the base
+    // holds the folded lines and the folded parts are still there
+    saved.foreach { case (n, b) => Files.write(partsDir.resolve(n), b) }
+    assert(rows() == five)
+    run(5, 6)
+    assert(parts().size == 3 && rows() == five :+ (5L -> 6L))
+    e.maintain("ent", vacuumGraceMs = 0L)
+    assert(parts().isEmpty && rows() == five :+ (5L -> 6L))
   }
 }

@@ -451,7 +451,7 @@ class LakeSpec extends AnyFunSuite {
     e.load("fsent",
       Seq("""{"id":"d1","rev":"r1","content":"x"}""").toDF("doc"),
       "doc", "t:1")
-    graft.engine.Engine.clearRegistryCache()
+    graft.lake.VersionLog.clearCache()
     assert(e.loadRegistry("fsent").isDefined)
     val spec = graft.catalog.Catalog
       .fromTree(e.loadRegistry("fsent").get).find(_.isRoot).get
@@ -487,7 +487,7 @@ class LakeSpec extends AnyFunSuite {
     e.load("objent",
       Seq("""{"id":"d1","rev":"r1","content":"x"}""").toDF("doc"),
       "doc", "t:1")
-    graft.engine.Engine.clearRegistryCache()
+    graft.lake.VersionLog.clearCache()
     assert(e.loadRegistry("objent").isDefined)
     val spec = graft.catalog.Catalog
       .fromTree(e.loadRegistry("objent").get).find(_.isRoot).get

@@ -110,4 +110,50 @@ class CommitRaceSpec extends AnyFunSuite {
       .isin(keys: _*)).collect().map(r => r.getString(0) -> r.getString(1))
     assert(hit.toSet == want)
   }
+
+  test("registry race: the loser of a widening fails without replacing the " +
+      "winner's version; its retry keeps both fields") {
+    import graft.GraftTestFs
+    import graft.catalog.Catalog
+    import graft.engine.Engine
+    val root = "graftfs:" + SparkTestSession.tmpDir("graft-regrace-")
+    val regDir = java.nio.file.Paths.get(root.stripPrefix("graftfs:"),
+      "_registry_ent")
+    def batch(lsn: Long, doc: String) =
+      Seq((lsn, "insert", doc)).toDF("lsn", "op", "doc")
+    val winner = new Engine(spark, root, numBuckets = 4)
+    val loser = new Engine(spark, root, numBuckets = 4)
+    winner.applyEvents("ent", batch(1L, """{"id":"k1","rev":"1","a":"x"}"""),
+      "w:0")
+    // the loser lists the registry at v1; before it publishes, the winner
+    // widens the same entity with field b and publishes v2
+    var won: Array[Byte] = null
+    GraftTestFs.afterList.set((p => p.getName == "_registry_ent", () => {
+      winner.applyEvents("ent",
+        batch(2L, """{"id":"k2","rev":"1","a":"x","b":"wb"}"""), "w:1")
+      won = java.nio.file.Files.readAllBytes(regDir.resolve("v00002.json"))
+    }))
+    val loserBatch = batch(3L, """{"id":"k3","rev":"1","a":"x","c":"lc"}""")
+    val err = intercept[IllegalStateException](
+      loser.applyEvents("ent", loserBatch, "l:1"))
+    assert(won != null, "the winner's apply did not run inside the race")
+    assert(err.getMessage.contains("registry"), err.getMessage)
+    assert(java.nio.file.Files.readAllBytes(regDir.resolve("v00002.json"))
+      .sameElements(won))
+    def rootOf(e: Engine) = {
+      val t = Catalog.fromTree(e.loadRegistry("ent").get).find(_.isRoot).get
+      (t, e.table(t))
+    }
+    assert(!rootOf(loser)._2.snapshot().hasCommit("l:1"))
+
+    // the retry under the same tag widens the winner's registry
+    loser.applyEvents("ent", loserBatch, "l:1")
+    val (spec, lake) = rootOf(loser)
+    assert(Seq("A", "B", "C").forall(c => spec.columns.exists(_.sqlName == c)))
+    assert(Seq("A", "B", "C").forall(lake.snapshot().schema.fieldNames.contains))
+    val rows = lake.read().collect().map(r => r.getAs[String]("ID") ->
+      (Option(r.getAs[String]("B")), Option(r.getAs[String]("C")))).toMap
+    assert(rows == Map("k1" -> (None, None), "k2" -> (Some("wb"), None),
+      "k3" -> (None, Some("lc"))))
+  }
 }

@@ -13,6 +13,12 @@ each pair, per the metric's direction in BENCHMARK.json), and the
 parent's interquartile range and median. A claimed gain should win on
 most pairs and move the median by more than the parent's IQR.
 
+A pair is MIXED when its two sides measured a different number of
+windows (`detail.rounds` on read_while_write, `detail.passes` on
+replay_wide): a per-window median over one window against one over two
+measures the window count, not the change. The count of mixed pairs and
+their pair numbers are printed under the table.
+
 --out appends every run's result line (with side, seed and pair) to a
 JSON-lines file. The exit code is 1 when any run failed its checks.
 """
@@ -42,7 +48,11 @@ def run_once(checkout, workload, seed, seconds, trace):
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
     try:
-        return json.loads(lines[-1]), p.returncode
+        # the result line comes last, the line with the run's detail
+        # before it
+        res = json.loads(lines[-1])
+        res["detail"] = json.loads(lines[-2]).get("detail", {})
+        return res, p.returncode
     except (IndexError, ValueError):
         sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
         return None, p.returncode
@@ -73,6 +83,15 @@ def summarize(pairs, better):
     return rows
 
 
+def windows(res):
+    """The number of measured windows a run reports, or None."""
+    detail = (res or {}).get("detail", {})
+    for key in ("rounds", "passes"):
+        if key in detail:
+            return detail[key]
+    return None
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--parent", required=True, help="parent checkout dir")
@@ -88,11 +107,11 @@ def main():
     sides = {"parent": os.path.abspath(a.parent),
              "change": os.path.abspath(a.change)}
     better = directions(sides["change"])
-    pairs, failed = [], 0
+    pairs, failed, mixed = [], 0, []
     for i in range(a.pairs):
         seed = a.first_seed + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        got = {}
+        got, nwin = {}, {}
         for side in order:
             res, code = run_once(sides[side], a.workload, seed, a.seconds,
                                  a.trace)
@@ -101,6 +120,7 @@ def main():
             failed += 0 if ok else 1
             got[side] = {k: v["value"] for k, v in
                          (res or {}).get("metrics", {}).items()}
+            nwin[side] = windows(res)
             if a.out:
                 with open(a.out, "a") as fh:
                     fh.write(json.dumps({"side": side, "pair": i + 1,
@@ -110,6 +130,8 @@ def main():
                   f"{'ok' if ok else 'FAILED'}", file=sys.stderr, flush=True)
         if got["parent"] and got["change"]:
             pairs.append((got["parent"], got["change"]))
+            if nwin["parent"] != nwin["change"]:
+                mixed.append((i + 1, seed, nwin["parent"], nwin["change"]))
 
     print(f"{a.workload}: {len(pairs)} pairs, --seconds {a.seconds:g}, "
           f"--trace {a.trace}, {failed} failed run(s)")
@@ -120,6 +142,10 @@ def main():
         rel = iqr / pm if pm else float("nan")
         print(f"{name:34} {pm:12.4g} {cm:12.4g} {delta:+7.1f}% "
               f"{wins:>3}/{n:<2} {iqr:10.4g} {rel:8.3f}")
+    print(f"mixed pairs (the sides measured different window counts): "
+          f"{len(mixed)}/{len(pairs)}")
+    for pair, seed, p, c in mixed:
+        print(f"  pair {pair} seed {seed}: parent {p}, change {c}")
     return 1 if failed else 0
 
 
