@@ -5,11 +5,12 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.catalog.{Catalog, TableSpec}
 import graft.flatten.Flattener
-import graft.lake.{LakeTable, Snapshot, VersionLog}
+import graft.lake.{LakeTable, RevisionProbe, Snapshot, VersionLog}
+import graft.lake.LakeTable.BucketCol
 import graft.schema.{Attr, Infer, Json, TreeAccumulator}
 
 /** Per-apply counts. `dedupedDocs` and `deletes` are the root table's
@@ -41,6 +42,7 @@ final case class ApplyStats(
   */
 final class Engine(val spark: SparkSession, val lakeRoot: String,
     val numBuckets: Int = 64) {
+  import Engine.Layout
 
   // The engine NEVER mutates session-global configuration (ADVICE r4: a
   // reader-only session constructing an Engine must not silently lose ANSI
@@ -108,31 +110,29 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
   def pruneRegistry(entity: String, keep: Int = 8): Int =
     registryLog(entity).expire(math.max(1, keep), Set.empty)
 
-  /** Schema inference over the rows of one batch, riding whichever job
-    * reads them. `inferring` folds each partition's documents into `tree`
-    * (an accumulator joined through the widening lattice) as they stream
-    * by, counting them into `docs`; rows the incr revision check marked
-    * unchanged (`_gskip`) are dropped and counted into `skipped`. The
-    * counts are metrics-grade (see [[ApplyStats]]); the tree is exact,
-    * since the lattice join is idempotent. `plain` is the same rows
-    * without the inference. Both read `src` through one RDD, so the
-    * revision scan and any exchange under it run once however many jobs
-    * read the two frames. */
-  private final class InferPass(entity: String, src: DataFrame,
-      docCol: String) {
+  /** Schema inference over the deduplicated rows of one batch, riding
+    * whichever job reads them: the reduce stage of the batch's one
+    * exchange. `inferring` runs [[Engine.reduceStep]] over `rows` with the
+    * fold: it drops the upserts `probe` finds unchanged, counting them
+    * into `skipped`, and folds every other upsert's document into `tree`
+    * (an accumulator joined through the widening lattice), counting them
+    * into `docs`. The counts are metrics-grade (see [[ApplyStats]]); the
+    * tree is exact, since the lattice join is idempotent. `plain` is the
+    * same rows without the fold (the probe runs again, uncounted). Both
+    * keep the rows' hash partitioning on the bucket. */
+  private final class InferPass(entity: String, rows: DataFrame,
+      docCol: String, opCol: Option[String], probe: Option[RevisionProbe]) {
     private val sc = spark.sparkContext
     val tree = new TreeAccumulator(entity)
     sc.register(tree)
     val docs = sc.longAccumulator("graft.dedupedDocs")
     val skipped = sc.longAccumulator("graft.skippedDocs")
-    private val skipOrd =
-      if (src.columns.contains("_gskip")) src.schema.fieldIndex("_gskip")
-      else -1
-    val inferring: DataFrame = GraftSqlShims.mapPartitionsInternal(src,
-      Engine.inferStep(entity, src.schema.fieldIndex(docCol), skipOrd, tree,
-        docs, skipped))
-    lazy val plain: DataFrame =
-      GraftSqlShims.mapPartitionsInternal(src, Engine.skipStep(skipOrd))
+    private val ords = Engine.Ords(rows.schema, docCol, opCol)
+    val inferring: DataFrame = GraftSqlShims.mapPartitionsInternal(rows,
+      Engine.reduceStep(ords, probe,
+        Some(Engine.Fold(entity, tree, docs, skipped))))
+    lazy val plain: DataFrame = GraftSqlShims.mapPartitionsInternal(rows,
+      Engine.reduceStep(ords, probe, None))
   }
 
   /** Inference as a job of its own, for a batch whose parse cannot ride
@@ -189,7 +189,15 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
   /** Full upsert of a doc batch. `docs` must carry a JSON-string column
     * `docCol`; optional `seqCol` (event sequence) breaks ties when a key
     * appears more than once in the batch — last write wins, replacing the
-    * reference's serial in-order merges (sqlDML.ts:580-605). */
+    * reference's serial in-order merges (sqlDML.ts:580-605).
+    *
+    * ONE exchange per batch: the last-write-wins dedup shuffles by the
+    * root-key bucket, and everything after it runs in that exchange's
+    * reduce stage — the final aggregate, the incr revision probe, the
+    * schema inference with the speculative parse, and the batch every
+    * table's write reads (persisted for a multi-table catalog). Each
+    * table's write inherits the partitioning and plans no exchange of its
+    * own, unless its layout differs from the batch's ([[mergeParsed]]). */
   def load(entity: String, docs: DataFrame, docCol: String,
       commitTag: String, seqCol: Option[String] = None,
       deleteIds: Option[DataFrame] = None,
@@ -205,78 +213,61 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     // streaming parse per event (json_tuple pulls all candidate fields in
     // a single Jackson pass; per-field get_json_object calls would parse
     // every doc once per field — this is the hottest map stage, it runs
-    // on every event BEFORE dedup)
+    // on every event BEFORE dedup). The key is the root table's: `id`
+    // before `_id`, as Flattener.rootKey takes it, and json_tuple renders
+    // a scalar the way from_json reads it as text — so a document's key,
+    // its bucket and its tombstone's all agree with its rows' root key.
     val keyed =
       if (incremental)
         seqed
-          .select(col("*"), json_tuple(col(docCol), "_id", "id", "_rev", "rev")
+          .select(col("*"), json_tuple(col(docCol), "id", "_id", "_rev", "rev")
             .as(Seq("_jid0", "_jid1", "_jrev0", "_jrev1")))
           .withColumn("_docid", coalesce(col("_jid0"), col("_jid1")))
           .withColumn("_docrev", coalesce(col("_jrev0"), col("_jrev1")))
           .drop("_jid0", "_jid1", "_jrev0", "_jrev1")
       else
         seqed
-          .select(col("*"), json_tuple(col(docCol), "_id", "id")
+          .select(col("*"), json_tuple(col(docCol), "id", "_id")
             .as(Seq("_jid0", "_jid1")))
           .withColumn("_docid", coalesce(col("_jid0"), col("_jid1")))
           .drop("_jid0", "_jid1")
 
-    // Last-write-wins per key (BASELINE.json north-star): the max of
-    // (seq, row) hash-aggregation dedups WITHIN the batch (real CDC
-    // batches carry many versions per hot key — dedup here shrinks all
-    // downstream flatten/write work by that factor). An aggregate beats
-    // the row_number window two ways at scale: PARTIAL (map-side) combine
-    // drops duplicate versions before the shuffle — a hot key reduces to
-    // one row per map partition, so no salting is ever needed — and no
-    // window over the whole batch. With a monotone seqCol (the WAL lsn)
-    // the winner's lsn also becomes the row's lake visibility seq, so LWW
-    // holds ACROSS batches even for late/out-of-order deliveries, and
-    // re-applying events is idempotent by content. The shuffle key is the
-    // fine-grained document key (repo|path|commit), so a hot REPO cannot
-    // skew a partition.
-    val monotoneSeq = seqCol.isDefined
-    // ONE dedup shuffle, read by every later query of the batch (upserts
-    // and deletes are filters over it) through the RDD that computes it:
-    // nothing is cached. Equal seqs break on the kept values, so each read
-    // picks the same winner whatever order the shuffle delivers a key's
-    // rows in. Events without id/_id violate the reference's contract
-    // (README.md:48) — dropped HERE, explicitly: letting them through
-    // would collapse every keyless event into one null-key group (silent
-    // data loss into a null-ID row).
-    // PROJECT BEFORE THE EXCHANGE (r8, guide §2.3): everything downstream
-    // of the dedup reads only the doc, the visibility seq, the key (and
-    // op / rev where present) — passthrough columns like the event
-    // timestamp would ride the winner struct through the shuffle and the
-    // agg buffers for nothing. On the memory-bandwidth-bound many-core
-    // level every shuffled byte costs twice.
-    val keepCols: Seq[String] =
-      (Seq("_seq", docCol, "_docid") ++
-        (if (incremental) Seq("_docrev") else Nil) ++ opCol.toSeq).distinct
-    val latest = GraftSqlShims.fromRdd(keyed
-      .filter(col("_docid").isNotNull)
-      .groupBy(col("_docid"))
-      .agg(max(when(col("_seq").isNotNull, struct(keepCols.map(col): _*)))
-        .as("_w"))
-      .select(col("_w.*")))
+    // ONE LakeTable handle and ONE snapshot read per prior table: they
+    // serve the layout, the revision probe and the DDL
+    val priorRaw = registryLog(entity).latest()
+    val prior = parseRegistry(priorRaw)
+    val priorTables = prior.toSeq.flatMap(Catalog.fromTree)
+    val known: Map[String, (LakeTable, Option[Snapshot])] =
+      priorTables.map { t =>
+        val l = table(t)
+        t.fullName -> (l, l.snapshotOpt())
+      }.toMap
+    val priorRoot: Option[(TableSpec, LakeTable, Snapshot)] =
+      priorTables.find(_.isRoot).flatMap { t =>
+        known(t.fullName) match {
+          case (l, Some(s)) => Some((t, l, s))
+          case _            => None
+        }
+      }
+    // the layout the batch is bucketed under: the prior root table's, or
+    // the one a new root table is created with
+    val layout = priorRoot match {
+      case Some((t, l, s)) =>
+        Layout(l.bucketsOf(s), s.schema(rootKeyOf(t)).dataType)
+      case None => Layout(numBuckets, StringType)
+    }
 
-    // op split: upserts vs delete tombstones (each keeps its event seq).
-    // Explicit deleteIds under the lsn domain MUST carry a per-key delete
-    // lsn as a second column — guessing one (e.g. the batch's max doc lsn)
-    // silently mis-orders deletes: a delete-only batch would stamp lsn 0
-    // (never shadowing anything), and a stale delete would inherit the
-    // newest lsn and kill same-batch upserts. The lake's merge enforces
-    // the same contract (LakeTable.merge rejects lsn-domain deletes
-    // without a seq column).
-    val deduped = opCol match {
-      case Some(c) => latest.filter(col(c) =!= "delete")
-      case None    => latest
-    }
-    val delFromOps: Option[DataFrame] = opCol.map { c =>
-      latest.filter(col(c) === "delete")
-        .select(col("_docid"), col("_seq"))
-    }
+    // deletes: the op's tombstones ride the batch's rows (each keeps its
+    // event seq). Explicit deleteIds under the lsn domain MUST carry a
+    // per-key delete lsn as a second column — guessing one (e.g. the
+    // batch's max doc lsn) silently mis-orders deletes: a delete-only batch
+    // would stamp lsn 0 (never shadowing anything), and a stale delete
+    // would inherit the newest lsn and kill same-batch upserts. The lake's
+    // merge enforces the same contract (LakeTable.merge rejects lsn-domain
+    // deletes without a seq column).
+    val monotoneSeq = seqCol.isDefined
     val explicitDel: Option[DataFrame] = deleteIds.map { a =>
-      if (monotoneSeq) {
+      val del = if (monotoneSeq) {
         require(a.columns.length >= 2,
           s"deleteIds under a monotone seqCol needs (key, deleteLsn) " +
             s"columns — got ${a.columns.mkString("(", ",", ")")}; a guessed " +
@@ -286,85 +277,91 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       } else
         a.select(col(a.columns(0)).cast("string").as("_docid"))
           .withColumn("_seq", lit(null).cast("long"))
+      del.withColumn(BucketCol, layout.bucketOf(col("_docid")))
     }
-    val allDeletes: Option[DataFrame] = (explicitDel, delFromOps) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (Some(a), None)    => Some(a)
-      case (None, b)          => b
+
+    // Last-write-wins per key (BASELINE.json north-star): the max of
+    // (seq, row) aggregation dedups WITHIN the batch (real CDC batches
+    // carry many versions per hot key — dedup here shrinks all downstream
+    // flatten/write work by that factor). An aggregate beats the
+    // row_number window two ways at scale: PARTIAL (map-side) combine
+    // drops duplicate versions before the shuffle — a hot key reduces to
+    // one row per map partition, so no salting is ever needed — and no
+    // window over the whole batch. With a monotone seqCol (the WAL lsn)
+    // the winner's lsn also becomes the row's lake visibility seq, so LWW
+    // holds ACROSS batches even for late/out-of-order deliveries, and
+    // re-applying events is idempotent by content. Equal seqs break on
+    // the kept values, so a retried reduce task picks the same winner.
+    // Events without id/_id violate the reference's contract (README.md:48)
+    // — dropped HERE, explicitly: letting them through would collapse
+    // every keyless event into one null-key group (silent data loss into
+    // a null-ID row).
+    // The aggregate groups by (bucket, key) and its exchange partitions by
+    // the bucket alone, into the partitions a delta write uses: the batch
+    // arrives clustered the way every table's write lays it out.
+    // PROJECT BEFORE THE EXCHANGE (r8, guide §2.3): everything downstream
+    // of the dedup reads only the doc, the visibility seq, the key (and
+    // op / rev where present).
+    val keepCols: Seq[String] =
+      (Seq("_seq", docCol, "_docid") ++
+        (if (incremental) Seq("_docrev") else Nil) ++ opCol.toSeq).distinct
+    val bucketed = keyed.filter(col("_docid").isNotNull)
+      .withColumn(BucketCol, layout.bucketOf(col("_docid")))
+    // incr (index.ts:43-72): the revision probe reads the prior root
+    // table's rows in the buckets the batch's upserts hash to — collected
+    // in the map stage, so only those buckets' segments are listed
+    val probing = priorRoot.filter { case (t, _, s) => incremental &&
+      t.tablePk == "ID" && s.segments.nonEmpty &&
+      s.schema.fieldNames.contains("REV") }
+    val isDel = opCol.fold(lit(false))(c => col(c) === "delete")
+    val observed =
+      if (probing.isEmpty) bucketed
+      else bucketed.observe("graft.touched",
+        collect_set(when(!isDel, col(BucketCol))).as("touched"))
+    val exchanged = GraftSqlShims.aggregateOn(observed
+      .groupBy(col(BucketCol), col("_docid"))
+      .agg(max(when(col("_seq").isNotNull, struct(keepCols.map(col): _*)))
+        .as("_w"))
+      .select(col(BucketCol), col("_w.*")),
+      BucketCol, LakeTable.writeParts(spark, layout.buckets))
+    val probe: Option[RevisionProbe] = probing.flatMap { case (_, lake, s) =>
+      val touched = exchanged.observed.get("graft.touched")
+        .filter(r => !r.isNullAt(0)).map(_.getSeq[Int](0).toSet)
+        .getOrElse(Set.empty[Int])
+      Option.when(touched.nonEmpty)(lake.revisionProbe(s, "REV", touched))
     }
+
+    val mayDelete = opCol.isDefined || explicitDel.isDefined
 
     // the speculatively parsed batch, persisted until the merges finish
     var speculative: Option[Clustered] = None
     try {
-      val priorRaw = registryLog(entity).latest()
-      val prior = parseRegistry(priorRaw)
-      // ONE LakeTable handle and ONE snapshot read per prior table: they
-      // serve the revision scan, the clustering layout and the DDL
-      val priorTables = prior.toSeq.flatMap(Catalog.fromTree)
-      val known: Map[String, (LakeTable, Option[Snapshot])] =
-        priorTables.map { t =>
-          val l = table(t)
-          t.fullName -> (l, l.snapshotOpt())
-        }.toMap
-      val priorRoot = priorTables.find(_.isRoot).map(t => known(t.fullName))
-
-      // incr (index.ts:43-72): skip docs whose (ID, REV) is already in the
-      // root table — a MARKER left-join replaces the driver-side revision
-      // Map (sqlDML.ts:27-93); the join broadcasts under AQE when small.
-      // Matched rows stay in the frame (marker true) so the inference pass
-      // drops and tallies them — no anti-join-plus-count() pair of jobs.
-      val marked: Option[DataFrame] = priorRoot.filter(_ => incremental)
-        .flatMap { case (lake, snap) =>
-          snap.filter(s => s.segments.nonEmpty &&
-            s.schema.fieldNames.contains("REV")).flatMap { snap =>
-            // BUCKET-PRUNED revision scan: the batch can only match (ID,
-            // REV) rows in the buckets its own keys hash to — read only
-            // those buckets' segments. A full lake.read() here is O(table)
-            // per micro-batch — at 10^10 rows the classic incremental-
-            // ingest scale-killer (VERDICT r3); this is O(batch) + O(touched
-            // buckets). The touched set (≤ numBuckets ints) rides an
-            // Observation on one noop job over the deduped rows.
-            val obs = org.apache.spark.sql.Observation()
-            deduped.observe(obs,
-              collect_set(lake.bucketExpr(col("_docid"), snap)).as("touched"))
-              .write.format("noop").mode("overwrite").save()
-            // AQE drops the CollectMetrics node of a provably empty batch:
-            // no metrics means no touched bucket
-            val touched: Set[Int] = obs.get.get("touched").collect {
-              case xs: scala.collection.Seq[_] => xs.map(_.asInstanceOf[Int]).toSet
-            }.getOrElse(Set.empty)
-            if (touched.isEmpty) None
-            else Some(deduped.join(lake.readBuckets(touched, snap).select(
-              col("ID").as("_docid"), col("REV").as("_docrev"),
-              lit(true).as("_gskip")), Seq("_docid", "_docrev"), "left"))
-          }
-        }
-      val pass = new InferPass(entity, marked.getOrElse(deduped), docCol)
+      val pass = new InferPass(entity, exchanged.rows, docCol, opCol, probe)
       def parse(tree: Attr, rows: DataFrame): DataFrame = rows.select(
         col("_docid"), col("_seq"),
-        from_json(col(docCol), readSchemaOf(tree)).as("_gdoc"))
+        when(!isDel, from_json(col(docCol), readSchemaOf(tree))).as("_gdoc"),
+        isDel.as("_gdel"), col(BucketCol))
 
       // 1-2: inference + registry widen (docMetadata/sqlMetadata stages).
       // SPECULATIVE PARSE: when the prior catalog is multi-table and all
       // its tables exist, the batch is parsed under the PRIOR registry's
-      // read schema and clustered in the same pass that infers its schema
-      // — one job chain reads the docs once. A steady-state batch does not
-      // widen the read schema, so the speculation holds; one that does is
-      // parsed again below under the widened one. Otherwise (no prior, a
+      // read schema and persisted in the same pass that infers its schema
+      // — one job reads the docs once. A steady-state batch does not widen
+      // the read schema, so the speculation holds; one that does is parsed
+      // again below under the widened one. Otherwise (no prior, a
       // single-table prior) inference runs first as its own job.
       val priorSchema = prior.map(readSchemaOf)
-      if (known.size > 1 && known.values.forall(_._2.isDefined)) {
-        val (rootLake, rootSnap) = priorRoot.get
-        speculative = Some(clusterBatch(prior.get, rootLake, rootSnap.get,
-          parse(prior.get, pass.inferring), allDeletes, persist = true))
-      } else inferBatch(pass)
+      if (known.size > 1 && known.values.forall(_._2.isDefined))
+        speculative = Some(clusterBatch(parse(prior.get, pass.inferring),
+          Some(layout), explicitDel, persist = true))
+      else inferBatch(pass)
       val batchTree = pass.tree.value
       val docCount = pass.docs.value.longValue
       val skipped = math.max(0L, pass.skipped.value.longValue)
 
       // == 0 is safe on an accumulator: a retried task can only inflate a
       // genuinely non-zero count
-      if (docCount == 0 && (allDeletes.isEmpty || prior.isEmpty))
+      if (docCount == 0 && (!mayDelete || prior.isEmpty))
         // nothing to upsert; deletes can only touch existing tables
         return ApplyStats(0, 0, 0, skipped, 0)
 
@@ -379,180 +376,151 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       // reads as text either way) — the table frames follow `registry`
       val kept = speculative.filter(_ => priorSchema.contains(
         readSchemaOf(registry)))
-      if (kept.isEmpty) speculative.foreach(_.frame.unpersist())
+      if (kept.isEmpty) speculative.foreach(_.release())
 
       // 3-5: DDL + flatten + per-table merges (shared with the bootstrap
       // fast path)
-      val (nTables, upserted, nDel) = mergeParsed(registry, known, kept,
-        parse(registry, pass.plain), commitTag, allDeletes, monotoneSeq)
+      val (nTables, upserted, nDel) = mergeParsed(registry, known,
+        kept.getOrElse(clusterBatch(parse(registry, pass.plain),
+          Some(layout), explicitDel, persist = Catalog.fromTree(registry)
+            .size > 1)),
+        commitTag, mayDelete, monotoneSeq)
       ApplyStats(upserted + nDel, upserted, nDel, skipped, nTables)
-    } finally speculative.foreach(_.frame.unpersist())
+    } finally speculative.foreach(_.release())
   }
 
   private def readSchemaOf(tree: Attr) =
     Flattener.readSchema(tree.attributes(tree.name))
 
-  /** A batch's upserts and tombstones as one frame, each row tagged with
-    * its root key's bucket (`buckets` of them), and the root-key type the
-    * bucket was hashed in. Both are the clustering's own, not the root
-    * table's after its DDL: a kept speculation was hashed under the
-    * batch-start snapshot, and the evolved root may type its key
-    * differently (a number widened to text reads as text either way) or,
-    * when evolve lost a publish race, carry a re-laid bucket count. */
-  private final class Clustered(val frame: DataFrame, val buckets: Int,
-      val keyType: DataType)
+  /** A batch's upserts and tombstones as one frame: `_docid`, `_seq`, the
+    * `_gdoc` struct, the tombstone marker `_gdel` and, under `layout`, the
+    * bucket column. `release` frees what [[clusterBatch]] persisted. */
+  private final class Clustered(val frame: DataFrame,
+      val layout: Option[Layout], val release: () => Unit)
 
-  /** Build the [[Clustered]] batch from `parsed` (`_docid`, `_seq` and a
-    * `_gdoc` struct matching `Flattener.readSchema(tree)`) under the root
-    * table's layout in `rootSnap`. The bucket is hashed in the root-key
-    * column's type, as prepareDelta hashes it: upserts take the root key
-    * Flattener emits (the value each child carries as its outermost FK),
-    * tombstones their `_docid`.
-    *
-    * `persist` (a multi-table catalog): the frame is hash-partitioned the
-    * way a delta write partitions ([[LakeTable.clusterForWrite]]), cached,
-    * and the cache is filled with ONE clean parallel job before the
-    * per-table merge fan-out (r8): the concurrent merge jobs all reference
-    * the same cache, and Spark's per-block lock makes every late-arriving
-    * task BLOCK (holding its slot) while the first computes the
-    * partition. K tables' explode chains then share ONE parse and ONE
-    * shuffle. With a single-table catalog the lone write's own shuffle
-    * already is the batch's one shuffle, so neither the cache nor an
-    * up-front clustering pays: the merge computes the batch inline (r8). */
-  private def clusterBatch(tree: Attr, rootLake: LakeTable,
-      rootSnap: Snapshot, parsed: DataFrame,
-      allDeletes: Option[DataFrame], persist: Boolean): Clustered = {
-    val bucketCol = LakeTable.BucketCol
-    val tables = Catalog.fromTree(tree)
-    val keyType =
-      rootSnap.schema(rootKeyOf(tables.find(_.isRoot).get)).dataType
-    val upserts = parsed.select(col("_docid"), col("_seq"), col("_gdoc"),
-      lit(false).as("_gdel"), rootLake.bucketExpr(Flattener.rootKey(
-        tree.attributes(tree.name), tables, col("_gdoc")).cast(keyType),
-        rootSnap).as(bucketCol))
-    val tombstones = allDeletes.map(d => d.select(col("_docid"), col("_seq"),
-      lit(null).cast(parsed.schema("_gdoc").dataType).as("_gdoc"),
-      lit(true).as("_gdel"),
-      rootLake.bucketExpr(col("_docid").cast(keyType), rootSnap).as(bucketCol)))
-    val batch = tombstones.fold(upserts)(upserts.unionByName(_))
-    val frame =
-      if (!persist) batch
-      else {
-        val c = rootLake.clusterForWrite(batch, rootSnap).persist()
-        c.write.format("noop").mode("overwrite").save()
-        c
-      }
-    new Clustered(frame, rootLake.bucketsOf(rootSnap), keyType)
+  /** Build the [[Clustered]] batch from `parsed` (upserts and the op's
+    * tombstones, see [[load]]) and the explicit deletes. `persist` (a
+    * multi-table catalog): the batch is computed once, by one job here,
+    * and kept until the merges finish — the concurrent merge jobs then
+    * read it instead of each running the reduce stage again; it keeps
+    * reporting the exchange's partitioning, so K tables' explode chains
+    * share one parse and one shuffle. A single table's write computes the
+    * batch inline. Explicit deletes are not in the exchange: their union
+    * reports no partitioning, and every write shuffles. */
+  private def clusterBatch(parsed: DataFrame, layout: Option[Layout],
+      explicitDel: Option[DataFrame], persist: Boolean): Clustered = {
+    val batch = explicitDel.fold(parsed)(d => parsed.unionByName(
+      d.select(col("_docid"), col("_seq"),
+        lit(null).cast(parsed.schema("_gdoc").dataType).as("_gdoc"),
+        lit(true).as("_gdel"), col(BucketCol))))
+    if (!persist) new Clustered(batch, layout, () => ())
+    else {
+      val p = GraftSqlShims.persist(batch)
+      new Clustered(p.frame, layout, p.release)
+    }
   }
 
   /** Steps 3-5 of an apply, shared by [[load]] and the bootstrap fast
     * path: DDL (create/evolve each lake table), flatten via explode
-    * chains, then set-oriented bucket-pruned merges. `parsed` must carry
-    * `_docid`, `_seq` and a `_gdoc` struct matching
-    * `Flattener.readSchema(registry)` — `from_json`'d on the tail path,
-    * struct-built on the bootstrap path; it is built into the batch
-    * ([[clusterBatch]]) unless `prebuilt` already holds it. `known`: the
-    * handles and snapshots the caller already read. Returns (tables,
-    * root upserts, root deletes), the counts from the root table's merge
-    * lineage.
+    * chains, then set-oriented bucket-pruned merges over `batch`.
+    * `known`: the handles and snapshots the caller already read. Returns
+    * (tables, root upserts, root deletes), the counts from the root
+    * table's merge lineage.
     *
-    * ONE clustering shuffle per multi-table batch: every table's explode
-    * chain keeps rows in their task, so each table's frame arrives already
-    * clustered, its write plans no exchange, and the id-keyed array dedup
-    * window partitions inside the same clustering. Each table is planned
-    * once: one handle, one snapshot (the DDL's), one projection per frame.
+    * A table whose bucket count and root-key type match the batch's
+    * layout takes the batch's bucket column: every table's explode chain
+    * keeps rows in their task, so its frame arrives partitioned the way
+    * its write lays it out, its write plans no exchange, and the id-keyed
+    * array dedup window partitions inside the same partitioning. Each
+    * table is planned once: one handle, one snapshot (the DDL's), one
+    * projection per frame.
     */
   private def mergeParsed(registry: Attr,
-      known: Map[String, (LakeTable, Option[Snapshot])],
-      prebuilt: Option[Clustered], parsed: => DataFrame, commitTag: String,
-      allDeletes: Option[DataFrame],
+      known: Map[String, (LakeTable, Option[Snapshot])], batch: Clustered,
+      commitTag: String, mayDelete: Boolean,
       monotoneSeq: Boolean): (Int, Long, Long) = {
     val tables = Catalog.fromTree(registry)
-    // 3-4: DDL — create or evolve each lake table (sqlDDL createTables /
-    // alterTables; additive + widening only)
-    val lakes: Map[String, (LakeTable, Snapshot)] = tables.map { t =>
-      val (lake, snap) = known.getOrElse(t.fullName, {
-        val l = table(t); (l, l.snapshotOpt())
-      })
-      t.fullName -> (lake, snap match {
-        case None    => lake.create(t.schema, t.keyColumns, rootKeyOf(t))
-        case Some(s) => lake.evolve(t.schema, t.keyColumns, rootKeyOf(t), Some(s))
-      })
-    }.toMap
-    val rootElem = registry.attributes(registry.name)
     val rootT = tables.find(_.isRoot).get
-    val multiTable = tables.size > 1
-    val (rootLake, rootSnap) = lakes(rootT.fullName)
-    val batch = prebuilt.getOrElse(clusterBatch(registry, rootLake, rootSnap,
-      parsed, allDeletes, persist = multiTable))
-    val clustered = batch.frame
-
-    // the bucket column a table's frames pass through: none for a table
-    // whose layout differs from the batch's (a partial rebucket, or a
-    // root-key column of another type) — its prepareDelta recomputes the
-    // bucket and its write shuffles as before
-    def passOf(t: TableSpec): Seq[String] = {
-      val (lake, snap) = lakes(t.fullName)
-      if (multiTable && lake.bucketsOf(snap) == batch.buckets &&
-        snap.schema.find(_.name == rootKeyOf(t))
-          .exists(_.dataType == batch.keyType)) Seq(LakeTable.BucketCol)
-      else Nil
-    }
-    val docs = clustered.filter(!col("_gdel"))
-    def frameOf(t: TableSpec, pass: Seq[String]): DataFrame = {
-      // within-doc duplicate keys need a dedup window ONLY for ID-keyed
-      // tables under an array (two elements may share an id —
-      // reference's serial MERGE makes the last win, sqlDML.ts:519-545);
-      // root rows are unique per batch dedup and AI keys are positions
-      val needsKeyDedup = !t.isRoot && t.tablePk == "ID" &&
-        t.path.exists(_.isArray)
-      val raw = Flattener.tableFrame(docs, rootElem, tables, t,
-        col("_gdoc"), extraCols = "_seq" +: pass, withOrd = needsKeyDedup)
-      if (!needsKeyDedup) raw
-      else raw
-        // the bucket leads the window keys, so the clustering satisfies
-        // it; the merge's projection drops `_krn` and `_gord`
-        .select(col("*"), row_number().over(Window
-          .partitionBy((pass ++ t.keyColumns).map(col): _*)
-          .orderBy(col("_seq").desc, col("_gord").desc)).as("_krn"))
-        .filter(col("_krn") === 1)
-    }
-    def deletesOf(pass: Seq[String]): Option[DataFrame] =
-      allDeletes.map(_ => clustered.filter(col("_gdel"))
-        .select((Seq("_docid", "_seq") ++ pass).map(col): _*))
-    val rowSeq = if (monotoneSeq) Some("_seq") else None
-    // the applied upsert and delete counts come from the ROOT table's
-    // merge lineage (its Observation on the write counted them) — not a
-    // count() job, and exact under task retries
-    var counts = (0L, 0L)
-
-    // per-table merges run CONCURRENTLY (independent lake tables, like the
-    // reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
-    // schedules the jobs from separate threads and fills idle cores;
-    // exactly-once holds per table via the shared commit tag
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def mergeOne(t: TableSpec): Unit = {
-      val pass = passOf(t)
-      val (lake, snap) = lakes(t.fullName)
-      val done = lake.merge(frameOf(t, pass), t.keyColumns, rootKeyOf(t),
-        commitTag, deleteRootKeys = deletesOf(pass), rowSeqCol = rowSeq,
-        at = Some(snap))
-      if (t.isRoot) counts = done.lineage.lastOption
-        .filter(_.tag == commitTag).map(l => (l.upserted, l.deleted))
-        .getOrElse((0L, 0L))
-    }
     try {
+      // 3-4: DDL — create or evolve each lake table (sqlDDL createTables /
+      // alterTables; additive + widening only)
+      val lakes: Map[String, (LakeTable, Snapshot)] = tables.map { t =>
+        val (lake, snap) = known.getOrElse(t.fullName, {
+          val l = table(t); (l, l.snapshotOpt())
+        })
+        t.fullName -> (lake, snap match {
+          case None    => lake.create(t.schema, t.keyColumns, rootKeyOf(t))
+          case Some(s) => lake.evolve(t.schema, t.keyColumns, rootKeyOf(t), Some(s))
+        })
+      }.toMap
+      val rootElem = registry.attributes(registry.name)
+      val clustered = batch.frame
+
+      // the bucket column a table's frames pass through: none for a table
+      // whose layout differs from the batch's (a partial rebucket, a
+      // root-key column of another type) or when the batch's key is not
+      // the root's ID — its prepareDelta recomputes the bucket and its
+      // write shuffles
+      def passOf(t: TableSpec): Seq[String] = {
+        val (lake, snap) = lakes(t.fullName)
+        batch.layout.filter(l => rootT.tablePk == "ID" &&
+          lake.bucketsOf(snap) == l.buckets &&
+          snap.schema.find(_.name == rootKeyOf(t))
+            .exists(_.dataType == l.keyType)).map(_ => BucketCol).toSeq
+      }
+      val docs = clustered.filter(!col("_gdel"))
+      def frameOf(t: TableSpec, pass: Seq[String]): DataFrame = {
+        // within-doc duplicate keys need a dedup window ONLY for ID-keyed
+        // tables under an array (two elements may share an id —
+        // reference's serial MERGE makes the last win, sqlDML.ts:519-545);
+        // root rows are unique per batch dedup and AI keys are positions
+        val needsKeyDedup = !t.isRoot && t.tablePk == "ID" &&
+          t.path.exists(_.isArray)
+        val raw = Flattener.tableFrame(docs, rootElem, tables, t,
+          col("_gdoc"), extraCols = "_seq" +: pass, withOrd = needsKeyDedup)
+        if (!needsKeyDedup) raw
+        else raw
+          // the bucket leads the window keys, so the partitioning
+          // satisfies it; the merge's projection drops `_krn` and `_gord`
+          .select(col("*"), row_number().over(Window
+            .partitionBy((pass ++ t.keyColumns).map(col): _*)
+            .orderBy(col("_seq").desc, col("_gord").desc)).as("_krn"))
+          .filter(col("_krn") === 1)
+      }
+      def deletesOf(pass: Seq[String]): Option[DataFrame] =
+        Option.when(mayDelete)(clustered.filter(col("_gdel"))
+          .select((Seq("_docid", "_seq") ++ pass).map(col): _*))
+      val rowSeq = if (monotoneSeq) Some("_seq") else None
+      // the applied upsert and delete counts come from the ROOT table's
+      // merge lineage (its Observation on the write counted them) — not a
+      // count() job, and exact under task retries
+      var counts = (0L, 0L)
+
+      // per-table merges run CONCURRENTLY (independent lake tables, like
+      // the reference's per-table DDL fan-out, sqlDDL.ts:453-480) — Spark
+      // schedules the jobs from separate threads and fills idle cores;
+      // exactly-once holds per table via the shared commit tag
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      def mergeOne(t: TableSpec): Unit = {
+        val pass = passOf(t)
+        val (lake, snap) = lakes(t.fullName)
+        val done = lake.merge(frameOf(t, pass), t.keyColumns, rootKeyOf(t),
+          commitTag, deleteRootKeys = deletesOf(pass), rowSeqCol = rowSeq,
+          at = Some(snap))
+        if (t.isRoot) counts = done.lineage.lastOption
+          .filter(_.tag == commitTag).map(l => (l.upserted, l.deleted))
+          .getOrElse((0L, 0L))
+      }
       // wait for EVERY merge before surfacing a failure: a fail-fast wait
-      // would return — and unpersist `clustered` — while sibling merges
-      // still write and publish, and a retry of the same tag could
-      // overlap them
+      // would return — and release the batch — while sibling merges still
+      // write and publish, and a retry of the same tag could overlap them
       val merges = tables.map(t => Future(mergeOne(t)))
       merges.foreach(Await.ready(_, Duration.Inf))
       merges.flatMap(_.value).foreach(_.get)
-    } finally { if (multiTable) clustered.unpersist(); () }
-    (tables.size, counts._1, counts._2)
+      (tables.size, counts._1, counts._2)
+    } finally batch.release()
   }
 
   /** incr (index.ts:43-72): like load, but unchanged (ID, REV) docs are
@@ -884,9 +852,12 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       .agg(max_by(struct(keyed.columns.map(col): _*), col("_seq")).as("_w"))
       .select(col("_w.*"))
     val parsed = latest
-      .select(col("_docid"), col("_seq"), gdoc.as("_gdoc"))
-    val (nTables, _, _) = mergeParsed(registry, Map.empty, None, parsed,
-      commitTag, None, monotoneSeq = true)
+      .select(col("_docid"), col("_seq"), gdoc.as("_gdoc"),
+        lit(false).as("_gdel"))
+    val (nTables, _, _) = mergeParsed(registry, Map.empty,
+      clusterBatch(parsed, None, None,
+        persist = Catalog.fromTree(registry).size > 1),
+      commitTag, mayDelete = false, monotoneSeq = true)
     ApplyStats(total, total, 0, 0, nTables)
   }
 
@@ -1102,34 +1073,71 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
 
 object Engine {
   import org.apache.spark.sql.catalyst.InternalRow
+
+  import org.apache.spark.unsafe.types.UTF8String
   import org.apache.spark.util.LongAccumulator
 
-  private def skipped(r: InternalRow, skipOrd: Int): Boolean =
-    skipOrd >= 0 && !r.isNullAt(skipOrd) && r.getBoolean(skipOrd)
+  private val Delete = UTF8String.fromString("delete")
 
-  /** The per-partition step of [[Engine.InferPass]]: drops (and counts)
-    * the revision-skipped rows and folds every other row's document into
-    * a partition tree, added to the accumulators when the task ends. */
-  private def inferStep(entity: String, docOrd: Int, skipOrd: Int,
-      tree: TreeAccumulator, docs: LongAccumulator, skips: LongAccumulator)
-      : Iterator[InternalRow] => Iterator[InternalRow] = it => {
-    val a = new Infer.DocAnalyzer(entity)
-    var nSkip = 0L
-    org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit] { _ =>
-      if (a.docs > 0) tree.add(a.tree)
-      docs.add(a.docs)
-      skips.add(nSkip)
-    }
-    it.filter { r =>
-      val skip = skipped(r, skipOrd)
-      if (skip) nSkip += 1
-      else if (!r.isNullAt(docOrd)) a.add(r.getUTF8String(docOrd).getBytes)
-      !skip
+  /** The bucket layout a batch is partitioned under: `buckets` buckets,
+    * a document's bucket hashed from its key cast to `keyType` — the way
+    * a table of that layout hashes its root-key column. */
+  private final case class Layout(buckets: Int, keyType: DataType) {
+    def bucketOf(docId: Column): Column =
+      LakeTable.bucketOf(docId.try_cast(keyType), buckets)
+  }
+
+  /** Ordinals of a batch row's document, op (-1 without one), key,
+    * revision (-1 outside incr) and bucket columns. */
+  private final case class Ords(doc: Int, op: Int, id: Int, rev: Int,
+      bucket: Int)
+
+  private object Ords {
+    def apply(schema: StructType, docCol: String,
+        opCol: Option[String]): Ords = {
+      def at(c: String) = schema.fieldNames.indexOf(c)
+      Ords(at(docCol), opCol.fold(-1)(at), at("_docid"), at("_docrev"),
+        at(LakeTable.BucketCol))
     }
   }
 
-  /** [[inferStep]] without the inference: drops the skipped rows. */
-  private def skipStep(skipOrd: Int)
-      : Iterator[InternalRow] => Iterator[InternalRow] =
-    it => if (skipOrd < 0) it else it.filter(r => !skipped(r, skipOrd))
+  /** The accumulators schema inference folds a batch into. */
+  private final case class Fold(entity: String, tree: TreeAccumulator,
+      docs: LongAccumulator, skipped: LongAccumulator)
+
+  /** The reduce-stage step over one partition of a batch's deduplicated
+    * rows, keeping each row in its partition:
+    *  - a row whose op is null is neither an upsert nor a delete: dropped;
+    *  - with `probe` (incr), an upsert whose (key, revision) is its key's
+    *    live winner in the root table is dropped — the partition's rows
+    *    are buffered, and the probe reads the buckets they hash to;
+    *  - with `infer`, every other upsert's document is folded into a
+    *    partition tree, and the tree and both counts are added to the
+    *    accumulators when the task ends. Tombstones pass untouched. */
+  private def reduceStep(o: Ords, probe: Option[RevisionProbe],
+      infer: Option[Fold]): Iterator[InternalRow] => Iterator[InternalRow] =
+    it => {
+      val rows = if (o.op < 0) it else it.filter(r => !r.isNullAt(o.op))
+      def isDoc(r: InternalRow) = o.op < 0 || r.getUTF8String(o.op) != Delete
+      var nSkip = 0L
+      val fresh = probe.fold(rows) { p =>
+        val buf = rows.map(_.copy()).toIndexedSeq
+        val same = p.unchanged(buf, o.id, o.rev, o.bucket, isDoc)
+        nSkip = same.count(identity)
+        buf.indices.iterator.filterNot(same).map(buf)
+      }
+      infer.fold(fresh) { f =>
+        val a = new Infer.DocAnalyzer(f.entity)
+        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+          if (a.docs > 0) f.tree.add(a.tree)
+          f.docs.add(a.docs)
+          f.skipped.add(nSkip)
+        }
+        fresh.map { r =>
+          if (isDoc(r) && !r.isNullAt(o.doc))
+            a.add(r.getUTF8String(o.doc).getBytes)
+          r
+        }
+      }
+    }
 }

@@ -86,6 +86,39 @@ object LakeScan {
         outputSchema(target))
     else V2Frames.ofTable(spark, new LakeScanTable(spark, target, sources))
 
+  /** `sources` read outside any query: the scan's reader factory and its
+    * input partition of each bucket. `columns` are the output columns,
+    * in order, followed by [[BucketCol]] when they lack it. Rows pass
+    * through the same decode, schema-version casts and seq overrides as
+    * a [[frame]] of the same sources. Serializable: tasks read buckets
+    * with it. */
+  final class BucketReader private[LakeScan] (
+      factory: PartitionReaderFactory, parts: Map[Int, InputPartition])
+      extends Serializable {
+    /** Each row of `bucket`'s files (none for a bucket the sources lack),
+      * handed to `f` while the reader holds it. */
+    def foreach(bucket: Int)(f: InternalRow => Unit): Unit =
+      parts.get(bucket).foreach { p =>
+        val r = factory.createReader(p)
+        try while (r.next()) f(r.get())
+        finally r.close()
+      }
+  }
+
+  def bucketReader(spark: SparkSession, target: StructType,
+      sources: Seq[ScanSource], columns: Seq[String]): BucketReader =
+    if (sources.isEmpty) new BucketReader(null, Map.empty) // nothing to read
+    else {
+      val table = new LakeScanTable(spark, target, sources)
+      val builder = table.newScanBuilder(CaseInsensitiveStringMap.empty())
+        .asInstanceOf[LakeScanBuilder]
+      builder.pruneColumns(StructType(columns.map(table.schema(_))))
+      val batch = builder.build().toBatch
+      new BucketReader(batch.createReaderFactory(),
+        batch.planInputPartitions().map(p =>
+          p.asInstanceOf[LakePartition].bucket -> p).toMap)
+    }
+
   private final class LakeScanTable(spark: SparkSession, target: StructType,
       sources: Seq[ScanSource])
       extends FileTable(spark, CaseInsensitiveStringMap.empty(),

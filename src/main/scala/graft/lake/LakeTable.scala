@@ -727,10 +727,18 @@ final class LakeTable(val spark: SparkSession, val root: String,
     * per-row seqs persisted from an (already-corrected) resolution. */
   private def scan(target: StructType,
       inputs: Seq[(Segment, Int, Snapshot)],
-      vacuumed: Snapshot => Nothing = snap => throw new FileNotFoundException(
-        s"table $name: a segment of snapshot v${snap.version} has no data " +
-          "files (vacuumed?)")): DataFrame =
-    LakeScan.frame(spark, target, inputs.map { case (seg, side, snap) =>
+      vacuumed: Snapshot => Nothing = noFiles): DataFrame =
+    LakeScan.frame(spark, target, sources(target, inputs, vacuumed))
+
+  private def noFiles(snap: Snapshot): Nothing =
+    throw new FileNotFoundException(s"table $name: a segment of snapshot " +
+      s"v${snap.version} has no data files (vacuumed?)")
+
+  /** The [[ScanSource]]s of `inputs`, listed: see [[scan]]. */
+  private def sources(target: StructType,
+      inputs: Seq[(Segment, Int, Snapshot)],
+      vacuumed: Snapshot => Nothing): Seq[ScanSource] =
+    inputs.map { case (seg, side, snap) =>
       val d = fio.resolveRel(dir, seg.path)
       val files = dataFiles(d)
       if (files.isEmpty) vacuumed(snap)
@@ -742,7 +750,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
         if (at == target) Seq(target) else Seq(at, target),
         if (snap.seqDomain == "commit" && seg.kind == "delta") seg.seq else -1L,
         side)
-    })
+    }
 
   /** The data files of segment dir `d`, listed here in place of Spark's
     * file index: one listing per segment per read. Empty once vacuum has
@@ -834,32 +842,23 @@ final class LakeTable(val spark: SparkSession, val root: String,
 
   /** [[bucketExpr]] under the layout of `s`. */
   def bucketExpr(rootKey: Column, s: Snapshot): Column =
-    bucketExpr(rootKey, bucketsOf(s))
-
-  private def bucketExpr(rootKey: Column, n: Int): Column =
-    pmod(xxhash64(rootKey), lit(n)).cast(IntegerType)
+    LakeTable.bucketOf(rootKey, bucketsOf(s))
 
   /** The table's effective bucket count (the current snapshot's layout). */
   def buckets: Int = bucketsOf(snapshot())
 
-  /** Hash-partition a frame that carries [[BucketCol]] exactly the way
-    * [[writeDelta]] does under the layout of `s`. A delta write over such
-    * a frame (its bucket column passed through, see [[prepareDelta]])
-    * plans no exchange of its own: Spark drops a repartition whose child
-    * already has that hash partitioning. */
-  def clusterForWrite(df: DataFrame, s: Snapshot): DataFrame =
-    df.repartition(writeParts(bucketsOf(s)), col(BucketCol))
-
-  // SCALE-ADAPTIVE task count (r8, guide §2.2/§6): hash-partitioning on
-  // the bucket COLUMN keeps every bucket's rows in one task whatever the
-  // partition count, and partitionBy still writes one leaf dir per bucket
-  // — so capping partitions at the session's core count changes NOTHING
-  // about the layout while cutting write-task count (32 tasks per table
-  // per micro-batch on an 8-core level = scheduling overhead that does not
-  // shrink with executors). A cluster with ≥ nb cores keeps one task per
-  // bucket.
-  private def writeParts(nb: Int): Int =
-    math.max(1, math.min(nb, spark.sparkContext.defaultParallelism))
+  /** A [[RevisionProbe]] of root table `s` (its one key column is its
+    * root key) over the segments of `buckets`, which this lists. */
+  def revisionProbe(s: Snapshot, revCol: String,
+      buckets: Set[Int]): RevisionProbe = {
+    val target = withMeta(s.schema)
+    new RevisionProbe(LakeScan.bucketReader(spark, target,
+      sources(target, s.segments.filter(seg => buckets(seg.bucket))
+        .map((_, 0, s)), noFiles),
+      Seq(s.rootKey, revCol, SeqCol, DelCol)),
+      s.schema(s.rootKey).dataType, s.schema(revCol).dataType,
+      spark.sessionState.conf.sessionLocalTimeZone)
+  }
 
   /** Idempotent merge-on-read upsert:
     *   - `updates` rows shadow older rows with the same `keyCols`
@@ -925,12 +924,14 @@ final class LakeTable(val spark: SparkSession, val root: String,
     // deltas are NOT sorted: they live ≤ maxDeltas merges before
     // compaction rewrites them, and the merge-on-read resolution shuffles
     // on the key anyway — only base segments (long-lived, read-heavy)
-    // pay for key-clustered layout. A frame the caller already clustered
-    // ([[clusterForWrite]]) keeps its partitioning and skips this shuffle.
+    // pay for key-clustered layout. A frame already hash-partitioned on its
+    // bucket column into `writeParts` partitions (an engine batch, see
+    // `GraftSqlShims.aggregateOn`) keeps its partitioning: Spark drops a
+    // repartition whose child already has it.
     up.observe(obs, count(when(!col(DelCol), 1)).as("nup"),
       count(when(col(DelCol), 1)).as("ndel"),
       max(col(SeqCol)).as("maxseq"))
-      .repartition(writeParts(nb), col(BucketCol))
+      .repartition(LakeTable.writeParts(spark, nb), col(BucketCol))
       .write.options(LakeTable.WriteOptions)
       .partitionBy(BucketCol).mode("overwrite")
       .parquet(new HPath(dir, rel).toString)
@@ -977,15 +978,15 @@ final class LakeTable(val spark: SparkSession, val root: String,
     // ONE projection per side: every target column cast (null where the
     // frame lacks it), the visibility seq, the tombstone marker, and the
     // bucket. An incoming bucket column is KEPT, not recomputed:
-    // Engine.load clusters the batch by bucket once (clusterForWrite) and
-    // every table's write inherits that partitioning.
+    // Engine.load partitions the batch by bucket once, in its dedup
+    // exchange, and every table's write inherits that partitioning.
     def project(df: DataFrame, given: Map[String, Column]): DataFrame = {
       val have = df.columns.toSet
       def value(n: String): Column = given.getOrElse(n,
         if (have(n)) col(n) else lit(null))
       val bucket =
         if (have(BucketCol)) col(BucketCol)
-        else bucketExpr(value(rootKeyCol).cast(keyType), bucketsOf(s))
+        else bucketExpr(value(rootKeyCol).cast(keyType), s)
       df.select(metaTarget.fields.toSeq.map(f =>
         value(f.name).cast(f.dataType).as(f.name)) :+ bucket.as(BucketCol): _*)
     }
@@ -1090,7 +1091,7 @@ final class LakeTable(val spark: SparkSession, val root: String,
     val obs = org.apache.spark.sql.Observation()
     winners.unionByName(toms)
       .observe(obs, max(col(SeqCol)).as("maxseq"))
-      .withColumn(BucketCol, bucketExpr(col(rootKeyCol), bucketsOf(s)))
+      .withColumn(BucketCol, bucketExpr(col(rootKeyCol), s))
       .repartition(math.max(1, math.min(bucketsOf(s), nBuckets)),
         col(BucketCol))
       .sortWithinPartitions(keyCols.map(col): _*)
@@ -1225,6 +1226,20 @@ object LakeTable {
   val BucketCol = LakeScan.BucketCol
   val SeqCol = "_gseq"
   val DelCol = "_gdel" // tombstone marker (delete of a root key)
+
+  /** The bucket of root-key value `key` in a `buckets`-bucket layout. */
+  def bucketOf(key: Column, buckets: Int): Column =
+    pmod(xxhash64(key), lit(buckets)).cast(IntegerType)
+
+  /** The task count of a delta write to a `buckets`-bucket table: its
+    * rows are hash-partitioned on the bucket COLUMN into this many
+    * partitions. That keeps every bucket's rows in one task whatever the
+    * count, and partitionBy still writes one leaf dir per bucket, so
+    * capping it at the session's core count changes nothing about the
+    * layout while cutting task count (r8, guide §2.2/§6); a cluster with
+    * ≥ `buckets` cores keeps one task per bucket. */
+  def writeParts(spark: SparkSession, buckets: Int): Int =
+    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
 
   /** Per-write Hadoop options for every lake data write. Scoped per-write
     * (DataFrameWriter options merge into that job's Hadoop conf, which the

@@ -18,12 +18,13 @@ import graft.engine.Engine
 import graft.flatten.Flattener
 import graft.lake.LakeTable
 
-/** Job shape of one apply: the batch is clustered by root-key bucket ONCE
-  * and every table's delta write inherits that partitioning (no exchange
-  * of its own, still one file per bucket dir, same rows and layout as
-  * tables merged one by one); a table whose layout differs from the root's
-  * falls back to its own shuffle; the incr revision scan runs once; a
-  * steady-state batch infers its schema inside the clustering pass, and a
+/** Job shape of one apply: the dedup's exchange partitions the batch by
+  * root-key bucket, the batch's one shuffle, and every table's delta write
+  * inherits that partitioning (no exchange of its own, still one file per
+  * bucket dir, same rows and layout as tables merged one by one); a table
+  * whose layout differs from the root's falls back to its own shuffle; the
+  * incr revision probe reads the touched buckets' root files once; a
+  * steady-state batch infers its schema inside the reduce stage, and a
   * batch that widens the schema lands as a single-batch apply would. */
 class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
@@ -133,7 +134,10 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val root = SparkTestSession.tmpDir("graft-cluster-")
     val e = new Engine(spark, root, numBuckets = 8)
     e.applyEvents("ent", batch1, "b:1")
-    val writes = writeExchanges(e.applyEvents("ent", batch2, "b:2"))
+    var writes: Seq[(String, Int)] = Nil
+    val shape = jobsOf { writes = writeExchanges(e.applyEvents("ent", batch2, "b:2")) }
+    // the dedup's exchange is the batch's one shuffle
+    assert(shape.shuffleStages == 1, shape)
     val tables = tablesOf(e, "ent")
     assert(tables.size == 4, tables.map(_.fullName))
     assert(tables.exists(t => !t.isRoot && t.tablePk == "ID" &&
@@ -204,8 +208,8 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("incr: the bucket-pruned revision scan runs in ONE query; empty and " +
-      "delete-only batches apply") {
+  test("incr: the revision probe opens each root file of the touched " +
+      "buckets once, and no other; empty and delete-only batches apply") {
     val root = "graftfs:" + SparkTestSession.tmpDir("graft-revscan-")
     val e = new Engine(spark, root, numBuckets = 8)
     e.applyEvents("ent", batch1, "b:1", incremental = true)
@@ -224,19 +228,23 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val next = events(
       (0 until 10).map(i => (500L + i, "update", doc(i, 1))) ++
         (10 until 20).map(i => (600L + i, "update", doc(i, 3))))
-    // calibration: what ONE revision-scan query over the batch's buckets
-    // opens (a query's inference fold is an RDD action a
-    // QueryExecutionListener never sees, so the proof counts file opens)
+    // calibration: what ONE read of the batch's buckets opens (the probe
+    // runs inside the reduce stage, outside any query, so the proof counts
+    // file opens)
     val touched = (0 until 20).map(i => lake.bucketOfKey(s"k-$i")).toSet
     val oneScan = opensPerFile(lake.readBuckets(touched)
       .select("ID", "REV").write.format("noop").mode("overwrite").save())
     assert(oneScan.nonEmpty)
+    var shape: Shape = null
     val applyOpens = opensPerFile {
-      val s = e.applyEvents("ent", next, "b:2", incremental = true)
-      assert(s.skippedUnchanged == 10 && s.dedupedDocs == 10)
+      shape = jobsOf {
+        val s = e.applyEvents("ent", next, "b:2", incremental = true)
+        assert(s.skippedUnchanged == 10 && s.dedupedDocs == 10)
+      }
     }
     assert(applyOpens == oneScan, "opens per root file: apply " +
       s"${applyOpens.values.toSeq.sorted}, one scan ${oneScan.values.toSeq.sorted}")
+    assert(shape.broadcastJobs == 0 && shape.shuffleStages == 1, shape)
 
     val emptyStats = e.applyEvents("ent", batch1.limit(0), "b:3",
       incremental = true)
@@ -255,20 +263,50 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(revs == Seq("3", "1")) // k-15 (rev 3) sorts before k-5 (rev 1)
   }
 
+  test("an input already in one partition (a limit) still dedups through " +
+      "the bucket exchange") {
+    val e = new Engine(spark, SparkTestSession.tmpDir("graft-limit-"), 8)
+    val evs = spark.range(0, 400, 1, 4).selectExpr("id AS lsn",
+      "'update' AS op",
+      """concat('{"id":"k', id % 40, '","rev":"', id, '"}') AS doc""")
+      .limit(200)
+    var st: graft.engine.ApplyStats = null
+    val shape = jobsOf { st = e.applyEvents("ent", evs, "l:1") }
+    assert(st.dedupedDocs == 40, st)
+    assert(shape.shuffleStages == 2, shape) // the limit's and the dedup's
+    val rootT = tablesOf(e, "ent").find(_.isRoot).get
+    assert(e.table(rootT).read().count() == 40)
+  }
+
   // root + id-keyed array child + object child: a 3-table lake
   private def doc3(i: Int, rev: Int, extra: String = ""): String =
     s"""{"id":"k-$i","rev":"$rev","n":$i,"name":"n$i-$rev",""" +
       s""""items":[{"id":"a$i","q":$rev},{"id":"b$i","q":${rev + 1}}],""" +
       s""""meta":{"m":"m$i-$rev"}$extra}"""
 
-  /** Jobs started by `body`, each with its stages' call sites. */
-  private def jobsOf(body: => Unit): Seq[String] = {
+  /** What `body` ran: each job with its stages' call sites, the stages
+    * that wrote shuffle output, and the jobs a broadcast exchange ran. */
+  private final case class Shape(jobs: Seq[String], shuffleStages: Int,
+      broadcastJobs: Int)
+
+  private def jobsOf(body: => Unit): Shape = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val shuffles = new java.util.concurrent.atomic.AtomicInteger()
+    val broadcasts = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.add(js.stageInfos.map(_.details).mkString("\n"))
+        if (Option(js.properties).flatMap(p => Option(p.getProperty(
+          "spark.job.tags"))).exists(_.contains("broadcast exchange")))
+          broadcasts.incrementAndGet()
+      }
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (Option(e.stageInfo.taskMetrics)
+          .exists(_.shuffleWriteMetrics.recordsWritten > 0))
+          shuffles.incrementAndGet()
     }
     org.apache.spark.ListenerDrain(sc)
     sc.addSparkListener(listener)
@@ -276,11 +314,12 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       body
       org.apache.spark.ListenerDrain(sc)
     } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq
+    Shape(jobs.asScala.toSeq, shuffles.get, broadcasts.get)
   }
 
-  test("steady-state incr batch with re-deliveries: at most 10 jobs, and " +
-      "the schema inference rides the clustering pass") {
+  test("steady-state incr batch with re-deliveries: at most 6 jobs, one " +
+      "shuffle stage, no broadcast, and the schema inference rides the " +
+      "reduce stage") {
     val root = SparkTestSession.tmpDir("graft-jobs-")
     val e = new Engine(spark, root, numBuckets = 8)
     e.applyEvents("ent", events((0 until 40).map(i =>
@@ -292,10 +331,15 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val next = events((0 until 20).map(i => (100L + i, "update",
       doc3(i, 2))) ++ (20 until 40).map(i => (200L + i, "update", doc3(i, 2))))
     var stats: graft.engine.ApplyStats = null
-    val jobs = jobsOf { stats = e.applyEvents("ent", next, "b:3",
+    val shape = jobsOf { stats = e.applyEvents("ent", next, "b:3",
       incremental = true) }
+    val jobs = shape.jobs
     assert(stats.skippedUnchanged == 20 && stats.dedupedDocs == 20, stats)
-    assert(jobs.size <= 10, s"${jobs.size} jobs:\n${jobs.mkString("\n--\n")}")
+    // the dedup's map stage, the reduce stage filling the batch, one write
+    // per table
+    assert(jobs.size <= 6, s"${jobs.size} jobs:\n${jobs.mkString("\n--\n")}")
+    assert(shape.shuffleStages == 1, shape)
+    assert(shape.broadcastJobs == 0, shape)
     assert(!jobs.exists(_.contains("Engine.inferBatch")),
       jobs.filter(_.contains("Engine.inferBatch")).mkString("\n--\n"))
   }

@@ -615,11 +615,12 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("hot-key dedup combines MAP-SIDE: shuffle records ≈ distinct keys, not events") {
-    // one pathological key carries 20k of 21k events. With the max_by
-    // hash aggregation, duplicate versions collapse in the partial agg
-    // BEFORE the shuffle — per-reducer load is bounded by DISTINCT keys
-    // (the reason no salting machinery exists anywhere in the engine).
-    // A row_number window would shuffle all 21k rows.
+    // one pathological key carries 20k of 21k events. The partial
+    // aggregate of the max(struct) dedup runs BELOW the batch's one
+    // exchange (on the root-key bucket): a hot key collapses to one row
+    // per map task before the shuffle, so per-reducer load is bounded by
+    // DISTINCT keys (the reason no salting machinery exists anywhere in
+    // the engine). A row_number window would shuffle all 21k rows.
     val (e, _) = newEngine()
     val hot = spark.range(0, 20000).selectExpr(
       "id AS lsn", "'update' AS op",
@@ -629,24 +630,31 @@ class EngineSpec extends AnyFunSuite {
       "id AS lsn", "'insert' AS op",
       "timestamp'2024-01-01' AS ts",
       """concat('{"id":"cold|f', id, '|c","rev":"1","repo":"cold","content":"y"}') AS doc""")
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger
+    val mapTasks = new java.util.concurrent.atomic.AtomicInteger
     val shuffleRecords = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffleRecords.addAndGet(
-            t.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      override def onStageCompleted(
+          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Option(s.stageInfo.taskMetrics)
+          .filter(_.shuffleWriteMetrics.recordsWritten > 0).foreach { m =>
+            shuffleStages.incrementAndGet()
+            mapTasks.addAndGet(s.stageInfo.numTasks)
+            shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+          }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       val stats = e.applyEvents("repos", hot.unionByName(cold), "skew:0")
-      Thread.sleep(2000) // listener bus drain (no public waitUntilEmpty)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
       assert(stats.dedupedDocs == 1001) // 1 hot + 1000 cold keys
-      // all shuffles together (dedup + merge repartitions) must move
-      // rows proportional to KEYS (~1001 × a few stages), nowhere near
-      // the 21k input events
-      assert(shuffleRecords.get < 5000,
-        s"map-side combine failed: ${shuffleRecords.get} records shuffled")
+      // the dedup's exchange is the batch's only one (the lone table's
+      // write inherits it), and each of its map tasks wrote at most one
+      // version of the hot key plus the cold keys it saw
+      assert(shuffleStages.get == 1, s"${shuffleStages.get} shuffle stages")
+      assert(shuffleRecords.get <= mapTasks.get + 1000,
+        s"map-side combine failed: ${shuffleRecords.get} records shuffled " +
+          s"by ${mapTasks.get} map tasks")
       val root = readTable(e, "repos", "repos")
       assert(root.count() == 1001)
       assert(root.filter(col("ID") === "hot|f|c").head()

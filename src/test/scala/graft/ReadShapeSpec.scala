@@ -9,8 +9,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, Spark
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -20,9 +19,10 @@ import graft.lake.LakeTable
 
 /** Read plan shape: merge-on-read resolution and changefeed diffs run as
   * windows and aggregates over the bucket-partitioned lake scan, so a
-  * lookup, the seq-space feed, the version diffs, time travel and the
-  * incremental revision scan plan no shuffle exchange; no lake read goes
-  * through Spark's own file index; the revision join still broadcasts. */
+  * lookup, the seq-space feed, the version diffs and time travel plan no
+  * shuffle exchange; no lake read goes through Spark's own file index; the
+  * incremental revision probe reads the touched buckets' root files inside
+  * the dedup's reduce stage, with no broadcast and no query of its own. */
 class ReadShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -120,9 +120,9 @@ class ReadShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(stages.get == 1, s"lookup ran ${stages.get} stages")
   }
 
-  test("incr: the revision scan's lake side plans no exchange and the " +
-      "revision join broadcasts") {
-    val root = SparkTestSession.tmpDir("graft-readshape-incr-")
+  test("incr: no plan of the apply broadcasts or reads the root table, and " +
+      "the root files read are the touched buckets' files") {
+    val root = "graftfs:" + SparkTestSession.tmpDir("graft-readshape-incr-")
     val e = new Engine(spark, root, numBuckets = 8)
     def doc(i: Int, rev: Int) =
       s"""{"id":"k-$i","rev":"$rev","items":[{"id":"a$i","q":$rev}]}"""
@@ -130,11 +130,11 @@ class ReadShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .toDF("lsn", "op", "doc"), "b:1", incremental = true)
     e.applyEvents("ent", (0 until 10).map(i => (100L + i, "update", doc(i, 2)))
       .toDF("lsn", "op", "doc"), "b:2", incremental = true)
-    // the revision join is planned as the execution that feeds the
-    // parse-and-cluster pass: it broadcasts, exactly one side is the lake
-    // scan, and that side plans no exchange. The apply's jobs show the one
-    // broadcast, and its shuffle stages are the dedup's and the
-    // clustering's alone
+    val rootT = Catalog.fromTree(e.loadRegistry("ent").get).find(_.isRoot).get
+    val lake = e.table(rootT)
+    // the probe reads the root table inside the dedup's reduce stage, through
+    // the lake's reader, outside any query: no plan holds a broadcast or a
+    // root scan, and the apply's one shuffle stage is the dedup's
     val broadcasts = new java.util.concurrent.atomic.AtomicInteger()
     val shuffleWrites = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
@@ -147,23 +147,32 @@ class ReadShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           .exists(_.shuffleWriteMetrics.recordsWritten > 0))
           shuffleWrites.incrementAndGet()
     }
+    val touched = (5 until 15).map(i => lake.bucketOfKey(s"k-$i")).toSet
+    val rootDir = s"/${rootT.fullName}/data/"
+    val want = lake.snapshot().segments.filter(seg => touched(seg.bucket))
+      .flatMap { seg =>
+        val d = new org.apache.hadoop.fs.Path(
+          new org.apache.hadoop.fs.Path(root, rootT.fullName), seg.path)
+        d.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(d)
+          .map(_.getPath.toUri.getPath).filter(_.endsWith(".parquet"))
+      }.toSet
+    GraftTestFs.taskOpens.clear()
     spark.sparkContext.addSparkListener(listener)
     val ps = try plans(e.applyEvents("ent", (5 until 15)
       .map(i => (200L + i, "update", doc(i, 2))).toDF("lsn", "op", "doc"),
       "b:3", incremental = true))
     finally spark.sparkContext.removeSparkListener(listener)
-    val joins = ps.flatMap(p => collect(p) { case j: BroadcastHashJoinExec => j })
-    assert(joins.size == 1, s"${joins.size} broadcast joins")
-    joins.foreach { j =>
-      val lakeSide = Seq(j.left, j.right).filter(s => lakeScans(s).nonEmpty)
-      assert(lakeSide.size == 1, j)
-      assert(shuffles(lakeSide.head) == 0,
-        s"revision scan planned a shuffle:\n${lakeSide.head}")
+    val opened = GraftTestFs.taskOpens.asScala.map(_._2)
+      .map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath)
+      .filter(p => p.contains(rootDir) && p.endsWith(".parquet")).toSet
+    ps.foreach { p =>
+      assert(collect(p) { case b: BroadcastExchangeLike => b }.isEmpty, p)
+      assert(lakeScans(p).isEmpty, p) // no table reaches its compaction
+      assert(fileIndexScans(p).isEmpty, p)
     }
-    assert(broadcasts.get == 1, "revision join did not broadcast")
-    assert(shuffleWrites.get == 2, s"${shuffleWrites.get} shuffles")
-    ps.foreach(p => assert(fileIndexScans(p).isEmpty, p))
-    val rootT = Catalog.fromTree(e.loadRegistry("ent").get).find(_.isRoot).get
-    assert(e.table(rootT).read().count() == 30)
+    assert(broadcasts.get == 0, "the apply broadcast")
+    assert(shuffleWrites.get == 1, s"${shuffleWrites.get} shuffles")
+    assert(want.nonEmpty && opened == want, s"opened $opened, want $want")
+    assert(lake.read().count() == 30)
   }
 }

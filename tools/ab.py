@@ -13,6 +13,15 @@ each pair, per the metric's direction in BENCHMARK.json), and the
 parent's interquartile range and median. A claimed gain should win on
 most pairs and move the median by more than the parent's IQR.
 
+Each metric with a bound in BENCHMARK.json also shows the bound and the
+change/parent ratio of the medians, with a verdict: CLEARS when the
+median moved in the metric's better direction by more than the bound
+(what a claimed gain needs), REGRESSES when it moved the other way by
+more than the bound (what gets a change refused). The move is the
+ratio's distance from 1, so a bound of 0.25 asks a higher-is-better
+metric for a ratio of at least 1.25 and a lower-is-better one for at
+most 0.75.
+
 A pair is MIXED when its two sides measured a different number of
 windows (`detail.rounds` on read_while_write, `detail.passes` on
 replay_wide): a per-window median over one window against one over two
@@ -32,12 +41,26 @@ import sys
 sys.dont_write_bytecode = True
 
 
-def directions(checkout):
-    """metric name -> "lower" | "higher", from BENCHMARK.json."""
+def metric_specs(checkout):
+    """metric name -> (better: "lower" | "higher", bound or None), from
+    BENCHMARK.json."""
     with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
-    return {m["name"]: m["better"]
+    return {m["name"]: (m["better"], m.get("bound"))
             for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+
+
+def verdict(ratio, better, bound):
+    """CLEARS, REGRESSES or "" for a change/parent median `ratio` of a
+    metric whose `better` direction is "lower" or "higher"."""
+    if bound is None or ratio is None or ratio != ratio:
+        return ""
+    gain = ratio - 1 if better == "higher" else 1 - ratio
+    if gain > bound:
+        return "CLEARS"
+    if gain < -bound:
+        return "REGRESSES"
+    return ""
 
 
 def run_once(checkout, workload, seed, seconds, trace):
@@ -66,7 +89,8 @@ def quartiles(xs):
 
 
 def summarize(pairs, better):
-    """Rows of (metric, parent median, change median, wins, n, IQR)."""
+    """Rows of (metric, parent median, change median, wins, n, IQR);
+    `better` maps a metric to "lower" | "higher"."""
     names = sorted({k for p, c in pairs for k in p} &
                    {k for p, c in pairs for k in c})
     rows = []
@@ -106,7 +130,8 @@ def main():
 
     sides = {"parent": os.path.abspath(a.parent),
              "change": os.path.abspath(a.change)}
-    better = directions(sides["change"])
+    specs = metric_specs(sides["change"])
+    better = {k: v[0] for k, v in specs.items()}
     pairs, failed, mixed = [], 0, []
     for i in range(a.pairs):
         seed = a.first_seed + i
@@ -136,12 +161,18 @@ def main():
     print(f"{a.workload}: {len(pairs)} pairs, --seconds {a.seconds:g}, "
           f"--trace {a.trace}, {failed} failed run(s)")
     print(f"{'metric':34} {'parent':>12} {'change':>12} {'delta':>8} "
-          f"{'wins':>6} {'IQR':>10} {'IQR/med':>8}")
+          f"{'wins':>6} {'IQR':>10} {'IQR/med':>8} {'bound':>6} "
+          f"{'ratio':>7} verdict")
     for name, pm, cm, wins, n, iqr in summarize(pairs, better):
         delta = (cm - pm) / pm * 100 if pm else float("nan")
         rel = iqr / pm if pm else float("nan")
+        ratio = cm / pm if pm else None
+        way, bound = specs.get(name, ("lower", None))
         print(f"{name:34} {pm:12.4g} {cm:12.4g} {delta:+7.1f}% "
-              f"{wins:>3}/{n:<2} {iqr:10.4g} {rel:8.3f}")
+              f"{wins:>3}/{n:<2} {iqr:10.4g} {rel:8.3f} "
+              f"{'' if bound is None else f'{bound:g}':>6} "
+              f"{'' if ratio is None else f'{ratio:.3f}':>7} "
+              f"{verdict(ratio, way, bound)}")
     print(f"mixed pairs (the sides measured different window counts): "
           f"{len(mixed)}/{len(pairs)}")
     for pair, seed, p, c in mixed:

@@ -1,0 +1,68 @@
+#!/usr/bin/env python3
+"""Tests of tools/ab.py's verdict and summary logic.
+
+    python3 tools/test_ab.py
+"""
+import json
+import os
+import sys
+import tempfile
+import unittest
+
+sys.dont_write_bytecode = True
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import ab  # noqa: E402
+
+
+class VerdictTest(unittest.TestCase):
+    def test_higher_is_better(self):
+        self.assertEqual(ab.verdict(1.30, "higher", 0.25), "CLEARS")
+        self.assertEqual(ab.verdict(1.20, "higher", 0.25), "")
+        self.assertEqual(ab.verdict(1.00, "higher", 0.25), "")
+        self.assertEqual(ab.verdict(0.80, "higher", 0.25), "")
+        self.assertEqual(ab.verdict(0.70, "higher", 0.25), "REGRESSES")
+
+    def test_lower_is_better(self):
+        self.assertEqual(ab.verdict(0.70, "lower", 0.25), "CLEARS")
+        self.assertEqual(ab.verdict(0.80, "lower", 0.25), "")
+        self.assertEqual(ab.verdict(1.20, "lower", 0.25), "")
+        self.assertEqual(ab.verdict(1.30, "lower", 0.25), "REGRESSES")
+        self.assertEqual(ab.verdict(1.06, "lower", 0.05), "REGRESSES")
+
+    def test_a_move_of_exactly_the_bound_is_inside_it(self):
+        self.assertEqual(ab.verdict(1.5, "higher", 0.5), "")
+        self.assertEqual(ab.verdict(0.5, "lower", 0.5), "")
+
+    def test_no_bound_or_no_ratio(self):
+        self.assertEqual(ab.verdict(2.0, "higher", None), "")
+        self.assertEqual(ab.verdict(None, "higher", 0.25), "")
+        self.assertEqual(ab.verdict(float("nan"), "lower", 0.25), "")
+
+
+class SpecsTest(unittest.TestCase):
+    def test_bounds_come_from_end_to_end_metrics_only(self):
+        with tempfile.TemporaryDirectory() as d:
+            with open(os.path.join(d, "BENCHMARK.json"), "w") as fh:
+                json.dump({"end_to_end": [
+                    {"name": "events_per_s", "better": "higher", "bound": 0.25}],
+                    "per_layer": [{"name": "lake.segments", "better": "lower"}]},
+                    fh)
+            self.assertEqual(ab.metric_specs(d), {
+                "events_per_s": ("higher", 0.25),
+                "lake.segments": ("lower", None)})
+
+
+class SummarizeTest(unittest.TestCase):
+    def test_wins_follow_the_metric_direction(self):
+        pairs = [({"a": 1.0, "b": 1.0}, {"a": 2.0, "b": 2.0}),
+                 ({"a": 1.0, "b": 1.0}, {"a": 0.5, "b": 0.5}),
+                 ({"a": 1.0, "b": 1.0}, {"a": 3.0, "b": 3.0})]
+        rows = {r[0]: r for r in ab.summarize(pairs, {"a": "higher",
+                                                       "b": "lower"})}
+        self.assertEqual(rows["a"][3:5], (2, 3))
+        self.assertEqual(rows["b"][3:5], (1, 3))
+        self.assertEqual(rows["a"][1:3], (1.0, 2.0))
+
+
+if __name__ == "__main__":
+    unittest.main()
