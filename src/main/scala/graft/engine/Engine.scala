@@ -42,7 +42,7 @@ final case class ApplyStats(
   */
 final class Engine(val spark: SparkSession, val lakeRoot: String,
     val numBuckets: Int = 64) {
-  import Engine.Layout
+  import Engine.{Layout, Prior}
 
   // The engine NEVER mutates session-global configuration (ADVICE r4: a
   // reader-only session constructing an Engine must not silently lose ANSI
@@ -135,11 +135,6 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       Engine.reduceStep(ords, probe, None))
   }
 
-  /** Inference as a job of its own, for a batch whose parse cannot ride
-    * it (see [[load]]). */
-  private def inferBatch(pass: InferPass): Unit =
-    pass.inferring.write.format("noop").mode("overwrite").save()
-
   def table(t: TableSpec): LakeTable =
     new LakeTable(spark, lakeRoot, t.fullName, numBuckets)
 
@@ -186,21 +181,83 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
 
   // ---------- load (full upsert, index.ts:14-41) ----------
 
+  /** What an apply reads before it touches the batch: the newest registry
+    * version, ONE LakeTable handle and ONE snapshot per prior table (they
+    * serve the layout, the revision probe and the DDL), and the layout the
+    * batch is bucketed under — the prior root table's, or the one a new
+    * root table is created with. */
+  private def readPrior(entity: String): Prior = {
+    val raw = registryLog(entity).latest()
+    val tree = parseRegistry(raw)
+    val tables = tree.toSeq.flatMap(Catalog.fromTree)
+    val known = tables.map { t =>
+      val l = table(t)
+      t.fullName -> (l, l.snapshotOpt())
+    }.toMap
+    val root = tables.find(_.isRoot).flatMap { t =>
+      known(t.fullName) match {
+        case (l, Some(s)) => Some((t, l, s))
+        case _            => None
+      }
+    }
+    val layout = root match {
+      case Some((t, l, s)) =>
+        Layout(l.bucketsOf(s), s.schema(rootKeyOf(t)).dataType)
+      case None => Layout(numBuckets, StringType)
+    }
+    Prior(raw, tree, known, root, layout)
+  }
+
+  /** Last-write-wins per key (BASELINE.json north-star): the max of
+    * (seq, row) aggregation dedups WITHIN the batch (real CDC batches
+    * carry many versions per hot key — dedup here shrinks all downstream
+    * flatten/write work by that factor). An aggregate beats the
+    * row_number window two ways at scale: PARTIAL (map-side) combine
+    * drops duplicate versions before the shuffle — a hot key reduces to
+    * one row per map partition, so no salting is ever needed — and no
+    * window over the whole batch. With a monotone seq (the WAL lsn) the
+    * winner's seq also becomes the row's lake visibility seq, so LWW
+    * holds ACROSS batches even for late/out-of-order deliveries, and
+    * re-applying events is idempotent by content. Equal seqs break on the
+    * kept values, so a retried reduce task picks the same winner.
+    *
+    * `keyed` carries the key `_docid` and the seq `_seq`; `keep` lists
+    * the columns the winner keeps, `_seq` first. Rows without a key
+    * violate the reference's contract (README.md:48) — dropped HERE,
+    * explicitly: letting them through would collapse every keyless event
+    * into one null-key group (silent data loss into a null-ID row). The
+    * aggregate groups by (bucket, key) and its exchange partitions by the
+    * bucket alone, into the partitions a delta write uses: the batch
+    * arrives clustered the way every table's write lays it out. `observe`
+    * adds observations to the bucketed rows, in the exchange's map stage.
+    */
+  private def dedup(keyed: DataFrame, keep: Seq[String], layout: Layout,
+      observe: DataFrame => DataFrame): GraftSqlShims.Exchanged = {
+    val bucketed = keyed.filter(col("_docid").isNotNull)
+      .withColumn(BucketCol, layout.bucketOf(col("_docid")))
+    GraftSqlShims.aggregateOn(observe(bucketed)
+      .groupBy(col(BucketCol), col("_docid"))
+      .agg(max(when(col("_seq").isNotNull, struct(keep.map(col): _*)))
+        .as("_w"))
+      .select(col(BucketCol), col("_w.*")),
+      BucketCol, LakeTable.writeParts(spark, layout.buckets))
+  }
+
   /** Full upsert of a doc batch. `docs` must carry a JSON-string column
     * `docCol`; optional `seqCol` (event sequence) breaks ties when a key
     * appears more than once in the batch — last write wins, replacing the
-    * reference's serial in-order merges (sqlDML.ts:580-605).
+    * reference's serial in-order merges (sqlDML.ts:580-605). With `opCol`,
+    * an event whose op is `delete` is a tombstone for its key.
     *
     * ONE exchange per batch: the last-write-wins dedup shuffles by the
-    * root-key bucket, and everything after it runs in that exchange's
-    * reduce stage — the final aggregate, the incr revision probe, the
-    * schema inference with the speculative parse, and the batch every
-    * table's write reads (persisted for a multi-table catalog). Each
+    * root-key bucket ([[dedup]]), and everything after it runs in that
+    * exchange's reduce stage — the final aggregate, the incr revision
+    * probe, the schema inference with the speculative parse, and the batch
+    * every table's write reads (persisted for a multi-table catalog). Each
     * table's write inherits the partitioning and plans no exchange of its
     * own, unless its layout differs from the batch's ([[mergeParsed]]). */
   def load(entity: String, docs: DataFrame, docCol: String,
       commitTag: String, seqCol: Option[String] = None,
-      deleteIds: Option[DataFrame] = None,
       incremental: Boolean = false,
       opCol: Option[String] = None): ApplyStats = {
 
@@ -209,121 +266,40 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       case None    => docs.withColumn("_seq", monotonically_increasing_id())
     }
 
-    // key (+ revision, only when incr needs it) extraction in ONE
-    // streaming parse per event (json_tuple pulls all candidate fields in
-    // a single Jackson pass; per-field get_json_object calls would parse
-    // every doc once per field — this is the hottest map stage, it runs
-    // on every event BEFORE dedup). The key is the root table's: `id`
-    // before `_id`, as Flattener.rootKey takes it, and json_tuple renders
-    // a scalar the way from_json reads it as text — so a document's key,
-    // its bucket and its tombstone's all agree with its rows' root key.
-    val keyed =
-      if (incremental)
-        seqed
-          .select(col("*"), json_tuple(col(docCol), "id", "_id", "_rev", "rev")
-            .as(Seq("_jid0", "_jid1", "_jrev0", "_jrev1")))
-          .withColumn("_docid", coalesce(col("_jid0"), col("_jid1")))
-          .withColumn("_docrev", coalesce(col("_jrev0"), col("_jrev1")))
-          .drop("_jid0", "_jid1", "_jrev0", "_jrev1")
-      else
-        seqed
-          .select(col("*"), json_tuple(col(docCol), "id", "_id")
-            .as(Seq("_jid0", "_jid1")))
-          .withColumn("_docid", coalesce(col("_jid0"), col("_jid1")))
-          .drop("_jid0", "_jid1")
+    // key + revision extraction in ONE streaming parse per event
+    // (json_tuple pulls all candidate fields in a single Jackson pass;
+    // per-field get_json_object calls would parse every doc once per field
+    // — this is the hottest map stage, it runs on every event BEFORE
+    // dedup). The key is the root table's: `id` before `_id`, as
+    // Flattener.rootKey takes it, and json_tuple renders a scalar the way
+    // from_json reads it as text — so a document's key, its bucket and its
+    // tombstone's all agree with its rows' root key.
+    val keyed = seqed
+      .select(col("*"), json_tuple(col(docCol), "id", "_id", "_rev", "rev")
+        .as(Seq("_jid0", "_jid1", "_jrev0", "_jrev1")))
+      .withColumn("_docid", coalesce(col("_jid0"), col("_jid1")))
+      .withColumn("_docrev", coalesce(col("_jrev0"), col("_jrev1")))
+      .drop("_jid0", "_jid1", "_jrev0", "_jrev1")
 
-    // ONE LakeTable handle and ONE snapshot read per prior table: they
-    // serve the layout, the revision probe and the DDL
-    val priorRaw = registryLog(entity).latest()
-    val prior = parseRegistry(priorRaw)
-    val priorTables = prior.toSeq.flatMap(Catalog.fromTree)
-    val known: Map[String, (LakeTable, Option[Snapshot])] =
-      priorTables.map { t =>
-        val l = table(t)
-        t.fullName -> (l, l.snapshotOpt())
-      }.toMap
-    val priorRoot: Option[(TableSpec, LakeTable, Snapshot)] =
-      priorTables.find(_.isRoot).flatMap { t =>
-        known(t.fullName) match {
-          case (l, Some(s)) => Some((t, l, s))
-          case _            => None
-        }
-      }
-    // the layout the batch is bucketed under: the prior root table's, or
-    // the one a new root table is created with
-    val layout = priorRoot match {
-      case Some((t, l, s)) =>
-        Layout(l.bucketsOf(s), s.schema(rootKeyOf(t)).dataType)
-      case None => Layout(numBuckets, StringType)
-    }
+    val prior = readPrior(entity)
 
-    // deletes: the op's tombstones ride the batch's rows (each keeps its
-    // event seq). Explicit deleteIds under the lsn domain MUST carry a
-    // per-key delete lsn as a second column — guessing one (e.g. the
-    // batch's max doc lsn) silently mis-orders deletes: a delete-only batch
-    // would stamp lsn 0 (never shadowing anything), and a stale delete
-    // would inherit the newest lsn and kill same-batch upserts. The lake's
-    // merge enforces the same contract (LakeTable.merge rejects lsn-domain
-    // deletes without a seq column).
-    val monotoneSeq = seqCol.isDefined
-    val explicitDel: Option[DataFrame] = deleteIds.map { a =>
-      val del = if (monotoneSeq) {
-        require(a.columns.length >= 2,
-          s"deleteIds under a monotone seqCol needs (key, deleteLsn) " +
-            s"columns — got ${a.columns.mkString("(", ",", ")")}; a guessed " +
-            "lsn would silently mis-order deletes against same-key upserts")
-        a.select(col(a.columns(0)).cast("string").as("_docid"),
-          col(a.columns(1)).try_cast("long").as("_seq"))
-      } else
-        a.select(col(a.columns(0)).cast("string").as("_docid"))
-          .withColumn("_seq", lit(null).cast("long"))
-      del.withColumn(BucketCol, layout.bucketOf(col("_docid")))
-    }
-
-    // Last-write-wins per key (BASELINE.json north-star): the max of
-    // (seq, row) aggregation dedups WITHIN the batch (real CDC batches
-    // carry many versions per hot key — dedup here shrinks all downstream
-    // flatten/write work by that factor). An aggregate beats the
-    // row_number window two ways at scale: PARTIAL (map-side) combine
-    // drops duplicate versions before the shuffle — a hot key reduces to
-    // one row per map partition, so no salting is ever needed — and no
-    // window over the whole batch. With a monotone seqCol (the WAL lsn)
-    // the winner's lsn also becomes the row's lake visibility seq, so LWW
-    // holds ACROSS batches even for late/out-of-order deliveries, and
-    // re-applying events is idempotent by content. Equal seqs break on
-    // the kept values, so a retried reduce task picks the same winner.
-    // Events without id/_id violate the reference's contract (README.md:48)
-    // — dropped HERE, explicitly: letting them through would collapse
-    // every keyless event into one null-key group (silent data loss into
-    // a null-ID row).
-    // The aggregate groups by (bucket, key) and its exchange partitions by
-    // the bucket alone, into the partitions a delta write uses: the batch
-    // arrives clustered the way every table's write lays it out.
     // PROJECT BEFORE THE EXCHANGE (r8, guide §2.3): everything downstream
     // of the dedup reads only the doc, the visibility seq, the key (and
-    // op / rev where present).
-    val keepCols: Seq[String] =
+    // op / rev where present)
+    val keep: Seq[String] =
       (Seq("_seq", docCol, "_docid") ++
         (if (incremental) Seq("_docrev") else Nil) ++ opCol.toSeq).distinct
-    val bucketed = keyed.filter(col("_docid").isNotNull)
-      .withColumn(BucketCol, layout.bucketOf(col("_docid")))
     // incr (index.ts:43-72): the revision probe reads the prior root
     // table's rows in the buckets the batch's upserts hash to — collected
     // in the map stage, so only those buckets' segments are listed
-    val probing = priorRoot.filter { case (t, _, s) => incremental &&
+    val probing = prior.root.filter { case (t, _, s) => incremental &&
       t.tablePk == "ID" && s.segments.nonEmpty &&
       s.schema.fieldNames.contains("REV") }
     val isDel = opCol.fold(lit(false))(c => col(c) === "delete")
-    val observed =
-      if (probing.isEmpty) bucketed
-      else bucketed.observe("graft.touched",
-        collect_set(when(!isDel, col(BucketCol))).as("touched"))
-    val exchanged = GraftSqlShims.aggregateOn(observed
-      .groupBy(col(BucketCol), col("_docid"))
-      .agg(max(when(col("_seq").isNotNull, struct(keepCols.map(col): _*)))
-        .as("_w"))
-      .select(col(BucketCol), col("_w.*")),
-      BucketCol, LakeTable.writeParts(spark, layout.buckets))
+    val exchanged = dedup(keyed, keep, prior.layout, rows =>
+      if (probing.isEmpty) rows
+      else rows.observe("graft.touched",
+        collect_set(when(!isDel, col(BucketCol))).as("touched")))
     val probe: Option[RevisionProbe] = probing.flatMap { case (_, lake, s) =>
       val touched = exchanged.observed.get("graft.touched")
         .filter(r => !r.isNullAt(0)).map(_.getSeq[Int](0).toSet)
@@ -331,60 +307,60 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       Option.when(touched.nonEmpty)(lake.revisionProbe(s, "REV", touched))
     }
 
-    val mayDelete = opCol.isDefined || explicitDel.isDefined
+    val mayDelete = opCol.isDefined
 
-    // the speculatively parsed batch, persisted until the merges finish
-    var speculative: Option[Clustered] = None
+    // the batch parsed in the pass that infers its schema, persisted until
+    // the merges finish
+    var speculative: Option[GraftSqlShims.Persisted] = None
     try {
       val pass = new InferPass(entity, exchanged.rows, docCol, opCol, probe)
-      def parse(tree: Attr, rows: DataFrame): DataFrame = rows.select(
+      def parse(tree: Option[Attr], rows: DataFrame): DataFrame = rows.select(
         col("_docid"), col("_seq"),
-        when(!isDel, from_json(col(docCol), readSchemaOf(tree))).as("_gdoc"),
+        tree.fold(lit(null))(t =>
+          when(!isDel, from_json(col(docCol), readSchemaOf(t)))).as("_gdoc"),
         isDel.as("_gdel"), col(BucketCol))
 
-      // 1-2: inference + registry widen (docMetadata/sqlMetadata stages).
-      // SPECULATIVE PARSE: when the prior catalog is multi-table and all
-      // its tables exist, the batch is parsed under the PRIOR registry's
-      // read schema and persisted in the same pass that infers its schema
-      // — one job reads the docs once. A steady-state batch does not widen
-      // the read schema, so the speculation holds; one that does is parsed
-      // again below under the widened one. Otherwise (no prior, a
-      // single-table prior) inference runs first as its own job.
-      val priorSchema = prior.map(readSchemaOf)
-      if (known.size > 1 && known.values.forall(_._2.isDefined))
-        speculative = Some(clusterBatch(parse(prior.get, pass.inferring),
-          Some(layout), explicitDel, persist = true))
-      else inferBatch(pass)
+      // 1-2: inference + registry widen (docMetadata/sqlMetadata stages),
+      // in the one job that fills the persisted batch. SPECULATIVE PARSE:
+      // when the prior catalog is multi-table and all its tables exist,
+      // that job also parses the batch under the PRIOR registry's read
+      // schema — one job reads the docs once. A steady-state batch does
+      // not widen the read schema, so the speculation holds; one that does
+      // is parsed again below under the widened one. Otherwise (no prior,
+      // a single-table prior) the fill leaves `_gdoc` null and the batch
+      // is parsed below.
+      val specTree = prior.tree.filter(_ => prior.known.size > 1 &&
+        prior.known.values.forall(_._2.isDefined))
+      // read before the widen below, which widens the prior tree in place
+      val specSchema = specTree.map(readSchemaOf)
+      speculative = Some(GraftSqlShims.persist(parse(specTree, pass.inferring)))
       val batchTree = pass.tree.value
       val docCount = pass.docs.value.longValue
       val skipped = math.max(0L, pass.skipped.value.longValue)
 
       // == 0 is safe on an accumulator: a retried task can only inflate a
       // genuinely non-zero count
-      if (docCount == 0 && (!mayDelete || prior.isEmpty))
+      if (docCount == 0 && (!mayDelete || prior.tree.isEmpty))
         // nothing to upsert; deletes can only touch existing tables
         return ApplyStats(0, 0, 0, skipped, 0)
 
-      val registry = (prior, docCount) match {
+      val registry = (prior.tree, docCount) match {
         case (Some(t), 0L) => t // delete-only batch: schema unchanged
         case (Some(t), _)  => Infer.mergeInto(t, batchTree)
         case (None, _)     => batchTree
       }
-      if (docCount > 0) saveRegistry(entity, registry, priorRaw)
+      if (docCount > 0) saveRegistry(entity, registry, prior.raw)
       // keep the speculation iff the widened registry reads the docs the
       // same way; the catalog may still change (a number widened to text
       // reads as text either way) — the table frames follow `registry`
-      val kept = speculative.filter(_ => priorSchema.contains(
-        readSchemaOf(registry)))
+      val kept = speculative.filter(_ =>
+        specSchema.contains(readSchemaOf(registry)))
       if (kept.isEmpty) speculative.foreach(_.release())
 
-      // 3-5: DDL + flatten + per-table merges (shared with the bootstrap
-      // fast path)
-      val (nTables, upserted, nDel) = mergeParsed(registry, known,
-        kept.getOrElse(clusterBatch(parse(registry, pass.plain),
-          Some(layout), explicitDel, persist = Catalog.fromTree(registry)
-            .size > 1)),
-        commitTag, mayDelete, monotoneSeq)
+      // 3-5: DDL + flatten + per-table merges (shared with the bootstrap)
+      val (nTables, upserted, nDel) = mergeParsed(registry, prior,
+        kept.getOrElse(shared(parse(Some(registry), pass.plain), registry)),
+        commitTag, mayDelete, monotoneSeq = seqCol.isDefined)
       ApplyStats(upserted + nDel, upserted, nDel, skipped, nTables)
     } finally speculative.foreach(_.release())
   }
@@ -392,40 +368,25 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
   private def readSchemaOf(tree: Attr) =
     Flattener.readSchema(tree.attributes(tree.name))
 
-  /** A batch's upserts and tombstones as one frame: `_docid`, `_seq`, the
-    * `_gdoc` struct, the tombstone marker `_gdel` and, under `layout`, the
-    * bucket column. `release` frees what [[clusterBatch]] persisted. */
-  private final class Clustered(val frame: DataFrame,
-      val layout: Option[Layout], val release: () => Unit)
-
-  /** Build the [[Clustered]] batch from `parsed` (upserts and the op's
-    * tombstones, see [[load]]) and the explicit deletes. `persist` (a
-    * multi-table catalog): the batch is computed once, by one job here,
+  /** The parsed batch every table's write reads: `_docid`, `_seq`, the
+    * `_gdoc` struct, the tombstone marker `_gdel` and the bucket column.
+    * Under a multi-table `registry` it is computed once, by one job here,
     * and kept until the merges finish — the concurrent merge jobs then
     * read it instead of each running the reduce stage again; it keeps
     * reporting the exchange's partitioning, so K tables' explode chains
     * share one parse and one shuffle. A single table's write computes the
-    * batch inline. Explicit deletes are not in the exchange: their union
-    * reports no partitioning, and every write shuffles. */
-  private def clusterBatch(parsed: DataFrame, layout: Option[Layout],
-      explicitDel: Option[DataFrame], persist: Boolean): Clustered = {
-    val batch = explicitDel.fold(parsed)(d => parsed.unionByName(
-      d.select(col("_docid"), col("_seq"),
-        lit(null).cast(parsed.schema("_gdoc").dataType).as("_gdoc"),
-        lit(true).as("_gdel"), col(BucketCol))))
-    if (!persist) new Clustered(batch, layout, () => ())
-    else {
-      val p = GraftSqlShims.persist(batch)
-      new Clustered(p.frame, layout, p.release)
-    }
-  }
+    * batch inline. */
+  private def shared(parsed: DataFrame,
+      registry: Attr): GraftSqlShims.Persisted =
+    if (Catalog.fromTree(registry).size > 1) GraftSqlShims.persist(parsed)
+    else GraftSqlShims.Persisted(parsed, () => ())
 
-  /** Steps 3-5 of an apply, shared by [[load]] and the bootstrap fast
-    * path: DDL (create/evolve each lake table), flatten via explode
-    * chains, then set-oriented bucket-pruned merges over `batch`.
-    * `known`: the handles and snapshots the caller already read. Returns
-    * (tables, root upserts, root deletes), the counts from the root
-    * table's merge lineage.
+  /** Steps 3-5 of an apply, shared by [[load]] and the bootstrap: DDL
+    * (create/evolve each lake table), flatten via explode chains, then
+    * set-oriented bucket-pruned merges over `batch` (released when they
+    * finish). `prior`: the handles, snapshots and layout the caller
+    * read. Returns (tables, root upserts, root deletes), the counts from
+    * the root table's merge lineage.
     *
     * A table whose bucket count and root-key type match the batch's
     * layout takes the batch's bucket column: every table's explode chain
@@ -435,9 +396,8 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     * table is planned once: one handle, one snapshot (the DDL's), one
     * projection per frame.
     */
-  private def mergeParsed(registry: Attr,
-      known: Map[String, (LakeTable, Option[Snapshot])], batch: Clustered,
-      commitTag: String, mayDelete: Boolean,
+  private def mergeParsed(registry: Attr, prior: Prior,
+      batch: GraftSqlShims.Persisted, commitTag: String, mayDelete: Boolean,
       monotoneSeq: Boolean): (Int, Long, Long) = {
     val tables = Catalog.fromTree(registry)
     val rootT = tables.find(_.isRoot).get
@@ -445,7 +405,7 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       // 3-4: DDL — create or evolve each lake table (sqlDDL createTables /
       // alterTables; additive + widening only)
       val lakes: Map[String, (LakeTable, Snapshot)] = tables.map { t =>
-        val (lake, snap) = known.getOrElse(t.fullName, {
+        val (lake, snap) = prior.known.getOrElse(t.fullName, {
           val l = table(t); (l, l.snapshotOpt())
         })
         t.fullName -> (lake, snap match {
@@ -463,10 +423,10 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       // write shuffles
       def passOf(t: TableSpec): Seq[String] = {
         val (lake, snap) = lakes(t.fullName)
-        batch.layout.filter(l => rootT.tablePk == "ID" &&
-          lake.bucketsOf(snap) == l.buckets &&
+        Option.when(rootT.tablePk == "ID" &&
+          lake.bucketsOf(snap) == prior.layout.buckets &&
           snap.schema.find(_.name == rootKeyOf(t))
-            .exists(_.dataType == l.keyType)).map(_ => BucketCol).toSeq
+            .exists(_.dataType == prior.layout.keyType))(BucketCol).toSeq
       }
       val docs = clustered.filter(!col("_gdel"))
       def frameOf(t: TableSpec, pass: Seq[String]): DataFrame = {
@@ -654,8 +614,9 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     * was taken at.
     *
     * FLAT-ATOMIC snapshots (the north rule's case) take a STRUCT-NATIVE
-    * fast path: schema inference is one declarative aggregation (regex
-    * classification replicating the JSON value rules) and the `_gdoc`
+    * fast path: schema inference is declarative aggregates (regex
+    * classification replicating the JSON value rules) observed in the
+    * dedup's map stage, and the `_gdoc`
     * struct is built directly from the typed columns — no
     * `to_json`/`json_tuple`/`from_json` round-trip, which at a 100-TB
     * bootstrap would serialize and re-parse the whole corpus three times
@@ -722,19 +683,21 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
     }
   }
 
-  /** One-pass declarative schema inference over a FLAT ATOMIC relation:
+  /** Declarative schema inference over a FLAT ATOMIC relation:
     * replicates the JSON value rules (JS-numeric / strict-ISO string
     * classification with scalar-conflict widening to string; native
     * numerics → number, booleans → boolean, timestamps → date; maxLength
-    * from string lengths) as a single aggregation — no JSON ever built or
-    * parsed, no driver-side row loop. Returns (tree, rowCount). */
-  private def inferFlatRelation(entity: String, df: DataFrame,
-      idExpr: Column, revStr: String): (Attr, Long) = {
+    * from string lengths) as aggregates over the rows — no JSON ever
+    * built or parsed, no driver-side row loop. Returns the aggregates,
+    * over `schema`'s columns and the key `_docid`, and the function that
+    * turns their values into (tree, rowCount). */
+  private def inferFlatRelation(entity: String, schema: StructType,
+      revStr: String): (Seq[Column], org.apache.spark.sql.Row => (Attr, Long)) = {
     import org.apache.spark.sql.types._
     import graft.schema.DType
     val entries: Seq[(String, Column, DataType)] =
-      ("id", idExpr, StringType) +:
-        df.schema.fields.toSeq.map(f => (f.name, col(f.name), f.dataType))
+      ("id", col("_docid"), StringType) +:
+        schema.fields.toSeq.map(f => (f.name, col(f.name), f.dataType))
     val aggs = scala.collection.mutable.ArrayBuffer[Column](count(lit(1)))
     val slots = scala.collection.mutable.ArrayBuffer[(String, DataType, Int)]()
     entries.foreach { case (n, c, dt) =>
@@ -757,75 +720,83 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
       }
       slots += ((n, dt, at))
     }
-    val row = df.agg(aggs.head, aggs.tail.toSeq: _*).head()
-    val total = row.getLong(0)
-
-    val root = new Attr(entity, DType.Arr)
-    root.maxLength = total // analyzeDocuments: root maxLength = doc count
-    val elem = root.child(entity)
-    if (total == 0) return (root, 0L)
-    elem.dataType = DType.Obj
-    def classify(dt: DataType, at: Int): (DType, Long) = dt match {
-      case StringType =>
-        val nn = row.getLong(at)
-        val nnum = row.getLong(at + 1); val ndate = row.getLong(at + 2)
-        val maxLen =
-          if (row.isNullAt(at + 3)) 0L else row.getInt(at + 3).toLong
-        val classes = Seq(DType.Num -> nnum, DType.Date -> ndate,
-          DType.Str -> (nn - nnum - ndate)).filter(_._2 > 0)
-        val t =
-          if (nn == 0) DType.Unknown
-          else if (classes.length == 1) classes.head._1
-          else DType.Str // scalar conflict widens (docMetadata.ts:79-83)
-        (t, maxLen)
-      case TimestampType | DateType =>
-        val t = if (row.getLong(at) > 0) DType.Date else DType.Unknown
-        (t, if (row.isNullAt(at + 1)) 0L else row.getInt(at + 1).toLong)
-      case BooleanType =>
-        (if (row.getLong(at) > 0) DType.Bool else DType.Unknown, 0L)
-      case _ =>
-        (if (row.getLong(at) > 0) DType.Num else DType.Unknown, 0L)
-    }
-    // child order mirrors the JSON path's key order: id, rev, then the
-    // source columns (insertion order drives catalog column order)
-    val (idT, idLen) = classify(StringType, slots.head._3)
-    val idAttr = elem.child("id")
-    idAttr.dataType = idT; idAttr.maxLength = idLen
-    val revAttr = elem.child("rev")
-    revAttr.dataType =
-      if (Infer.jsNumeric(revStr)) DType.Num
-      else if (Infer.isIso8601(revStr)) DType.Date else DType.Str
-    revAttr.maxLength = revStr.length
-    slots.tail.foreach { case (n, dt, at) =>
-      val (t, len) = classify(dt, at)
-      if (t != DType.Unknown) { // all-null column: no attr, no SQL column
-        val a = elem.child(n)
-        a.dataType = t; a.maxLength = len
+    def tree(row: org.apache.spark.sql.Row): (Attr, Long) = {
+      val total = row.getLong(0)
+      val root = new Attr(entity, DType.Arr)
+      root.maxLength = total // analyzeDocuments: root maxLength = doc count
+      val elem = root.child(entity)
+      if (total == 0) return (root, 0L)
+      elem.dataType = DType.Obj
+      def classify(dt: DataType, at: Int): (DType, Long) = dt match {
+        case StringType =>
+          val nn = row.getLong(at)
+          val nnum = row.getLong(at + 1); val ndate = row.getLong(at + 2)
+          val maxLen =
+            if (row.isNullAt(at + 3)) 0L else row.getInt(at + 3).toLong
+          val classes = Seq(DType.Num -> nnum, DType.Date -> ndate,
+            DType.Str -> (nn - nnum - ndate)).filter(_._2 > 0)
+          val t =
+            if (nn == 0) DType.Unknown
+            else if (classes.length == 1) classes.head._1
+            else DType.Str // scalar conflict widens (docMetadata.ts:79-83)
+          (t, maxLen)
+        case TimestampType | DateType =>
+          val t = if (row.getLong(at) > 0) DType.Date else DType.Unknown
+          (t, if (row.isNullAt(at + 1)) 0L else row.getInt(at + 1).toLong)
+        case BooleanType =>
+          (if (row.getLong(at) > 0) DType.Bool else DType.Unknown, 0L)
+        case _ =>
+          (if (row.getLong(at) > 0) DType.Num else DType.Unknown, 0L)
       }
+      // child order mirrors the JSON path's key order: id, rev, then the
+      // source columns (insertion order drives catalog column order)
+      val (idT, idLen) = classify(StringType, slots.head._3)
+      val idAttr = elem.child("id")
+      idAttr.dataType = idT; idAttr.maxLength = idLen
+      val revAttr = elem.child("rev")
+      revAttr.dataType =
+        if (Infer.jsNumeric(revStr)) DType.Num
+        else if (Infer.isIso8601(revStr)) DType.Date else DType.Str
+      revAttr.maxLength = revStr.length
+      slots.tail.foreach { case (n, dt, at) =>
+        val (t, len) = classify(dt, at)
+        if (t != DType.Unknown) { // all-null column: no attr, no SQL column
+          val a = elem.child(n)
+          a.dataType = t; a.maxLength = len
+        }
+      }
+      (root, total)
     }
-    (root, total)
+    (aggs.toSeq.zipWithIndex.map { case (a, i) => a.as(s"_i$i") }, tree)
   }
 
-  /** The struct-native bootstrap: infer via one aggregation, widen the
-    * registry, then build `_gdoc` directly from the typed columns and run
-    * the shared DDL/flatten/merge tail. Row-count stats assume the
-    * snapshot is key-unique (the max_by dedup still guards violations;
-    * an arbitrary equal-lsn winner would apply). */
+  /** The struct-native bootstrap, through the steps every apply takes:
+    * the prior read, the bucket-keyed dedup (whose map stage also runs
+    * the inference aggregates, as an observation), the registry widen,
+    * then `_gdoc` built directly from the typed columns of the dedup's
+    * rows and the shared DDL/flatten/merge tail — whose single table
+    * writes with no shuffle of its own. Equal-lsn duplicates keep the
+    * greatest row, on every retry. */
   private def bootstrapStruct(entity: String, src: DataFrame,
       keyCols: Seq[String], commitTag: String, lsn: Long): ApplyStats = {
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    val idExpr = concat_ws("|", keyCols.map(col): _*)
     val revStr = lsn.toString
-    val (batchTree, total) = inferFlatRelation(entity, src, idExpr, revStr)
-    if (total == 0) return ApplyStats(0, 0, 0, 0, 0)
-    val priorRaw = registryLog(entity).latest()
-    val registry = parseRegistry(priorRaw) match {
-      case Some(t) => Infer.mergeInto(t, batchTree)
-      case None    => batchTree
-    }
-    saveRegistry(entity, registry, priorRaw)
+    val prior = readPrior(entity)
+    val (inferAggs, treeOf) = inferFlatRelation(entity, src.schema, revStr)
+    val keyed = src
+      .withColumn("_docid", concat_ws("|", keyCols.map(col): _*))
+      .withColumn("_seq", lit(lsn))
+    val exchanged = dedup(keyed, "_seq" +: src.columns.toSeq :+ "_docid",
+      prior.layout,
+      _.observe("graft.infer", inferAggs.head, inferAggs.tail: _*))
+    val inferred = exchanged.observed.get("graft.infer").map(treeOf)
+    // an empty snapshot applies nothing (its plan may drop the observation)
+    if (!inferred.exists(_._2 > 0)) return ApplyStats(0, 0, 0, 0, 0)
+    val batchTree = inferred.get._1
+    val registry = prior.tree.fold(batchTree)(Infer.mergeInto(_, batchTree))
+    saveRegistry(entity, registry, prior.raw)
 
-    val schema = Flattener.readSchema(registry.attributes(registry.name))
+    val schema = readSchemaOf(registry)
     val srcCols = src.columns.toSet
     val gdoc = struct(schema.fields.toSeq.map { f =>
       val atomicTarget = f.dataType match {
@@ -842,23 +813,12 @@ final class Engine(val spark: SparkSession, val lakeRoot: String,
         case _ => lit(null)
       }).try_cast(f.dataType).as(f.name)
     }: _*)
-
-    val keyed = src
-      .withColumn("_docid", idExpr)
-      .withColumn("_seq", lit(lsn))
-    val latest = keyed
-      .filter(col("_docid").isNotNull)
-      .groupBy(col("_docid"))
-      .agg(max_by(struct(keyed.columns.map(col): _*), col("_seq")).as("_w"))
-      .select(col("_w.*"))
-    val parsed = latest
-      .select(col("_docid"), col("_seq"), gdoc.as("_gdoc"),
-        lit(false).as("_gdel"))
-    val (nTables, _, _) = mergeParsed(registry, Map.empty,
-      clusterBatch(parsed, None, None,
-        persist = Catalog.fromTree(registry).size > 1),
-      commitTag, mayDelete = false, monotoneSeq = true)
-    ApplyStats(total, total, 0, 0, nTables)
+    val parsed = exchanged.rows.select(col("_docid"), col("_seq"),
+      gdoc.as("_gdoc"), lit(false).as("_gdel"), col(BucketCol))
+    val (nTables, upserted, _) = mergeParsed(registry, prior,
+      shared(parsed, registry), commitTag, mayDelete = false,
+      monotoneSeq = true)
+    ApplyStats(upserted, upserted, 0, 0, nTables)
   }
 
   /** Register every table of an entity as a session temp view (MoR-
@@ -1086,6 +1046,13 @@ object Engine {
     def bucketOf(docId: Column): Column =
       LakeTable.bucketOf(docId.try_cast(keyType), buckets)
   }
+
+  /** What `Engine.readPrior` read: the newest registry version (raw and
+    * parsed), each prior table's handle and snapshot by name, the prior
+    * root table with its snapshot, and the batch's layout. */
+  private final case class Prior(raw: Option[(Int, String)],
+      tree: Option[Attr], known: Map[String, (LakeTable, Option[Snapshot])],
+      root: Option[(TableSpec, LakeTable, Snapshot)], layout: Layout)
 
   /** Ordinals of a batch row's document, op (-1 without one), key,
     * revision (-1 outside incr) and bucket columns. */

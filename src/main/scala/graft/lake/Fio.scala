@@ -278,7 +278,8 @@ final class Fio(conf: Configuration) extends Serializable {
     * immutable part file per call under `<name>.parts/` — millis+uuid
     * names keep parts collision-free and time-ordered; [[readLog]]
     * reassembles base + parts. The probe result is remembered per scheme
-    * so only the first append on such a store pays the thrown probe. */
+    * so only the first append on such a store pays the thrown probe; a
+    * call that creates the base file probes nothing. */
   def append(p: HPath, s: String): Unit = {
     val fs = fsOf(p)
     localFile(fs, p) match {
@@ -293,12 +294,12 @@ final class Fio(conf: Configuration) extends Serializable {
         val canAppend = Fio.appendable.get(scheme)
         if (canAppend == java.lang.Boolean.FALSE) appendRotating(fs, p, s)
         else try {
-          val out =
-            if (fs.exists(p)) fs.append(p)
-            else fs.create(p, false)
+          val appending = fs.exists(p)
+          val out = if (appending) fs.append(p) else fs.create(p, false)
           try out.write(s.getBytes(StandardCharsets.UTF_8))
           finally out.close()
-          Fio.appendable.put(scheme, java.lang.Boolean.TRUE)
+          // creating the base proves nothing about append support
+          if (appending) Fio.appendable.put(scheme, java.lang.Boolean.TRUE)
         } catch {
           case _: UnsupportedOperationException =>
             Fio.appendable.put(scheme, java.lang.Boolean.FALSE)

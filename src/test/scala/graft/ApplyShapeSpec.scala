@@ -21,9 +21,10 @@ import graft.lake.LakeTable
 /** Job shape of one apply: the dedup's exchange partitions the batch by
   * root-key bucket, the batch's one shuffle, and every table's delta write
   * inherits that partitioning (no exchange of its own, still one file per
-  * bucket dir, same rows and layout as tables merged one by one); a table
-  * whose layout differs from the root's falls back to its own shuffle; the
-  * incr revision probe reads the touched buckets' root files once; a
+  * bucket dir, same rows and layout as tables merged one by one), the
+  * struct bootstrap's included; a table whose layout differs from the
+  * root's falls back to its own shuffle; the incr revision probe reads
+  * the touched buckets' root files once; a
   * steady-state batch infers its schema inside the reduce stage, and a
   * batch that widens the schema lands as a single-batch apply would. */
 class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
@@ -171,6 +172,43 @@ class ApplyShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rootRows.count() == 40) // 50 inserted, 10 deleted
     assert(rootRows.filter(col("ID") === "k-3").head()
       .getAs[String]("REV") == "2")
+  }
+
+  test("struct bootstrap: the dedup's exchange is its one shuffle, its " +
+      "table's write plans none, and equal-lsn duplicates keep one winner") {
+    // 200 rows over 4 partitions, keys (repo, path) repeating every 150
+    // rows: 50 keys carry two rows at the bootstrap's one lsn
+    def snapshot(ascending: Boolean) = (if (ascending)
+      spark.range(0, 200, 1, 4) else spark.range(199, -1, -1, 4))
+      .select(concat(lit("r"), col("id") % 150).as("repo"),
+        lit("p").as("path"), concat(lit("body-"), col("id")).as("content"))
+    def bootstrapped(ascending: Boolean): (Engine, String, Shape,
+        Seq[(String, Int)]) = {
+      val root = SparkTestSession.tmpDir("graft-boot-shape-")
+      val e = new Engine(spark, root, numBuckets = 8)
+      var writes: Seq[(String, Int)] = Nil
+      var st: graft.engine.ApplyStats = null
+      val shape = jobsOf { writes = writeExchanges {
+        st = e.bootstrap("ent", snapshot(ascending), Seq("repo", "path"), "boot")
+      } }
+      assert(st.dedupedDocs == 150 && st.tables == 1, st)
+      (e, root, shape, writes)
+    }
+    val (e, root, shape, writes) = bootstrapped(true)
+    assert(shape.shuffleStages == 1, shape)
+    val t = tablesOf(e, "ent").head
+    val mine = writes.filter(_._1.contains(s"/${t.fullName}/data/"))
+    assert(mine.map(_._2) == Seq(0), mine)
+    newSegmentFiles(root, t, e.table(t)).foreach { case (b, files) =>
+      assert(files.size == 1, s"bucket $b: $files")
+    }
+    // the winner of a tie on the lsn does not depend on input order
+    def rows(e: Engine) = sortedRows(e.table(t).read().select("ID", "CONTENT"))
+    val (again, _, _, _) = bootstrapped(false)
+    assert(rows(e).size == 150 && rows(e) == rows(again))
+    // an empty snapshot applies nothing
+    assert(e.bootstrap("ent", snapshot(true).limit(0), Seq("repo", "path"),
+      "boot:empty") == graft.engine.ApplyStats(0, 0, 0, 0, 0))
   }
 
   test("partial rebucket: a child whose bucket count differs from the " +

@@ -29,7 +29,8 @@ measures the window count, not the change. The count of mixed pairs and
 their pair numbers are printed under the table.
 
 --out appends every run's result line (with side, seed and pair) to a
-JSON-lines file. The exit code is 1 when any run failed its checks.
+JSON-lines file. The exit code is 1 when any run failed its checks,
+else 2 when any metric's verdict is REGRESSES, else 0.
 """
 import argparse
 import json
@@ -61,6 +62,14 @@ def verdict(ratio, better, bound):
     if gain < -bound:
         return "REGRESSES"
     return ""
+
+
+def exit_code(failed, verdicts):
+    """1 when any run failed, else 2 when any verdict is REGRESSES,
+    else 0."""
+    if failed:
+        return 1
+    return 2 if "REGRESSES" in verdicts else 0
 
 
 def run_once(checkout, workload, seed, seconds, trace):
@@ -163,21 +172,23 @@ def main():
     print(f"{'metric':34} {'parent':>12} {'change':>12} {'delta':>8} "
           f"{'wins':>6} {'IQR':>10} {'IQR/med':>8} {'bound':>6} "
           f"{'ratio':>7} verdict")
+    verdicts = []
     for name, pm, cm, wins, n, iqr in summarize(pairs, better):
         delta = (cm - pm) / pm * 100 if pm else float("nan")
         rel = iqr / pm if pm else float("nan")
         ratio = cm / pm if pm else None
         way, bound = specs.get(name, ("lower", None))
+        verdicts.append(verdict(ratio, way, bound))
         print(f"{name:34} {pm:12.4g} {cm:12.4g} {delta:+7.1f}% "
               f"{wins:>3}/{n:<2} {iqr:10.4g} {rel:8.3f} "
               f"{'' if bound is None else f'{bound:g}':>6} "
               f"{'' if ratio is None else f'{ratio:.3f}':>7} "
-              f"{verdict(ratio, way, bound)}")
+              f"{verdicts[-1]}")
     print(f"mixed pairs (the sides measured different window counts): "
           f"{len(mixed)}/{len(pairs)}")
     for pair, seed, p, c in mixed:
         print(f"  pair {pair} seed {seed}: parent {p}, change {c}")
-    return 1 if failed else 0
+    return exit_code(failed, verdicts)
 
 
 if __name__ == "__main__":

@@ -3,6 +3,7 @@
 
     python3 tools/test_ab.py
 """
+import contextlib
 import json
 import os
 import sys
@@ -62,6 +63,48 @@ class SummarizeTest(unittest.TestCase):
         self.assertEqual(rows["a"][3:5], (2, 3))
         self.assertEqual(rows["b"][3:5], (1, 3))
         self.assertEqual(rows["a"][1:3], (1.0, 2.0))
+
+
+class ExitCodeTest(unittest.TestCase):
+    """main()'s exit code over stubbed runs: 2 on a regression, 1 on a
+    failed run (whatever the verdicts), 0 otherwise."""
+
+    def run_main(self, change_events, fail_seed=None):
+        def fake_run_once(checkout, workload, seed, seconds, trace):
+            if seed == fail_seed:
+                return None, 1
+            value = change_events if checkout.endswith("change") else 100.0
+            return {"correct": True, "failed": 0, "detail": {},
+                    "metrics": {"events_per_s": {"value": value}}}, 0
+        with tempfile.TemporaryDirectory() as d:
+            for side in ("parent", "change"):
+                os.mkdir(os.path.join(d, side))
+                with open(os.path.join(d, side, "BENCHMARK.json"), "w") as fh:
+                    json.dump({"end_to_end": [{"name": "events_per_s",
+                                               "better": "higher",
+                                               "bound": 0.25}]}, fh)
+            argv = ["ab.py", "--parent", os.path.join(d, "parent"),
+                    "--change", os.path.join(d, "change"),
+                    "--workload", "w", "--pairs", "3"]
+            saved = (sys.argv, ab.run_once)
+            sys.argv, ab.run_once = argv, fake_run_once
+            try:
+                with open(os.devnull, "w") as null, \
+                        contextlib.redirect_stdout(null), \
+                        contextlib.redirect_stderr(null):
+                    return ab.main()
+            finally:
+                sys.argv, ab.run_once = saved
+
+    def test_no_regression_exits_0(self):
+        self.assertEqual(self.run_main(change_events=110.0), 0)
+
+    def test_a_regressing_metric_exits_2(self):
+        self.assertEqual(self.run_main(change_events=50.0), 2)
+
+    def test_a_failed_run_exits_1_even_with_a_regression(self):
+        self.assertEqual(self.run_main(change_events=110.0, fail_seed=2), 1)
+        self.assertEqual(self.run_main(change_events=50.0, fail_seed=2), 1)
 
 
 if __name__ == "__main__":
